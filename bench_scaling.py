@@ -133,10 +133,7 @@ def worker(cores: int) -> None:
         .repartition(2 * cores)
     n_rows = files.count()
 
-    # default "0" = bench the SHIPPED default config (PipelineConfig
-    # defaults concurrent_stages=False); "1" is the explicit A/B opt-in
-    cfg = PipelineConfig(
-        concurrent_stages=os.environ.get("SCALING_CONCURRENT", "0") == "1")
+    cfg = PipelineConfig()
 
     def run_once():
         result = run_pipeline(spark, files, cfg)

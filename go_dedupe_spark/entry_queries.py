@@ -25,12 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from go_dedupe_spark.functions.hashing import minhash_band_keys
 from go_dedupe_spark.functions.similarity import (
     jaro_winkler_udf,
+    set_jaccard,
     token_shingles,
     word_tokens,
 )
+from go_dedupe_spark.operators.blocking import SHA_PREFIX_LEN, make_blocks
 
 # ---------------------------------------------------------------- registry
 
@@ -60,11 +61,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (a) round-robin pays a local sort of every row before the
         # exchange (spark.sql.execution.sortBeforeRepartition, guide
         # §2.5); hash does not; (b) HashPartitioning(id) satisfies the
-        # ClusteredDistribution of every downstream per-id aggregation
-        # and window (simhash vote groupBy(id, n), IVF assignment
-        # Window.partitionBy(item_id)), removing those exchanges
-        # outright. Ids are unique, so the spread is binomial-uniform —
-        # no skew possible.
+        # ClusteredDistribution of two downstream per-id operators —
+        # the simhash vote groupBy(id, n) and the IVF assignment
+        # Window.partitionBy(item_id) — removing those two exchanges.
+        # Other queries re-key on other columns and gain only (a). Ids
+        # are unique, so the spread is binomial-uniform — no skew
+        # possible.
         key = "doc_id" if name == "documents" else "vec_id"
         df = df.repartition(spark.sparkContext.defaultParallelism, key)
     return df
@@ -74,7 +76,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 ER_NH, ER_R = 8, 4          # unigram-token MinHash: 2 bands x 4 rows
 CMH_NH, CMH_R = 9, 3        # 3-token-shingle MinHash: 3 bands x 3 rows
-SHA_PREFIX = 12
 ER_W_JW, ER_W_JAC = 0.3, 0.7
 ER_THRESHOLD = 0.31
 # Broadcast the per-record scoring sides of the pair joins only while
@@ -140,7 +141,7 @@ def _blocks_cte() -> str:
     mh_bands = ER_NH // ER_R
     cmh_bands = CMH_NH // CMH_R
     selects = [
-        f"SELECT id, 'sha:' || lang || ':' || substr(content_sha256, 1, {SHA_PREFIX}) "
+        f"SELECT id, 'sha:' || lang || ':' || substr(content_sha256, 1, {SHA_PREFIX_LEN}) "
         f"AS block_key, 'sha' AS block_kind FROM sig"
     ]
     # mh bands guard on n_toks > 0 (mirrors minhash_band_keys' empty-
@@ -217,29 +218,11 @@ def _doc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_blocks(records: DataFrame) -> DataFrame:
-    sha_key = F.concat(F.lit("sha:"), F.col("lang"), F.lit(":"),
-                       F.substring("content_sha256", 1, SHA_PREFIX))
-    mh = minhash_band_keys(F.col("toks"), num_hashes=ER_NH, band_rows=ER_R,
-                           prefix="mh")
-    cmh = minhash_band_keys(F.col("shingles"), num_hashes=CMH_NH,
-                            band_rows=CMH_R, prefix="cmh")
-    lang_scoped = lambda arr: F.transform(  # noqa: E731
-        arr, lambda k: F.concat(F.col("lang"), F.lit(":"), k)
-    )
-    kinds = F.concat(
-        F.array(F.struct(sha_key.alias("block_key"), F.lit("sha").alias("block_kind"))),
-        F.transform(lang_scoped(mh),
-                    lambda k: F.struct(k.alias("block_key"),
-                                       F.lit("mh").alias("block_kind"))),
-        F.transform(lang_scoped(cmh),
-                    lambda k: F.struct(k.alias("block_key"),
-                                       F.lit("cmh").alias("block_kind"))),
-    )
-    return (
-        records.select("id", F.explode(kinds).alias("k"))
-        .select("id", "k.block_key", "k.block_kind")
+    bands = [("mh", F.col("toks"), ER_NH, ER_R),
+             ("cmh", F.col("shingles"), CMH_NH, CMH_R)]
+    # the dedup is the oracle's SELECT DISTINCT
+    return make_blocks(records, bands) \
         .dropDuplicates(["id", "block_key", "block_kind"])
-    )
 
 
 def _doc_pairs(blocks: DataFrame) -> DataFrame:
@@ -270,12 +253,9 @@ def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = _doc_blocks(records).localCheckpoint(eager=True)
     pairs = _doc_pairs(blocks)
     # Per-RECORD distinct shingles + size, computed once before the
-    # pair joins (r7): the per-pair Jaccard previously ran FOUR array
-    # passes per pair (2x array_distinct + intersect + union); with the
-    # distinct array and its size precomputed on the 1-row-per-record
-    # side it is ONE array_intersect plus arithmetic — |A∪B| =
-    # |A|+|B|-|A∩B| on distinct sets, value-identical to the oracle's
-    # len(list_distinct(list_concat(..))).
+    # pair joins (r7), so the per-pair Jaccard is set_jaccard's single
+    # array_intersect — value-identical to the oracle's
+    # len(list_distinct(list_concat(..))) union.
     slim = records.select(
         "id", "path", F.array_distinct("shingles").alias("sh_d"),
     ).withColumn("n_d", F.size("sh_d"))
@@ -293,9 +273,7 @@ def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("id_b"), F.col("path").alias("path_b"),
         F.col("sh_d").alias("sh_b"), F.col("n_d").alias("n_b")))
     jw = jaro_winkler_udf(F.col("path_a"), F.col("path_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    jac = inter * F.lit(1.0) / union
+    jac = set_jaccard("sh_a", "sh_b", "n_a", "n_b")
     # r7: no explicit pair repartition — candidate_pairs ends in a
     # dropDuplicates exchange on (id_a, id_b) and AQE's coalescer
     # (parallelismFirst, 1 MB min partition) keeps the UDF+array stage
@@ -1080,7 +1058,7 @@ def text_langid(spark, sf_dir):
 @query("text_fingerprint", """
 WITH t AS (SELECT doc_id,
   list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '') AS toks
-  FROM documents),
+  FROM documents WHERE text IS NOT NULL),
 s AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')]
     ELSE list_transform(range(1, len(toks) - 2),
                         i -> array_to_string(toks[i:i+3], ' ')) END AS sh

@@ -28,7 +28,7 @@ from go_dedupe_spark.functions.similarity import (  # noqa: F401
     char_ngrams,
     hashed_ngram_vector_udf,
     jaro_winkler_udf,
-    token_jaccard_expr,
+    set_jaccard,
     token_shingles,
     word_tokens,
 )

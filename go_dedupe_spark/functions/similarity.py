@@ -6,8 +6,7 @@ Per north_star this engine replaces that with three local, deterministic,
 vectorized scorers:
 
 - Jaro-Winkler on paths           (pandas UDF, Arrow-batched numpy/python)
-- token-shingle Jaccard on content (native Columns where possible,
-                                    pandas UDF for the batched pair path)
+- token-shingle Jaccard on content (native Columns)
 - cosine over hashed n-gram vectors (pandas UDF, numpy batched —
                                     HashingTF-style, no model service)
 
@@ -238,12 +237,14 @@ def token_shingles(tokens: Column, n: int = 3, sep: str = " ") -> Column:
     return F.when(F.size(tokens) < n, joined_all).otherwise(shingled)
 
 
-def token_jaccard_expr(a: str, b: str) -> Column:
-    """Native-Column Jaccard over two array columns (exact, no UDF):
-    |distinct intersection| / |distinct union|. Division of exact ints
-    is bit-identical across engines — oracle-safe."""
+def set_jaccard(a: str, b: str, n_a: str, n_b: str) -> Column:
+    """Native-Column Jaccard of two DISTINCT array columns ``a``/``b``
+    whose sizes are ``n_a``/``n_b``: one array_intersect per pair, and
+    |A∪B| = |A|+|B|-|A∩B| (exact on distinct sets) instead of a union
+    array. Two empty sets score 0.0. Division of exact ints is
+    bit-identical across engines — oracle-safe."""
     inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
+    union = F.col(n_a) + F.col(n_b) - inter
     return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
 
 

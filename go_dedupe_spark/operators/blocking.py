@@ -4,101 +4,72 @@ Ancestor: the geohash blocking key (precision 5 ~ 2.4 km cells,
 location/location.go:14-15, 67-77; README.md:34-45 explains it as THE
 core optimization — only same-block pairs are ever compared).
 
-This engine blocks on THREE key families (north_star):
-- ``sha``  — lang + sha256(content) 12-hex prefix: exact-duplicate fast
-             path. Any two byte-identical contents land in one block.
-- ``mh``   — MinHash-band keys over path tokens (b bands x r rows):
-             near-duplicate recall on renamed/moved files. A record
-             explodes into one row per band — the multi-key
-             generalization README.md:44-45 foreshadows with
-             variable-precision geohashes.
-- ``cmh``  — MinHash-band keys over content word-shingles: catches
-             near-dup content under heavy path divergence.
+Every record gets one ``sha`` key — lang + sha256(content) 12-hex
+prefix, the exact-duplicate fast path: any two byte-identical contents
+land in one block. On top of it, each *band* spec adds MinHash-band
+keys over one token column, lang-scoped so unrelated languages never
+pair. A record explodes into one row per band key — the multi-key
+generalization README.md:44-45 foreshadows with variable-precision
+geohashes. The library pipeline bands path tokens (``mh``, recall on
+renamed/moved files) and content words (``cmh``, near-dup content
+under heavy path divergence); the entry queries band content words and
+3-word shingles.
 
-Output: blocks(block_key string, block_kind string, id string).
+Output: blocks(id string, block_key string, block_kind string).
 Everything is built-in Columns (md5/sha2/transform/array) — no UDFs,
 full whole-stage codegen; the explode is Catalyst's generator node.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.hashing import minhash_band_keys
-from go_dedupe_spark.functions.similarity import word_tokens
 
 SHA_PREFIX_LEN = 12
 
+# (prefix, token Column, num_hashes, band_rows) — the prefix doubles as
+# the rows' block_kind
+Band = tuple[str, Column, int, int]
 
-def make_blocks(
-    records: DataFrame,
-    num_hashes: int = 12,
-    band_rows: int = 3,
-    content_num_hashes: int = 9,
-    content_band_rows: int = 3,
-    use_path_bands: bool = True,
-    use_content_bands: bool = True,
-) -> DataFrame:
-    """records -> blocks(block_key, block_kind, id), exploded."""
-    if use_content_bands:
-        # materialize content tokens once (inline exprs re-evaluate per
-        # signature permutation)
-        records = records.withColumn(
-            "_content_toks", word_tokens(F.col("content"))
-        )
+
+def _lang_scoped(kind: str):
+    # a closure factory, not ``lambda k, kind=kind``: transform() reads
+    # the lambda's arity and would pass the array index as ``kind``
+    return lambda k: F.struct(
+        F.concat(F.col("lang"), F.lit(":"), k).alias("block_key"),
+        F.lit(kind).alias("block_kind"),
+    )
+
+
+def make_blocks(records: DataFrame, bands: Sequence[Band]) -> DataFrame:
+    """records(id, lang, content_sha256, ...) -> blocks(id, block_key,
+    block_kind), exploded: the sha key plus every band's keys."""
+    # materialize each band's tokens as a column first: an inline token
+    # expression would re-evaluate once per signature permutation
+    toks = records.select(
+        "id", "lang", "content_sha256",
+        *[t.alias(f"_toks{i}") for i, (_, t, _, _) in enumerate(bands)],
+    )
     sha_key = F.concat(
         F.lit("sha:"), F.col("lang"), F.lit(":"),
         F.substring(F.col("content_sha256"), 1, SHA_PREFIX_LEN),
     )
-    keys = [F.struct(sha_key.alias("block_key"), F.lit("sha").alias("block_kind"))]
-
-    arrays = [F.array(*keys)]
-    if use_path_bands:
-        path_keys = minhash_band_keys(
-            F.col("path_tokens"), num_hashes=num_hashes, band_rows=band_rows,
-            prefix="mh",
-        )
-        # scope path bands by lang so unrelated languages never pair
-        arrays.append(
-            F.transform(
-                path_keys,
-                lambda k: F.struct(
-                    F.concat(F.col("lang"), F.lit(":"), k).alias("block_key"),
-                    F.lit("mh").alias("block_kind"),
-                ),
-            )
-        )
-    if use_content_bands:
-        content_keys = minhash_band_keys(
-            F.col("_content_toks"),
-            num_hashes=content_num_hashes, band_rows=content_band_rows,
-            prefix="cmh",
-        )
-        arrays.append(
-            F.transform(
-                content_keys,
-                lambda k: F.struct(
-                    F.concat(F.col("lang"), F.lit(":"), k).alias("block_key"),
-                    F.lit("cmh").alias("block_kind"),
-                ),
-            )
-        )
-
-    all_keys = arrays[0]
-    for a in arrays[1:]:
-        all_keys = F.concat(all_keys, a)
-
-    # no dropDuplicates: every key family embeds a distinct prefix
-    # (sha: / mh:{band}: / cmh:{band}:), so one record cannot emit the
-    # same block_key twice — a dedup here would be a full no-op shuffle
+    keys = [F.array(F.struct(sha_key.alias("block_key"),
+                             F.lit("sha").alias("block_kind")))]
+    for i, (prefix, _, num_hashes, band_rows) in enumerate(bands):
+        band_keys = minhash_band_keys(F.col(f"_toks{i}"), num_hashes=num_hashes,
+                                      band_rows=band_rows, prefix=prefix)
+        keys.append(F.transform(band_keys, _lang_scoped(prefix)))
+    # no dropDuplicates: every key embeds its family and band number
+    # (sha: / {prefix}:{band}:), so one record cannot emit the same
+    # block_key twice — a dedup here would be a full no-op shuffle
     return (
-        records.select(F.col("id"), F.explode(all_keys).alias("k"))
-        .select(
-            F.col("k.block_key").alias("block_key"),
-            F.col("k.block_kind").alias("block_kind"),
-            "id",
-        )
+        toks.select("id", F.explode(F.concat(*keys)).alias("k"))
+        .select("id", "k.block_key", "k.block_kind")
     )
 
 

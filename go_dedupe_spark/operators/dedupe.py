@@ -21,7 +21,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.hashing import minhash_band_keys, token_hash64
-from go_dedupe_spark.functions.similarity import char_ngrams, word_tokens
+from go_dedupe_spark.functions.similarity import (
+    char_ngrams,
+    set_jaccard,
+    word_tokens,
+)
 
 
 # ------------------------------------------------------------------ exact
@@ -64,7 +68,10 @@ def minhash_lsh_pairs(
     a downtown geohash) would emit n(n-1)/2 pairs; buckets larger than
     ``max_block`` are md5-salted into sub-blocks of ~``salt_cap``
     members (operators/pairs.salted_rekey), bounding the candidate set
-    at the documented cost of cross-sub-block recall."""
+    at the documented cost of cross-sub-block recall.
+
+    Building the DataFrame runs one eager job: the salted keyed table
+    is localCheckpointed (or handed to ``checkpoint_fn``)."""
     from go_dedupe_spark.operators.pairs import salted_rekey
 
     toked = df.select(
@@ -179,7 +186,9 @@ def simhash_hamming_pairs(
        salt-capped like every other block in this engine.
     4. Verify: popcount(xor) <= max_hamming, native bit_count.
 
-    Returns (id_a, id_b, hamming)."""
+    Returns (id_a, id_b, hamming). Building the DataFrame runs one
+    eager job: the banded simhash table is localCheckpointed (or handed
+    to ``checkpoint_fn``)."""
     from go_dedupe_spark.operators.pairs import salted_rekey
 
     width = bits // bands
@@ -231,35 +240,30 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 5,
     threshold: float = 0.5,
-    hash_grams: bool = True,
     checkpoint_fn=None,
 ) -> DataFrame:
     """Exact char-n-gram Jaccard on candidate pairs (distinct grams).
-    candidate_pairs: (id_a, id_b). Native array_intersect/union.
+    candidate_pairs: (id_a, id_b). Returns (id_a, id_b, jaccard) with
+    jaccard >= ``threshold``. Building the DataFrame runs one eager
+    job: the per-doc gram table is localCheckpointed (or handed to
+    ``checkpoint_fn``).
 
-    With ``hash_grams`` (default) every gram is md5-prefix-hashed to a
-    60-bit long BEFORE the pair join, so the per-pair shuffle carries
-    8-byte ints instead of full n-char strings — a doc appearing in p
-    candidate pairs ships its gram set p times, and at n=5 the hashed
-    array is ~5x smaller wire weight (~10x on longer grams). Jaccard on
-    hashed sets equals Jaccard on string sets up to 60-bit collisions
-    (~1e-14 per gram pair; differential-tested identical on the fixture
-    corpus). The hash is DuckDB-reproducible:
-    ``('0x' || substr(md5(g), 1, 15))::BIGINT``. Set ``hash_grams=
-    False`` for the exact string-set path."""
-    raw = char_ngrams(text_col, n)
-    gram_expr = (
-        F.array_distinct(F.transform(raw, token_hash64))
-        if hash_grams else F.array_distinct(raw)
-    )
+    Every gram is md5-prefix-hashed to a 60-bit long BEFORE the pair
+    join, so the per-pair shuffle carries 8-byte ints instead of full
+    n-char strings — a doc appearing in p candidate pairs ships its
+    gram set p times, and at n=5 the hashed array is ~5x smaller wire
+    weight (~10x on longer grams). Jaccard on hashed sets equals
+    Jaccard on string sets up to 60-bit collisions (~1e-14 per gram
+    pair; tested against Python string-gram sets). The hash is
+    DuckDB-reproducible: ``('0x' || substr(md5(g), 1, 15))::BIGINT``."""
+    gram_expr = F.array_distinct(F.transform(char_ngrams(text_col, n),
+                                             token_hash64))
     # Materialize the gram table once (r7, guide §2.4): it feeds BOTH
     # join sides, and each side's exchange/broadcast build would
     # otherwise re-run the n-gram md5 hashing over the full corpus
     # (~n_chars md5 calls per doc). Same distributed-materialization
-    # policy as scoring.build_features. The per-doc distinct gram COUNT
-    # is computed here too, so the per-pair union can be the identity
-    # |A∪B| = |A|+|B|-|A∩B| instead of materializing a union array per
-    # pair (both gram arrays are distinct, so the identity is exact).
+    # policy as scoring.build_features. The per-doc distinct gram count
+    # is stored next to the grams for set_jaccard.
     if checkpoint_fn is None:
         def checkpoint_fn(d: DataFrame) -> DataFrame:
             return d.localCheckpoint(eager=True)
@@ -275,9 +279,7 @@ def ngram_jaccard_pairs(
                      F.col("n_grams").alias("n_a"))
     b = grams.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"),
                      F.col("n_grams").alias("n_b"))
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    jac = F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
+    jac = set_jaccard("grams_a", "grams_b", "n_a", "n_b")
     # explicit repartition on BOTH pair ids before the CPU-heavy array
     # ops, KEPT after an r7 removal attempt: a pair row here is two
     # bare ids (~16 B) while its jaccard costs ~2x n_grams array-hash

@@ -43,7 +43,7 @@ from go_dedupe_spark.functions.similarity import (
     hashed_ngram_vector_udf,
     jaro_winkler_udf,
     path_vec_scores_udf,
-    token_jaccard_expr,
+    set_jaccard,
     token_shingles,
     word_tokens,
 )
@@ -67,8 +67,8 @@ def _shingle_hash32(shingles):
 
 def build_features(records: DataFrame, with_cosine: bool = True) -> DataFrame:
     """Per-record scoring features, computed ONCE: (id, path,
-    content_sha256, toks [int32 shingle hashes], ngram_vec [float32,
-    normalized]).
+    content_sha256, toks [distinct int32 shingle hashes], n_toks [their
+    count], ngram_vec [float32, normalized]).
 
     Checkpoint this (plans.pipeline does) — the per-record vector UDF is
     the single most expensive map in the pipeline, and without
@@ -81,10 +81,13 @@ def build_features(records: DataFrame, with_cosine: bool = True) -> DataFrame:
     ).select(
         "id", "path", "content_sha256", "content",
         token_shingles(F.col("_toks"), n=SHINGLE_N).alias("_shingles"),
+    ).select(
+        "id", "path", "content_sha256", "content",
+        F.array_distinct(_shingle_hash32(F.col("_shingles"))).alias("toks"),
     )
     return base.select(
-        "id", "path", "content_sha256",
-        _shingle_hash32(F.col("_shingles")).alias("toks"),
+        "id", "path", "content_sha256", "toks",
+        F.size("toks").alias("n_toks"),
         (hashed_ngram_vector_udf(F.col("content")) if with_cosine
          else F.lit(None).cast("array<float>")).alias("ngram_vec"),
     )
@@ -96,7 +99,6 @@ def score_pairs(
     threshold: float = DEFAULT_THRESHOLD,
     with_cosine: bool = True,
     jac_floor: float = JAC_FLOOR,
-    broadcast_records: bool | None = None,
     features: DataFrame | None = None,
 ) -> DataFrame:
     """-> scores(id_a, id_b, block_key, jw_path, jaccard_content,
@@ -107,27 +109,26 @@ def score_pairs(
     'jaccard_floor'; phase-2 rows carry full features and decided_by
     'exact' (byte-identical content) or 'full'.
 
-    ``broadcast_records``: broadcast the feature sides of the joins.
-    Default False — measured slower than the shuffle join even when it
-    fits, and impossible at corpus scale (there, bucket records+pairs
-    on id to co-locate instead)."""
+    The feature sides join by shuffle, not broadcast: a broadcast was
+    measured slower even where it fits, and cannot fit at corpus scale
+    (there, bucket records+pairs on id to co-locate instead)."""
     if features is None:
         # not checkpointed by the caller -> cut the plan here so the
         # vector UDF evaluates once, not once per join side
         features = build_features(records, with_cosine).localCheckpoint(eager=True)
-    slim = features.select("id", "toks")
-
-    hint = F.broadcast if broadcast_records else (lambda df: df)
     par = pairs.sparkSession.sparkContext.defaultParallelism
 
     # ---------------- phase 1: compact Jaccard + floor decision
-    a1 = hint(slim.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a")))
-    b1 = hint(slim.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b")))
+    a1 = features.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"),
+                         F.col("n_toks").alias("n_a"))
+    b1 = features.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"),
+                         F.col("n_toks").alias("n_b"))
     p1 = (
         pairs.repartition(par * 2, "id_a", "id_b")
         .join(a1, "id_a").join(b1, "id_b")
         .select("id_a", "id_b", "block_key",
-                token_jaccard_expr("toks_a", "toks_b").alias("jaccard_content"))
+                set_jaccard("toks_a", "toks_b", "n_a", "n_b")
+                .alias("jaccard_content"))
     )
     floor_neg = p1.where(F.col("jaccard_content") < jac_floor).select(
         "id_a", "id_b", "block_key",
@@ -142,12 +143,12 @@ def score_pairs(
 
     # ---------------- phase 2: heavy features for floor survivors only
     wide = features.select("id", "path", "content_sha256", "ngram_vec")
-    a2 = hint(wide.select(F.col("id").alias("id_a"), F.col("path").alias("path_a"),
-                          F.col("content_sha256").alias("sha_a"),
-                          F.col("ngram_vec").alias("vec_a")))
-    b2 = hint(wide.select(F.col("id").alias("id_b"), F.col("path").alias("path_b"),
-                          F.col("content_sha256").alias("sha_b"),
-                          F.col("ngram_vec").alias("vec_b")))
+    a2 = wide.select(F.col("id").alias("id_a"), F.col("path").alias("path_a"),
+                     F.col("content_sha256").alias("sha_a"),
+                     F.col("ngram_vec").alias("vec_a"))
+    b2 = wide.select(F.col("id").alias("id_b"), F.col("path").alias("path_b"),
+                     F.col("content_sha256").alias("sha_b"),
+                     F.col("ngram_vec").alias("vec_b"))
     j2 = survivors.join(a2, "id_a").join(b2, "id_b")
 
     exact = F.col("sha_a") == F.col("sha_b")

@@ -113,9 +113,14 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id",
       round trip — whole-stage codegen's subexpression elimination
       evaluates the shared hashed array ONCE per row, and the shuffle
       of one md5 row per (doc, shingle) disappears outright (guide
-      §2.4). Every doc emits >= 1 shingle (short docs collapse to one
-      whole-array shingle), so no group can vanish."""
-    toked = df.select(
+      §2.4). Every non-NULL doc emits >= 1 shingle (short docs collapse
+      to one whole-array shingle);
+    - NULL text emits no row, as the explode path did. Its tokens are
+      NULL exactly when the text is, so the toks IS NOT NULL guard is
+      written on the text column: a filter on the token expression
+      would be pushed below the projection and tokenize every row
+      twice."""
+    toked = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         word_tokens(F.col(text_col)).alias("toks"),
     )

@@ -43,9 +43,8 @@ class ParquetBackend:
     def __init__(self, root: str | Path):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
-        # stages may checkpoint from concurrent threads (the pipeline
-        # runs independent DAG branches in parallel) — serialize the
-        # shared metrics-file append
+        # one store may be shared by several driver threads — serialize
+        # the shared metrics-file append
         self._metrics_lock = threading.Lock()
 
     def write_table(self, df: DataFrame, key: str) -> DataFrame:
@@ -161,40 +160,15 @@ class IcebergBackend:
                 f"unusable (is iceberg-spark-runtime on the classpath?): "
                 f"{exc}") from exc
 
-    def _ident(self, key: str, *, tagged: bool = True) -> str:
+    def _ident(self, key: str) -> str:
         # checkpoint keys are "stage@hash" — '@' needs quoting in SQL
         # identifiers, so normalize to an identifier-safe name. The
         # sanitization is lossy ('a-b' and 'a_b' collide), so a short
         # hash of the RAW key disambiguates: colliding stage names must
-        # not silently resume from each other's data. tagged=False is
-        # the pre-tag naming scheme, kept readable for migration.
+        # not silently resume from each other's data.
         safe = "".join(c if c.isalnum() or c == "_" else "_" for c in key)
-        if not tagged:
-            return f"{self.catalog}.{self.namespace}.{safe}"
         tag = hashlib.sha256(key.encode()).hexdigest()[:8]
         return f"{self.catalog}.{self.namespace}.{safe}_{tag}"
-
-    def _resolve(self, key: str) -> tuple[str, dict | None]:
-        """(ident, manifest) — the tagged name when it exists; else a
-        PRE-TAG legacy table whose stored manifest provably belongs to
-        this key (its stage prefixes the raw key — the collision the
-        tag guards against fails this check). Without the fallback,
-        upgrading a cluster with existing checkpoints would silently
-        full-recompute every stage and orphan the old tables. New
-        writes always use the tagged name; a recompute leaves a
-        read-compatible legacy table orphaned, never resumes from the
-        wrong one. Returning the manifest alongside keeps a resume
-        probe at one tableExists + one SHOW TBLPROPERTIES round-trip
-        against a remote catalog (two more only on the legacy path)."""
-        ident = self._ident(key)
-        if self.spark.catalog.tableExists(ident):
-            return ident, self._manifest_of(ident)
-        legacy = self._ident(key, tagged=False)
-        if legacy != ident and self.spark.catalog.tableExists(legacy):
-            meta = self._manifest_of(legacy)
-            if meta and key.startswith(str(meta.get("stage", "")) + "@"):
-                return legacy, meta
-        return ident, None
 
     def write_table(self, df: DataFrame, key: str) -> DataFrame:
         ident = self._ident(key)
@@ -202,7 +176,7 @@ class IcebergBackend:
         return self.spark.read.table(ident)
 
     def read_table(self, spark: SparkSession, key: str) -> DataFrame:
-        return spark.read.table(self._resolve(key)[0])
+        return spark.read.table(self._ident(key))
 
     def _manifest_of(self, ident: str) -> dict | None:
         rows = self.spark.sql(f"SHOW TBLPROPERTIES {ident}").collect()
@@ -219,9 +193,12 @@ class IcebergBackend:
         # ONLY table-absent means "no checkpoint" — a transient
         # catalog/FS failure must propagate, not silently trigger a
         # full recompute + createOrReplace of the table (ADVICE r4).
-        # tableExists (inside _resolve) is the positive probe; SHOW
-        # TBLPROPERTIES errors after that are real errors.
-        return self._resolve(key)[1]
+        # tableExists is the positive probe; SHOW TBLPROPERTIES errors
+        # after that are real errors.
+        ident = self._ident(key)
+        if not self.spark.catalog.tableExists(ident):
+            return None
+        return self._manifest_of(ident)
 
     def put_manifest(self, key: str, meta: dict) -> None:
         # base64 the JSON: embedding it as a SQL string literal would
@@ -244,8 +221,8 @@ class IcebergBackend:
         # existence-keyed, not except-keyed: a blanket try-append/
         # except-create would bury real append failures (commit
         # conflicts, schema drift) under a confusing 'already exists'.
-        # Concurrent stage threads can still race the first create —
-        # that loser retries as an append instead of failing.
+        # Two writers sharing the catalog can still race the first
+        # create — the loser retries as an append instead of failing.
         if self.spark.catalog.tableExists(ident):
             row.writeTo(ident).append()
             return

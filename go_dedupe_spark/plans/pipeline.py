@@ -11,13 +11,13 @@ from __future__ import annotations
 
 import hashlib
 import json
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from go_dedupe_spark.operators.blocking import make_blocks
+from go_dedupe_spark.functions.similarity import word_tokens
+from go_dedupe_spark.operators.blocking import Band, make_blocks
 from go_dedupe_spark.operators.components import (
     DRIVER_MAX_EDGES_DEFAULT as CC_DRIVER_MAX_EDGES,
     connected_components,
@@ -47,14 +47,6 @@ class PipelineConfig:
     # set False at corpus scale; edges stay on the loser rows
     # (operators.resolve.resolve_clusters docstring)
     supersedes_arrays: bool = True
-    # materialize independent DAG branches (features || blocks->pairs)
-    # from concurrent driver threads. OFF by default: a pinned-core A/B
-    # (bench_scaling SCALING_CONCURRENT, 100k rows) measured sequential
-    # ~5% FASTER at both 1 and 4 cores — at executor-like core counts
-    # the two jobs' memory footprints and python-worker sets overlap
-    # more than they fill scheduling gaps. Enable on slot-rich clusters
-    # where a single job cannot keep every executor busy.
-    concurrent_stages: bool = False
     extra: dict = field(default_factory=dict)
 
     def fingerprint(self) -> str:
@@ -65,6 +57,15 @@ class PipelineConfig:
         return hashlib.sha256(
             json.dumps(asdict(self), sort_keys=True, default=str).encode()
         ).hexdigest()[:16]
+
+    def bands(self) -> list[Band]:
+        """Blocking bands: MinHash over path tokens (``mh``) and over
+        content words (``cmh``)."""
+        return [
+            ("mh", F.col("path_tokens"), self.num_hashes, self.band_rows),
+            ("cmh", word_tokens(F.col("content")),
+             self.content_num_hashes, self.content_band_rows),
+        ]
 
 
 @dataclass
@@ -110,49 +111,19 @@ def run_pipeline(
 
     records = stage("records", lambda: normalize(files), sort_by=["id"])
 
-    # DAG-aware concurrency: ``features`` depends only on ``records``,
-    # not on blocks/pairs — so the Python-UDF-heavy feature job runs
-    # CONCURRENTLY with the JVM-heavy blocks->pairs chain (Spark's
-    # scheduler interleaves jobs submitted from separate threads). Each
-    # job's scheduling gaps and low-parallelism tails fill with the
-    # other's tasks; on one core this is a no-op (same total work), so
-    # it purely improves N->4N scaling efficiency and cluster
-    # utilization. Exceptions propagate on join.
-    def run_blocks_pairs() -> tuple[DataFrame, DataFrame]:
-        blocks = stage(
-            "blocks",
-            lambda: make_blocks(
-                records,
-                num_hashes=cfg.num_hashes, band_rows=cfg.band_rows,
-                content_num_hashes=cfg.content_num_hashes,
-                content_band_rows=cfg.content_band_rows,
-            ),
-            sort_by=["block_key", "id"],
-        )
-        pairs = stage(
-            "pairs",
-            lambda: candidate_pairs(blocks, max_block=cfg.max_block,
-                                    salt_cap=cfg.salt_cap),
-            sort_by=["id_a", "id_b"],
-        )
-        return blocks, pairs
-
-    def run_features() -> DataFrame:
-        return stage(
-            "features",
-            lambda: build_features(records, with_cosine=cfg.with_cosine),
-            sort_by=["id"],
-        )
-
-    if cfg.concurrent_stages:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bp = pool.submit(run_blocks_pairs)
-            f_feat = pool.submit(run_features)
-            blocks, pairs = f_bp.result()
-            features = f_feat.result()
-    else:
-        blocks, pairs = run_blocks_pairs()
-        features = run_features()
+    blocks = stage("blocks", lambda: make_blocks(records, cfg.bands()),
+                   sort_by=["block_key", "id"])
+    pairs = stage(
+        "pairs",
+        lambda: candidate_pairs(blocks, max_block=cfg.max_block,
+                                salt_cap=cfg.salt_cap),
+        sort_by=["id_a", "id_b"],
+    )
+    features = stage(
+        "features",
+        lambda: build_features(records, with_cosine=cfg.with_cosine),
+        sort_by=["id"],
+    )
     scores = stage(
         "scores",
         lambda: score_pairs(pairs, threshold=cfg.threshold,

@@ -26,12 +26,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
-    defaults to 2x cores — small enough for local mode, and the knob a
-    cluster deployment retunes first.
+    ``cores`` defaults to $SPARK_GRAFT_CPUS, else the CPUs this process
+    may run on. ``shuffle_partitions`` defaults to 2x cores — small
+    enough for local mode, and the knob a cluster deployment retunes
+    first.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * cores)
 

@@ -172,6 +172,17 @@ def test_fingerprint_detects_shared_content(spark):
     assert rows[1]["n_shingles"] == 7       # 10 tokens -> 7 4-shingles
 
 
+def test_fingerprint_null_text_emits_no_row(spark):
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None), (3, "")],
+        "doc_id long, text string",
+    )
+    rows = {r["id"]: r for r in fingerprint(docs).collect()}
+    assert set(rows) == {1, 3}              # empty text still fingerprints
+    assert rows[1]["n_shingles"] == 1
+    assert rows[3]["fp_min"] is not None
+
+
 def test_multimodal_plumbing(spark):
     docs = spark.createDataFrame(
         [(1, "payload-one", "en", "s", 11), (2, "payload-two", "en", "s", 11)],

@@ -49,15 +49,11 @@ def test_pipeline_resume_byte_identical(spark, files_df, tmp_path):
     assert _collect_sorted(r2.components) == c1
     assert _collect_sorted(r2.resolution) == res1
 
-    # metrics recorded one row per stage per run (7 stages, run 1 only;
-    # blocks/pairs and features checkpoint from concurrent DAG branches,
-    # so cross-branch order is nondeterministic)
-    stages = [m["stage"] for m in store.metrics()]
-    assert sorted(stages) == sorted(
-        ["records", "blocks", "pairs", "features", "scores",
-         "components", "resolution"])
-    assert stages[0] == "records" and stages[-2:] == ["components",
-                                                      "resolution"]
+    # metrics recorded one row per stage per run (7 stages, run 1 only),
+    # in the pipeline's stage order
+    assert [m["stage"] for m in store.metrics()] == [
+        "records", "blocks", "pairs", "features", "scores",
+        "components", "resolution"]
 
 
 def test_partition_lineage(spark, tmp_path):

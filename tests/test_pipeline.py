@@ -93,7 +93,7 @@ def test_blocking_recall(spark, files_df, labeled_df):
     """Every labeled-true pair must co-occur in >= 1 block (FIXTURES.md
     invariant 3 — banding recall guard)."""
     records = normalize(files_df)
-    blocks = make_blocks(records)
+    blocks = make_blocks(records, PipelineConfig().bands())
     pairs = candidate_pairs(blocks)
     true_pairs = labeled_df.where("label").select("id_a", "id_b")
     missed = true_pairs.join(pairs, ["id_a", "id_b"], "left_anti").count()
@@ -106,7 +106,7 @@ def test_f1_on_labeled_same_block_pairs(spark, files_df, labeled_df):
     """Pairwise F1 >= 0.99 on labeled pairs sharing a blocking key —
     THE headline metric (BASELINE.json)."""
     records = normalize(files_df)
-    blocks = make_blocks(records)
+    blocks = make_blocks(records, PipelineConfig().bands())
     pairs = candidate_pairs(blocks)
     scores = score_pairs(pairs, records)
 

@@ -10,6 +10,9 @@ scores or destroys a table:
 - hashed n-gram vectors: mass conservation (one count per byte
   window), determinism, and coefficient-prefix stability for n <= 5
   (score compatibility across releases).
+- set_jaccard: the one per-pair set-Jaccard expression (ER scoring,
+  the entry queries and n-gram dedup) equals Jaccard over Python sets,
+  including the identical, disjoint and empty-set edge cases.
 - swap_dir/recover_dir: a crash injected before ANY filesystem
   operation of the real swap_dir, over a SEQUENCE of versioned swaps,
   never loses the live table — after recover_dir the table exists and
@@ -28,14 +31,16 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.similarity import (
     _gram_coef,
     _hash_vector,
     _jaro_winkler,
     _jaro_winkler_batch,
+    set_jaccard,
 )
 from go_dedupe_spark.plans.writeback import recover_dir, swap_dir
 
@@ -119,6 +124,42 @@ def test_gram_coef_prefix_stable_distinct_odd(n):
     assert (c[: min(n, 5)] == _gram_coef(5)[: min(n, 5)]).all()
     assert len(np.unique(c)) == n
     assert (c % 2 == 1).all()
+
+
+# --------------------------------------------------------- set Jaccard
+
+
+def _spark_jaccard(spark, pairs):
+    """set_jaccard over (A, B) list pairs, in input order."""
+    df = spark.createDataFrame(
+        [(i, sorted(a), sorted(b)) for i, (a, b) in enumerate(pairs)],
+        "i int, a array<int>, b array<int>",
+    ).select("i", "a", "b", F.size("a").alias("n_a"),
+             F.size("b").alias("n_b"))
+    rows = df.select("i", set_jaccard("a", "b", "n_a", "n_b").alias("j")) \
+        .orderBy("i").collect()
+    return [r["j"] for r in rows]
+
+
+def _py_jaccard(a: set, b: set) -> float:
+    return len(a & b) / len(a | b) if a | b else 0.0
+
+
+_int_sets = st.sets(st.integers(0, 24), max_size=12)
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(pairs=st.lists(st.tuples(_int_sets, _int_sets), min_size=1,
+                      max_size=20))
+@example(pairs=[({1, 2, 3}, {1, 2, 3}),   # identical: 1.0
+                ({1, 2}, {3, 4}),         # disjoint: 0.0
+                ({1, 2}, set()),          # one side empty: 0.0
+                (set(), set())])          # both empty: 0.0
+def test_set_jaccard_matches_python_sets(spark, pairs):
+    # one Spark job per example: the whole batch of pairs in one frame
+    assert _spark_jaccard(spark, pairs) == [_py_jaccard(a, b)
+                                            for a, b in pairs]
 
 
 # ------------------------------------------- swap_dir crash injection

@@ -55,6 +55,48 @@ def norm_rows(cols, rows):
     return sorted(out)
 
 
+def oracle_connection(sf_dir: str):
+    """An in-process DuckDB connection with one view per driver table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = Path(sf_dir) / f"{t}.parquet"
+        if p.exists():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def compare(spark, con, sf_dir: str, name: str, fn, sql: str | None) -> str:
+    """Run one query on Spark and its oracle twin on DuckDB. Returns the
+    report line: ``ok``, ``weak`` (no oracle) or ``FAIL`` + reason."""
+    try:
+        sdf = fn(spark, sf_dir)
+        srows = sdf.collect()
+        scols = sdf.columns
+    except Exception as e:  # noqa: BLE001
+        return f"FAIL {name}: spark error: {e}"
+    if sql is None:
+        return f"weak {name}: rows={len(srows)} (no oracle)"
+    try:
+        o = con.execute(sql)
+        ocols = [d[0] for d in o.description]
+        orows = o.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return f"FAIL {name}: duckdb error: {str(e)[:300]}"
+    if sorted(scols) != sorted(ocols):
+        return f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}"
+    if len(srows) != len(orows):
+        return f"FAIL {name}: rowcount spark={len(srows)} oracle={len(orows)}"
+    try:
+        a = norm_rows(scols, [[r[c] for c in scols] for r in srows])
+        b = norm_rows(ocols, orows)
+    except ArrayCellError as e:
+        return f"FAIL {name}: {e}"
+    if a != b:
+        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        return f"FAIL {name}: values differ; first diffs: {diff}"
+    return f"ok   {name}: rows={len(srows)}"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -69,58 +111,16 @@ def main() -> int:
                       shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = Path(sf_dir) / f"{t}.parquet"
-        if p.exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
-    queries = entry_mod.queries()
+    con = oracle_connection(sf_dir)
     oracles = entry_mod.oracle_sql()
     failures = []
-    for name, fn in queries.items():
+    for name, fn in entry_mod.queries().items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:  # noqa: BLE001
+        line = compare(spark, con, sf_dir, name, fn, oracles.get(name))
+        print(line)
+        if line.startswith("FAIL"):
             failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"weak {name}: rows={len(srows)} (no oracle)")
-            continue
-        try:
-            o = con.execute(oracles[name])
-            ocols = [d[0] for d in o.description]
-            orows = o.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
-            continue
-        if sorted(scols) != sorted(ocols):
-            failures.append(name)
-            print(f"FAIL {name}: columns spark={sorted(scols)} oracle={sorted(ocols)}")
-            continue
-        if len(srows) != len(orows):
-            failures.append(name)
-            print(f"FAIL {name}: rowcount spark={len(srows)} oracle={len(orows)}")
-            continue
-        try:
-            a = norm_rows(scols, [[r[c] for c in scols] for r in srows])
-            b = norm_rows(ocols, orows)
-        except ArrayCellError as e:
-            failures.append(name)
-            print(f"FAIL {name}: {e}")
-            continue
-        if a != b:
-            failures.append(name)
-            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            print(f"FAIL {name}: values differ; first diffs: {diff}")
-            continue
-        print(f"ok   {name}: rows={len(srows)}")
 
     print(f"\n{len(failures)} failures" if failures else "\nall ok")
     return 1 if failures else 0

@@ -16,7 +16,7 @@ Two operators, each timed end-to-end (noop sink):
 
 Prints one JSON line; the committed numbers live in BENCH.md.
 
-    python tools/skew_stress.py            # sf0.1 base, local[32]
+    python tools/skew_stress.py            # sf0.1 base, every CPU
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from pyspark.sql import functions as F
 
