@@ -4,9 +4,14 @@ The reference's vector stores (sqlite-vec vec0, DuckDB VSS HNSW,
 vector/sqlite.go:368-437, vector/duckdb.go:177-229) answer per-record
 kNN inside a block. Spark-native equivalents:
 
-- brute-force cosine top-k (baseline): broadcast the query set, score
-  every (query, item) with a native cosine expression, window-rank.
-  Exact; cost = |Q| x |N| — fine when Q is small or N is blocked.
+- brute-force cosine top-k (baseline): the query set is collected on
+  the driver and one Arrow-batched numpy kernel (``mapInArrow`` over
+  the item scan) scores every (item, query) pair; Spark rounds and
+  window-ranks the few survivors. Exact; cost = |Q| x |N| — fine when
+  Q is small or N is blocked.
+- IVF (coarse quantizer): the same kernel assigns items to their
+  nearest centroid and picks each query's probe lists; a deterministic
+  spherical k-means trains the centroids with it.
 - sign-random-projection LSH buckets (scale path): items and queries
   hash to the same bucket with probability rising in cosine; top-k is
   computed within buckets only. Queries MULTI-PROBE: they join their
@@ -15,25 +20,199 @@ kNN inside a block. Spark-native equivalents:
   Projection signs are md5-derived (sign(b, j) = parity of the first
   hex digit of md5("b:j")) — deterministic across reruns AND exactly
   reproducible in the DuckDB SQL oracle, unlike a seeded RNG matrix.
+
+The block kernel (``_vectors``/``_cosines``/``_keep``) replaces the
+native cosine (``dedupe.cosine_from_norms``: ``zip_with`` +
+``aggregate``, interpreted per element of every pair) without moving a
+bit: products are taken in the input's element type and summed in
+dimension order from 0.0 in double, exactly like the HOF, so every raw
+cosine is bit-identical to it — NULL, NaN, zero-vector and
+length-mismatch cases included. Spark still applies ``round(., 6)`` and
+the id-tie-broken ``row_number``, so results stay byte-identical to
+the DuckDB oracle; the kernel only drops rows that provably cannot
+reach a top-k. One Python stage runs at a time: the small side is
+collected and scored on the driver before the item pass starts.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from go_dedupe_spark.operators.dedupe import (
-    cosine_expr,
     cosine_from_norms,
     vec_norm_expr,
 )
+
+# ------------------------------------------------ cosine block kernel
+
+# A row leaves the kernel when its raw cosine is within this of the k-th
+# best raw cosine of its block. round(., 6) moves a value by at most
+# half a unit of the 6th decimal, so two values more than 1e-6 apart
+# never round level; the second 1e-6 absorbs Spark rounding the
+# shortest decimal string of the double and the float subtraction.
+_KEEP_MARGIN = 2e-6
+# (block rows x small-side rows) cells scored per numpy step. 64k keeps
+# each float64 temporary at 512 KB: scoring 3000 x 256 32-dim pairs
+# grew a worker's PSS by 4 MB (23 MB at 1M cells, whose freed 8 MB
+# temporaries glibc keeps) in the same time.
+_BLOCK_CELLS = 1 << 16
+
+
+class _Vectors(NamedTuple):
+    """One side of the kernel: ids and vectors of n rows, densified."""
+
+    ids: pa.Array
+    vecs: pa.Array          # the input list column, passed through
+    dense: np.ndarray       # (n, longest) element dtype, zero padded
+    length: np.ndarray      # (n,) list length, 0 for a NULL vector
+    norm: np.ndarray        # (n,) float64 L2 norm, meaningful where ok
+    ok: np.ndarray          # (n,) vector and all its elements non-NULL
+
+    def take(self, idx: np.ndarray) -> _Vectors:
+        return _Vectors(self.ids.take(idx), self.vecs.take(idx),
+                        self.dense[idx], self.length[idx], self.norm[idx],
+                        self.ok[idx])
+
+
+def _vectors(ids, vecs) -> _Vectors:
+    """Densify a list<float|double> column. The norm is
+    ``vec_norm_expr``'s arithmetic: squares in the element type, summed
+    in order from 0.0 in double (zero padding adds +0.0, a no-op)."""
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    flat = pc.list_flatten(vecs)
+    if not pa.types.is_floating(flat.type):
+        raise TypeError(f"cosine kernel needs float or double vectors, "
+                        f"got {vecs.type}")
+    n = len(vecs)
+    length = pc.list_value_length(vecs).fill_null(0).to_numpy()
+    row = np.repeat(np.arange(n), length)
+    col = np.arange(len(flat)) - np.repeat(np.cumsum(length) - length,
+                                           length)
+    vals = flat.fill_null(0).to_numpy(zero_copy_only=False)
+    dense = np.zeros((n, int(length.max(initial=0))), dtype=vals.dtype)
+    dense[row, col] = vals
+    null_elem = np.bincount(row[flat.is_null().to_numpy(zero_copy_only=False)],
+                            minlength=n) > 0
+    ok = vecs.is_valid().to_numpy(zero_copy_only=False) & ~null_elem
+    sq = dense * dense
+    acc = np.zeros(n)
+    for j in range(dense.shape[1]):
+        acc += sq[:, j]
+    return _Vectors(ids, vecs, dense, length, np.sqrt(acc), ok)
+
+
+def _collect_vectors(df: DataFrame, id_col: str, vec_col: str) -> _Vectors:
+    """The small side (queries, centroids), collected to the driver."""
+    t = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")) \
+        .toArrow()
+    return _vectors(t.column("id"), t.column("v"))
+
+
+def _cosines(a: _Vectors, b: _Vectors,
+             skip: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """Raw cosine of every (a row, b row) pair -> (values, NULL mask),
+    bit-identical to ``cosine_from_norms(a, b, |a|, |b|)``: a NULL norm
+    or a norm <= 0 gives 0.0 (NaN counts as > 0, as in Spark), a length
+    mismatch NULL. ``skip`` marks pairs the caller drops; a kept pair
+    whose norm product underflows to 0 raises, as ANSI division does."""
+    dot = np.zeros((len(a.length), len(b.length)))
+    for j in range(min(a.dense.shape[1], b.dense.shape[1])):
+        dot += np.multiply.outer(a.dense[:, j], b.dense[:, j])
+    pos_a = a.ok & ((a.norm > 0) | np.isnan(a.norm))
+    pos_b = b.ok & ((b.norm > 0) | np.isnan(b.norm))
+    both = np.logical_and.outer(pos_a, pos_b)
+    denom = np.multiply.outer(a.norm, b.norm)
+    zero = both & (denom == 0)
+    if skip is not None:
+        zero &= ~skip
+    if zero.any():
+        raise ArithmeticError("cosine: [DIVIDE_BY_ZERO] the norm product "
+                              "of a vector pair underflows to 0")
+    with np.errstate(all="ignore"):
+        cos = np.where(both, dot / denom, 0.0)
+    return cos, both & np.not_equal.outer(a.length, b.length)
+
+
+def _keep(cos: np.ndarray, null: np.ndarray, k: int, axis: int,
+          skip: np.ndarray | None = None) -> np.ndarray:
+    """A safe superset of each line's top ``k`` along ``axis``: every
+    NULL or NaN cosine (they can rank anywhere), and every value within
+    ``_KEEP_MARGIN`` of the line's k-th best."""
+    odd = null | np.isnan(cos)
+    score = np.where(odd, -np.inf, cos)
+    if skip is not None:
+        score[skip] = -np.inf
+    kth = -np.inf
+    if score.shape[axis] > k:
+        kth = -np.partition(-score, k - 1, axis=axis).take([k - 1], axis=axis)
+    keep = odd | (cos >= kth - _KEEP_MARGIN)
+    return keep & ~skip if skip is not None else keep
+
+
+def _self_pairs(item_ids: pa.Array, query_ids: pa.Array) -> np.ndarray:
+    """(item, query) pairs ``query_id != item_id`` drops: equal ids, and
+    every NULL id (the comparison is NULL there)."""
+    q = query_ids.cast(item_ids.type)
+    i_code = pc.index_in(item_ids, value_set=q).fill_null(-1).to_numpy()
+    q_code = pc.index_in(q, value_set=q).fill_null(-1).to_numpy()
+    i_null = item_ids.is_null().to_numpy(zero_copy_only=False)
+    q_null = q.is_null().to_numpy(zero_copy_only=False)
+    return (np.equal.outer(i_code, q_code)
+            | np.logical_or.outer(i_null, q_null))
+
+
+def _blocks(batches, width: int):
+    """Item-side blocks of each Arrow batch ((id, vector) columns), sized
+    to ``_BLOCK_CELLS`` against ``width`` small-side rows."""
+    step = max(1, _BLOCK_CELLS // max(1, width))
+    for batch in batches:
+        it = _vectors(batch.column(0), batch.column(1))
+        for start in range(0, batch.num_rows, step):
+            yield it.take(np.arange(start, min(start + step, batch.num_rows)))
+
+
+def _cosine_column(cos: np.ndarray, null: np.ndarray) -> pa.Array:
+    return pa.array(cos, type=pa.float64(), mask=null)
+
+
+def _centroid_candidates(blk: _Vectors, cents: _Vectors):
+    """Each item's candidate lists: (item rows, centroid rows, raw
+    cosines, NULL mask) — its nearest centroid and any that may round
+    level with it."""
+    cos, null = _cosines(blk, cents)
+    i, j = np.nonzero(_keep(cos, null, 1, axis=1))
+    return i, j, cos[i, j], null[i, j]
+
+
+def _assigned(scored: DataFrame) -> DataFrame:
+    """Keep each item's nearest list: round(ccos, 6) desc, then cid."""
+    w = Window.partitionBy("item_id").orderBy(F.desc("ccos"), F.col("cid"))
+    return (
+        scored.withColumn("ccos", F.round("ccos", 6))
+        .withColumn("_r", F.row_number().over(w))
+        .where(F.col("_r") == 1)
+    )
 
 
 def cosine_topk_bruteforce(
@@ -46,31 +225,36 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    -> (query_id, item_id, cosine, rank). Query side is broadcast —
-    the plan is one scan of ``items`` regardless of |Q|; ties broken by
-    item id for determinism (ancestor: ORDER BY distance LIMIT k,
-    vector/sqlite.go:391)."""
-    # per-SIDE norms (r7): hoisted out of the pairwise cosine so the
-    # |Q| x |N| scoring does one array pass per pair, not three —
-    # bit-identical values (cosine_from_norms doc)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"),
-                       vec_norm_expr(vec_col).alias("qn"))
+    -> (query_id, item_id, cosine, rank); ties broken by item id for
+    determinism (ancestor: ORDER BY distance LIMIT k,
+    vector/sqlite.go:391). Building the DataFrame collects ``queries``
+    to the driver (one job); the plan is then one scan of ``items``
+    through the cosine kernel, which emits a superset of each query's
+    top k per block, before the exchange into the ranking window.
+    Vectors must be array<float> or array<double>."""
+    q = _collect_vectors(queries, id_col, vec_col)
     it = items.select(F.col(id_col).alias("item_id"),
-                      F.col(vec_col).alias("ivec"),
-                      vec_norm_expr(vec_col).alias("inorm"))
-    joined = it.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.where(F.col("query_id") != F.col("item_id"))
-    scored = joined.select(
-        "query_id", "item_id",
-        F.round(cosine_from_norms(F.col("qvec"), F.col("ivec"),
-                                  F.col("qn"), F.col("inorm")),
-                6).alias("cosine"),
-    )
+                      F.col(vec_col).alias("ivec"))
+    schema = StructType([StructField("query_id",
+                                     queries.schema[id_col].dataType),
+                         StructField("item_id", it.schema["item_id"].dataType),
+                         StructField("cosine", DoubleType())])
+
+    def score(batches):
+        for blk in _blocks(batches, len(q.length)):
+            skip = _self_pairs(blk.ids, q.ids) if exclude_self else None
+            cos, null = _cosines(blk, q, skip)
+            i, j = np.nonzero(_keep(cos, null, k, axis=0, skip=skip))
+            yield pa.RecordBatch.from_arrays(
+                [q.ids.take(j), blk.ids.take(i),
+                 _cosine_column(cos[i, j], null[i, j])],
+                names=["query_id", "item_id", "cosine"])
+
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("item_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        it.mapInArrow(score, schema)
+        .withColumn("cosine", F.round("cosine", 6))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
 
@@ -90,66 +274,107 @@ def cosine_topk_ivf(
     ``centroids`` set partitions the corpus into inverted lists — each
     item is assigned to its single nearest centroid — and each query
     probes only its ``nprobe`` nearest lists. Returns the brute-force
-    schema (query_id, item_id, cosine, rank).
+    schema (query_id, item_id, cosine, rank). Centroid ids must be
+    unique.
 
-    Scale shape: centroids broadcast (they are small by construction);
-    the N x C assignment scores natively and the rank<=1 filter is a
-    WindowGroupLimit in Spark 4 — each map task keeps ONE row per item
-    before the exchange, so the assignment shuffle is ~N rows, not NxC.
-    The probe explosion is on the query side only (nprobe rows per
-    query). Cosines are rounded to 6 decimals BEFORE ranking with id
+    Shape: building the DataFrame collects ``centroids`` and
+    ``queries`` to the driver and scores the query probes there with
+    the cosine kernel; a query whose nprobe-th and (nprobe+1)-th lists
+    may round level is ranked in one local Spark job (no Python stage).
+    So the probes are driver data before any item is read. The
+    plan is then one item scan through the kernel: per item, one row
+    per candidate list (its nearest, plus any that may round level with
+    it), each carrying the item's cosines to the queries probing that
+    list (the pairs the native join used to produce). Spark ranks the
+    candidates (row_number per item keeps ~N rows through the
+    exchange), explodes the winner's hits and ranks them per query.
+    Cosines are rounded to 6 decimals BEFORE ranking with id
     tie-breaks, so assignment and results are bit-reproducible in the
     DuckDB oracle."""
+    spark = items.sparkSession
     cid = centroid_id_col or id_col
-    # per-SIDE norms (r7): the N x C assignment is the dominant cost of
-    # this operator; hoisting both norms out of the pairwise cosine
-    # cuts it from 3 interpreted array passes per (item, centroid) to 1
-    # — bit-identical values (cosine_from_norms doc)
-    c = centroids.select(F.col(cid).alias("cid"),
-                         F.col(vec_col).alias("cvec"),
-                         vec_norm_expr(vec_col).alias("cn"))
+    cents = _collect_vectors(centroids, cid, vec_col)
+    qv = _collect_vectors(queries, id_col, vec_col)
+    qid_type = queries.schema[id_col].dataType
+    cid_type = centroids.schema[cid].dataType
+    cos, null = _cosines(qv, cents)
+    keep = _keep(cos, null, nprobe, axis=1)
+    # a query keeping at most nprobe lists probes exactly those: every
+    # other list rounds strictly lower. Only the rest need Spark's rank.
+    tied = keep.sum(axis=1) > nprobe
+    probe_q, probe_c = np.nonzero(keep & ~tied[:, None])
+    if tied.any():
+        qi, ci = np.nonzero(keep & tied[:, None])
+        local = spark.createDataFrame(
+            pa.table({"query_id": qv.ids.take(qi), "cid": cents.ids.take(ci),
+                      "qcos": _cosine_column(cos[qi, ci], null[qi, ci]),
+                      "_q": qi, "_c": ci}),
+            StructType([StructField("query_id", qid_type),
+                        StructField("cid", cid_type),
+                        StructField("qcos", DoubleType()),
+                        StructField("_q", LongType()),
+                        StructField("_c", LongType())]))
+        w_probe = Window.partitionBy("query_id").orderBy(F.desc("qcos"),
+                                                         F.col("cid"))
+        ranked = (
+            local.withColumn("qcos", F.round("qcos", 6))
+            .withColumn("_r", F.row_number().over(w_probe))
+            .where(F.col("_r") <= nprobe)
+            .select("_q", "_c").toArrow()
+        )
+        probe_q = np.concatenate(
+            [probe_q, np.asarray(ranked.column("_q"), dtype=np.int64)])
+        probe_c = np.concatenate(
+            [probe_c, np.asarray(ranked.column("_c"), dtype=np.int64)])
+    # query rows probing each list
+    lists = [probe_q[probe_c == c] for c in range(len(cents.length))]
     it = items.select(F.col(id_col).alias("item_id"),
-                      F.col(vec_col).alias("ivec"),
-                      vec_norm_expr(vec_col).alias("inorm"))
-    w_assign = Window.partitionBy("item_id").orderBy(F.desc("ccos"),
-                                                     F.col("cid"))
-    assigned = (
-        it.crossJoin(F.broadcast(c))
-        .select("item_id", "ivec", "inorm", "cid",
-                F.round(cosine_from_norms(F.col("ivec"), F.col("cvec"),
-                                          F.col("inorm"), F.col("cn")),
-                        6).alias("ccos"))
-        .withColumn("_r", F.row_number().over(w_assign))
-        .where(F.col("_r") == 1)
-        .select("item_id", "ivec", "inorm", "cid")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"),
-                       vec_norm_expr(vec_col).alias("qn"))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qcos"),
-                                                     F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(c))
-        .select("query_id", "qvec", "qn", "cid",
-                F.round(cosine_from_norms(F.col("qvec"), F.col("cvec"),
-                                          F.col("qn"), F.col("cn")),
-                        6).alias("qcos"))
-        .withColumn("_r", F.row_number().over(w_probe))
-        .where(F.col("_r") <= nprobe)
-        .select("query_id", "qvec", "qn", "cid")
-    )
-    joined = assigned.join(probes, "cid") \
-        .where(F.col("query_id") != F.col("item_id"))
-    scored = joined.select(
-        "query_id", "item_id",
-        F.round(cosine_from_norms(F.col("qvec"), F.col("ivec"),
-                                  F.col("qn"), F.col("inorm")),
-                6).alias("cosine"),
-    )
+                      F.col(vec_col).alias("ivec"))
+    hit = StructType([StructField("query_id", qid_type),
+                      StructField("cosine", DoubleType())])
+    schema = StructType([it.schema["item_id"], StructField("cid", cid_type),
+                         StructField("ccos", DoubleType()),
+                         StructField("hits", ArrayType(hit))])
+
+    def score(batches):
+        # a list's hit matrix is at most (block rows x queries)
+        for blk in _blocks(batches, max(len(cents.length), len(qv.length))):
+            ii, cc, ccos, cnull = _centroid_candidates(blk, cents)
+            # hits of candidate row r: hr == r, grouped list by list
+            hr, hq, hcos, hnull = [np.zeros(0, dtype=t) for t in
+                                   ("int64", "int64", "float64", "bool")]
+            for c in np.unique(cc):
+                r = np.nonzero(cc == c)[0]
+                members, probers = blk.take(ii[r]), qv.take(lists[c])
+                skip = _self_pairs(members.ids, probers.ids)
+                cos, null = _cosines(members, probers, skip)
+                a, b = np.nonzero(~skip)
+                hr = np.concatenate([hr, r[a]])
+                hq = np.concatenate([hq, lists[c][b]])
+                hcos = np.concatenate([hcos, cos[a, b]])
+                hnull = np.concatenate([hnull, null[a, b]])
+            order = np.argsort(hr, kind="stable")
+            offsets = np.concatenate(
+                [[0], np.cumsum(np.bincount(hr, minlength=len(ii)))])
+            hits = pa.ListArray.from_arrays(
+                pa.array(offsets, type=pa.int32()),
+                pa.StructArray.from_arrays(
+                    [qv.ids.take(hq[order]),
+                     _cosine_column(hcos[order], hnull[order])],
+                    names=["query_id", "cosine"]))
+            yield pa.RecordBatch.from_arrays(
+                [blk.ids.take(ii), cents.ids.take(cc),
+                 _cosine_column(ccos, cnull), hits],
+                names=["item_id", "cid", "ccos", "hits"])
+
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.col("item_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _assigned(it.mapInArrow(score, schema))
+        .select("item_id", F.explode("hits").alias("h"))
+        .select("h.query_id", "item_id",
+                F.round("h.cosine", 6).alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
 
@@ -170,9 +395,12 @@ def train_ivf_centroids(
 
     - init: the k items ranked first by ``md5(id)`` — a deterministic
       pseudo-random sample, rerun-stable with no RNG state.
-    - assign: nearest centroid by cosine, the same broadcast-centroids
-      + WindowGroupLimit shape as ``cosine_topk_ivf`` (the per-item
-      top-1 never shuffles N x C rows).
+    - assign: nearest centroid by cosine, the same step as
+      ``cosine_topk_ivf``: the cosine kernel scores the checkpointed
+      items against the current centroids in one Python stage,
+      emitting ~N candidate rows (never N x C) for Spark's round +
+      rank. The centroids stay driver data: each iteration's job
+      collects the next ones (k x dim values), nothing is checkpointed.
     - update: element-wise mean via posexplode -> groupBy(cid, pos)
       (map-side partial agg; the only collect_list builds ONE dim-sized
       array per centroid, bounded by dim, never by corpus size), then
@@ -180,10 +408,10 @@ def train_ivf_centroids(
       centroids) and rounded to 6 decimals so reruns don't drift with
       partition-order float summation.
 
-    Returns (cid string, <vec_col> array<double>) ready to pass as
-    ``centroids`` (with centroid_id_col="cid"). Centroids that lose
-    every member during an iteration drop out — callers get <= k lists,
-    the standard Lloyd's behavior.
+    Returns a local DataFrame (cid string, <vec_col> array<double>)
+    ready to pass as ``centroids`` (with centroid_id_col="cid").
+    Centroids that lose every member during an iteration drop out —
+    callers get <= k lists, the standard Lloyd's behavior.
 
     ``max_rows`` bounds the materialized training set at corpus scale
     (VERDICT r4 missing #3): a deterministic md5-threshold sample —
@@ -239,20 +467,24 @@ def train_ivf_centroids(
         .limit(k)
         .select(F.col("_r").alias("cid"), F.col("ivec").alias("cvec"))
     )
-    c = init.localCheckpoint(eager=True)
-    w_assign = Window.partitionBy("item_id").orderBy(F.desc("ccos"),
-                                                     F.col("cid"))
+    c = init.toArrow()
+    schema = StructType([it.schema["item_id"], it.schema["ivec"],
+                         StructField("cid", StringType()),
+                         StructField("ccos", DoubleType())])
     for _ in range(iters):
-        assigned = (
-            it.crossJoin(F.broadcast(c))
-            .select("item_id", "ivec", "cid",
-                    F.round(cosine_expr("ivec", "cvec"), 6).alias("ccos"))
-            .withColumn("_rk", F.row_number().over(w_assign))
-            .where(F.col("_rk") == 1)
-            .select("cid", "ivec")
-        )
+        cents = _vectors(c.column("cid"), c.column("cvec"))
+
+        def assign(batches, cents=cents):
+            for blk in _blocks(batches, len(cents.length)):
+                i, j, cos, null = _centroid_candidates(blk, cents)
+                yield pa.RecordBatch.from_arrays(
+                    [blk.ids.take(i), blk.vecs.take(i), cents.ids.take(j),
+                     _cosine_column(cos, null)],
+                    names=["item_id", "ivec", "cid", "ccos"])
+
         sums = (
-            assigned.select("cid", F.posexplode("ivec").alias("pos", "val"))
+            _assigned(it.mapInArrow(assign, schema))
+            .select("cid", F.posexplode("ivec").alias("pos", "val"))
             .groupBy("cid", "pos")
             .agg(F.avg("val").alias("m"))
         )
@@ -268,8 +500,11 @@ def train_ivf_centroids(
             F.when(norm > 0,
                    F.transform("mv", lambda x: F.round(x / norm, 6)))
              .otherwise(F.col("mv")).alias("cvec"),
-        ).localCheckpoint(eager=True)
-    return c.select("cid", F.col("cvec").alias(vec_col))
+        ).toArrow()
+    return items.sparkSession.createDataFrame(
+        c.rename_columns(["cid", vec_col]),
+        StructType([StructField("cid", StringType()),
+                    StructField(vec_col, ArrayType(DoubleType()))]))
 
 
 # ------------------------------------------------ compression variants

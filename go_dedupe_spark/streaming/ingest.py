@@ -380,7 +380,11 @@ def streaming_near_dup_pairs(
         admitted = fresh.withColumn("_r", F.row_number().over(w_new))
         if have_index:
             stats = read_or_none(stats_dir) if stats_dir else None
-            need_seed = bool(stats_dir) and stats is None
+            # batch 0 over an existing stats table is a restarted stream
+            # (or batch 0 replayed): reseed. The max_b checks below
+            # cannot see a reset whose prior stream wrote <= 2 batches —
+            # its ids 0..1 overlap the new stream's exactly.
+            need_seed = bool(stats_dir) and (stats is None or batch_id == 0)
             if stats is not None and batch_id > 0:
                 # coverage-gap check (ADVICE r5): every stats-enabled
                 # batch appends at least a MARKER row (below), so in

@@ -1119,62 +1119,81 @@ def test_streaming_near_dup_swap_window_healed(spark, tmp_path):
     assert not (tmp_path / "hw_index.old").exists()
 
 
+def _reset_run(spark, tmp_path, tag, prefixes, cap):
+    """One near-dup stream over 4-doc batches of identical text (one
+    batch per prefix) with its own checkpoint, into the ``rs_`` index,
+    pairs and stats tables that every stream of a test shares."""
+    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
+
+    text = "identical shared boilerplate text in every single document"
+    src = tmp_path / f"{tag}_src"
+    for j, p in enumerate(prefixes):
+        out = src / f"f{j}"
+        if not out.exists():
+            spark.createDataFrame(
+                [(f"{p}{i:02d}", text) for i in range(4)],
+                ["doc_id", "text"],
+            ).repartition(1).write.parquet(str(out))
+    stream = (spark.readStream
+              .schema("doc_id string, text string")
+              .option("maxFilesPerTrigger", 1)
+              .parquet(str(src / "*")))
+    q = streaming_near_dup_pairs(
+        stream,
+        index_dir=str(tmp_path / "rs_index"),
+        pairs_dir=str(tmp_path / "rs_pairs"),
+        checkpoint_dir=str(tmp_path / f"{tag}_ck"),
+        num_hashes=4, band_rows=2, index_bucket_cap=cap,
+        stats_dir=str(tmp_path / "rs_stats"))
+    q.awaitTermination(180)
+
+
+def _assert_reset_cap_and_stats(spark, tmp_path, cap):
+    idx = spark.read.parquet(str(tmp_path / "rs_index"))
+    truth = {r["block_key"]: r["n"] for r in
+             idx.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
+    assert max(truth.values()) <= cap
+    stats = spark.read.parquet(str(tmp_path / "rs_stats"))
+    occ = {r["block_key"]: r["n"] for r in
+           stats.where(F.col("block_key") != "")
+           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
+    assert occ == truth
+
+
 def test_streaming_near_dup_stats_checkpoint_reset_reseeded(spark, tmp_path):
     """ADVICE r6 — a RESTARTED stream (fresh streaming checkpoint) over
     a kept index + stats_dir re-numbers batches from 0; its per-batch
     delta rows collide with the old stream's same-numbered rows and
     replay-dedup's max(n)-per-(key,batch) silently under-counts
-    occupancy, over-admitting past the bucket cap. The coverage check
-    must treat max(batch_id) > batch_id as a reseed signature (it is
-    detectable in the same scalar collect) and self-heal in one batch.
+    occupancy, over-admitting past the bucket cap. The restarted
+    stream's batch 0 must reseed from the index and self-heal.
 
     Shape: stream A (3 batches, cap 20) admits 12 docs and leaves
-    deltas for batch ids 1 and 2. Stream B over 12 NEW docs with a
-    fresh checkpoint re-runs ids 0..2; its id-1 delta collides with
-    A's. Without the reseed, occupancy reads 16 where 20 were admitted
-    and batch 2 admits 4 past the cap (24 > 20)."""
-    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
+    deltas for batch ids 0..2. Stream B over 12 NEW docs with a fresh
+    checkpoint re-runs ids 0..2; its deltas collide with A's. Without
+    the reseed, occupancy reads 16 where 20 were admitted and batch 2
+    admits 4 past the cap (24 > 20)."""
+    _reset_run(spark, tmp_path, "rsa", ["a", "b", "c"], 20)   # A: ids 0..2
+    _reset_run(spark, tmp_path, "rsb", ["d", "e", "g"], 20)   # B: ids 0..2
+    # the cap must hold and the running counts must equal the index
+    _assert_reset_cap_and_stats(spark, tmp_path, 20)
 
-    text = "identical shared boilerplate text in every single document"
-    stats_dir = str(tmp_path / "rs_stats")
 
-    def run(src_tag, ck_tag, prefixes):
-        src = tmp_path / f"{src_tag}_src"
-        for j, p in enumerate(prefixes):
-            out = src / f"f{j}"
-            if not out.exists():
-                spark.createDataFrame(
-                    [(f"{p}{i:02d}", text) for i in range(4)],
-                    ["doc_id", "text"],
-                ).repartition(1).write.parquet(str(out))
-        stream = (spark.readStream
-                  .schema("doc_id string, text string")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(src / "*")))
-        q = streaming_near_dup_pairs(
-            stream,
-            index_dir=str(tmp_path / "rs_index"),
-            pairs_dir=str(tmp_path / "rs_pairs"),
-            checkpoint_dir=str(tmp_path / f"{ck_tag}_ck"),
-            num_hashes=4, band_rows=2, index_bucket_cap=20,
-            stats_dir=stats_dir)
-        q.awaitTermination(180)
-
-    run("rsa", "rsa", ["a", "b", "c"])          # stream A: ids 0..2
-    run("rsb", "rsb", ["d", "e", "g"])          # stream B: fresh ck, ids 0..2
-
-    idx = spark.read.parquet(str(tmp_path / "rs_index"))
-    per_key = idx.groupBy("block_key").agg(F.count("*").alias("n"))
-    # the cap must hold — without the reset-signature reseed the
-    # under-counted occupancy admits a whole extra batch (24 > 20)
-    assert per_key.where(F.col("n") > 20).count() == 0
-    stats = spark.read.parquet(stats_dir)
-    occ = {r["block_key"]: r["n"] for r in
-           stats.where(F.col("block_key") != "")
-           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
-    truth = {r["block_key"]: r["n"] for r in
-             idx.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert occ == truth
+@pytest.mark.parametrize("prior", [1, 2])
+def test_streaming_near_dup_stats_short_stream_reset_reseeded(
+        spark, tmp_path, prior):
+    """ADVICE r7 #1 — a restart over a prior stream of <= 2 batches:
+    the new stream's batch ids overlap the old ones exactly, so
+    max(batch_id) never exceeds the current id and the reset used to
+    go unseen. Stream A writes ``prior`` batches (4 docs per key each);
+    stream B, with a fresh checkpoint, writes 2 under cap 4*prior + 6.
+    Without the batch-0 reseed B's batch-0 delta collides with A's,
+    batch 1 reads occupancy 4 short and admits all 4 docs
+    (4*prior + 8 > cap)."""
+    cap = 4 * prior + 6
+    _reset_run(spark, tmp_path, "rsa", ["a", "b"][:prior], cap)
+    _reset_run(spark, tmp_path, "rsb", ["d", "e"], cap)
+    _assert_reset_cap_and_stats(spark, tmp_path, cap)
 
 
 def test_streaming_near_dup_stats_gap_reseeded(spark, tmp_path):

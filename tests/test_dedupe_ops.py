@@ -262,3 +262,60 @@ def test_srp_bucketer_evaluates_once_per_side(spark):
                           n_bits=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 2, plan
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan (AQE's final plan once it has run)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_ann_kernel_runs_one_python_stage_at_a_time(spark, monkeypatch):
+    """The cosine-kernel operators never run two Python stages at once
+    (overlapping IVF probe and assignment stages kept a second Python
+    worker alive: ~+75 MB PSS on perfbench near_dup_ann). Every plan
+    they execute on the way holds at most one Python map node: the
+    small-side collects, the IVF probes included, hold none, and each
+    item pass (the returned plan, and each trainer iteration) one."""
+    from go_dedupe_spark.operators.ann import (
+        cosine_topk_bruteforce,
+        cosine_topk_ivf,
+        train_ivf_centroids,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)])
+         for i in range(40)],
+        "vec_id long, embedding array<double>")
+    queries = emb.where("vec_id < 4")
+    cls = type(emb)
+    side_plans = []
+
+    def recording(real):
+        def run(self, *args, **kwargs):
+            out = real(self, *args, **kwargs)
+            side_plans.append(_final_plan(self))
+            return out
+        return run
+
+    for name in ("toArrow", "localCheckpoint"):
+        monkeypatch.setattr(cls, name, recording(getattr(cls, name)))
+
+    bf = cosine_topk_bruteforce(emb, queries, k=3)
+    bf.collect()
+    assert _final_plan(bf).count("MapInArrow") == 1, _final_plan(bf)
+
+    ivf = cosine_topk_ivf(emb, queries, emb.where("vec_id % 10 = 0"), k=3)
+    ivf.collect()
+    plan = _final_plan(ivf)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastExchange" not in plan, plan     # probes: driver data
+
+    # queries; centroids, queries and (when some are tied) probes
+    assert side_plans and all(p.count("MapInArrow") == 0
+                              for p in side_plans), side_plans
+    side_plans.clear()
+    train_ivf_centroids(emb, k=4, iters=2)
+    # items checkpoint, init, one collect per iteration
+    assert [p.count("MapInArrow") for p in side_plans] == [0, 0, 1, 1], \
+        side_plans

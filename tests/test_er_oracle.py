@@ -1,6 +1,8 @@
-"""The ER driver-contract rows against their DuckDB oracle twins at
-sf0.001, through the same comparator as tools/check_correctness.py
-(row count, column names, order-insensitive rounded values)."""
+"""The ER and ANN driver-contract rows against their DuckDB oracle
+twins at sf0.001, through the same comparator as
+tools/check_correctness.py (row count, column names, order-insensitive
+rounded values). sf0.001 embeddings are list<float>, so the ANN rows
+also cover the cast to array<double>."""
 
 from __future__ import annotations
 
@@ -37,6 +39,18 @@ def oracle():
     "er_resolution",
 ])
 def test_er_query_matches_oracle(spark, oracle, name):
+    _assert_matches(spark, oracle, name)
+
+
+@pytest.mark.parametrize("name", [
+    "ann_topk_bruteforce", "ann_topk_ivf", "ivf_kmeans_centroids",
+    "ann_topk_lsh",
+])
+def test_ann_query_matches_oracle(spark, oracle, name):
+    _assert_matches(spark, oracle, name)
+
+
+def _assert_matches(spark, oracle, name):
     line = check_correctness.compare(
         spark, oracle, SF, name, entry_mod.queries()[name],
         entry_mod.oracle_sql()[name])

@@ -13,6 +13,10 @@ scores or destroys a table:
 - set_jaccard: the one per-pair set-Jaccard expression (ER scoring,
   the entry queries and n-gram dedup) equals Jaccard over Python sets,
   including the identical, disjoint and empty-set edge cases.
+- the ANN cosine block kernel: raw cosines bit-identical to the native
+  cosine_from_norms on array<double> and array<float>, and the three
+  operators built on it return the rows of the per-pair native
+  composition they replaced, edge cases included.
 - swap_dir/recover_dir: a crash injected before ANY filesystem
   operation of the real swap_dir, over a SEQUENCE of versioned swaps,
   never loses the live table — after recover_dir the table exists and
@@ -24,6 +28,7 @@ scores or destroys a table:
 from __future__ import annotations
 
 import shutil
+import struct
 import tempfile
 from pathlib import Path
 
@@ -34,6 +39,7 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from go_dedupe_spark.functions.similarity import (
     _gram_coef,
@@ -42,6 +48,14 @@ from go_dedupe_spark.functions.similarity import (
     _jaro_winkler_batch,
     set_jaccard,
 )
+from go_dedupe_spark.operators.ann import (
+    _cosines,
+    _vectors,
+    cosine_topk_bruteforce,
+    cosine_topk_ivf,
+    train_ivf_centroids,
+)
+from go_dedupe_spark.operators.dedupe import cosine_from_norms, vec_norm_expr
 from go_dedupe_spark.plans.writeback import recover_dir, swap_dir
 
 # default hypothesis text() already excludes surrogates, so every
@@ -160,6 +174,212 @@ def test_set_jaccard_matches_python_sets(spark, pairs):
     # one Spark job per example: the whole batch of pairs in one frame
     assert _spark_jaccard(spark, pairs) == [_py_jaccard(a, b)
                                             for a, b in pairs]
+
+
+# ------------------------------------------------ ANN cosine kernel
+
+_NAN = float("nan")
+
+
+def _hof_cosine(a, b):
+    return cosine_from_norms(F.col(a), F.col(b), vec_norm_expr(a),
+                             vec_norm_expr(b))
+
+
+def _bits(v):
+    """A float's identity for bit-for-bit comparison (every NaN alike)."""
+    if v is None or v != v:
+        return v if v is None else "nan"
+    return struct.pack("<d", v)
+
+
+def _vec_pairs(width):
+    """Mostly equal-length pairs (the only ones with a dot product) of
+    plain floats, with specials, NULLs and a free-length partner mixed
+    in."""
+    plain = st.floats(-1e3, 1e3, width=width)
+    elem = st.one_of(plain, plain, plain,
+                     st.sampled_from([0.0, -0.0, _NAN]), st.none())
+
+    def pair(n):
+        vec = st.lists(elem, min_size=n, max_size=n)
+        other = st.one_of(vec, vec, st.none(), st.lists(elem, max_size=5))
+        return st.tuples(vec, other)
+
+    return st.lists(st.integers(0, 5).flatmap(pair), min_size=1,
+                    max_size=10)
+
+
+# one explicit example per HOF edge case: zero vectors, +-0.0, cosines
+# that tie at 6 dp, a NULL vector (0.0), a NULL element (0.0),
+# mismatched lengths (NULL) and NaN elements (NaN); first, products that
+# round differently in float and in double
+_EDGE_PAIRS = [
+    ([0.1, 0.7, 1.3], [0.3, 0.9, 2.2]),
+    ([1e-3, 3.3, -7.77], [5.5, -0.01, 2.2]),
+    ([0.0, 0.0], [0.0, 0.0]),
+    ([0.0, 0.0], [1.0, 2.0]),
+    ([-0.0, 0.0], [0.0, -0.0]),
+    ([-0.0, 1.0], [0.0, -1.0]),
+    ([1.0, 1e-4], [1.0, 0.0]),
+    ([1.0, 1.1e-4], [1.0, 0.0]),
+    (None, [1.0, 2.0]),
+    ([1.0, None], [1.0, 2.0]),
+    ([1.0, 2.0, 3.0], [1.0, 2.0]),
+    ([], [1.0]),
+    ([_NAN, 1.0], [1.0, 2.0]),
+    ([], []),
+]
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(data=st.data(), etype=st.sampled_from(["double", "float"]))
+@example(data=None, etype="double")
+@example(data=None, etype="float")
+def test_cosine_kernel_bit_identical_to_hof(spark, data, etype):
+    """The numpy block kernel's raw cosine equals cosine_from_norms bit
+    for bit (NULL and NaN included), on array<double> and array<float>
+    input; a pair whose norm product underflows raises in both."""
+    pairs = (_EDGE_PAIRS if data is None else
+             data.draw(_vec_pairs(64 if etype == "double" else 32)))
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        f"i long, a array<{etype}>, b array<{etype}>")
+    t = df.toArrow()
+    n = len(pairs)
+    try:
+        cos, null = _cosines(_vectors(t["i"], t["a"]),
+                             _vectors(t["i"], t["b"]),
+                             skip=~np.eye(n, dtype=bool))
+    except ArithmeticError:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            df.select(_hof_cosine("a", "b")).collect()
+        return
+    want = [_bits(r["c"]) for r in
+            df.select("i", _hof_cosine("a", "b").alias("c"))
+            .orderBy("i").collect()]
+    got = [None if null[i, i] else _bits(float(cos[i, i])) for i in range(n)]
+    assert got == want
+
+
+def _hof_bruteforce(items, queries, k):
+    """The per-pair native composition the kernel replaced."""
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec"))
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      F.col("embedding").alias("ivec"))
+    scored = it.crossJoin(q).where(F.col("query_id") != F.col("item_id")) \
+        .select("query_id", "item_id",
+                F.round(_hof_cosine("qvec", "ivec"), 6).alias("cosine"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "item_id")
+    return scored.withColumn("rank", F.row_number().over(w)) \
+        .where(F.col("rank") <= k)
+
+
+def _hof_nearest(left, lid, lvec, cents, n):
+    w = Window.partitionBy(lid).orderBy(F.desc("ccos"), "cid")
+    return (left.crossJoin(cents)
+            .withColumn("ccos", F.round(_hof_cosine(lvec, "cvec"), 6))
+            .withColumn("_r", F.row_number().over(w))
+            .where(F.col("_r") <= n).drop("_r", "ccos", "cvec"))
+
+
+def _hof_ivf(items, queries, centroids, k, nprobe):
+    c = centroids.select(F.col("vec_id").alias("cid"),
+                         F.col("embedding").alias("cvec"))
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      F.col("embedding").alias("ivec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec"))
+    joined = _hof_nearest(it, "item_id", "ivec", c, 1) \
+        .join(_hof_nearest(q, "query_id", "qvec", c, nprobe), "cid") \
+        .where(F.col("query_id") != F.col("item_id"))
+    scored = joined.select(
+        "query_id", "item_id",
+        F.round(_hof_cosine("qvec", "ivec"), 6).alias("cosine"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "item_id")
+    return scored.withColumn("rank", F.row_number().over(w)) \
+        .where(F.col("rank") <= k)
+
+
+def _hof_train(items, k, iters):
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      F.col("embedding").alias("ivec"))
+    c = (it.withColumn("cid", F.md5(F.col("item_id").cast("string")))
+         .orderBy("cid").limit(k).select("cid", F.col("ivec").alias("cvec"))
+         .localCheckpoint(eager=True))
+    for _ in range(iters):
+        m = (_hof_nearest(it, "item_id", "ivec", c, 1)
+             .select("cid", F.posexplode("ivec").alias("pos", "val"))
+             .groupBy("cid", "pos").agg(F.avg("val").alias("m"))
+             .groupBy("cid")
+             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+             .select("cid", F.transform("pm", lambda s: s["m"]).alias("mv")))
+        norm = F.sqrt(F.aggregate(F.transform("mv", lambda x: x * x),
+                                  F.lit(0.0), lambda a, x: a + x))
+        c = m.select("cid", F.when(norm > 0, F.transform(
+            "mv", lambda x: F.round(x / norm, 6))).otherwise(F.col("mv"))
+            .alias("cvec")).localCheckpoint(eager=True)
+    return c.select("cid", F.col("cvec").alias("embedding"))
+
+
+def _rows(df):
+    def cell(v):
+        if isinstance(v, list):
+            return tuple(cell(x) for x in v)
+        return "nan" if isinstance(v, float) and v != v else v
+    return sorted((tuple(cell(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def edge_vectors(spark):
+    """Every HOF edge case as a row, plus duplicates, 6-dp ties and a
+    random bulk so that k cuts somewhere."""
+    rng = np.random.default_rng(17)
+    edge = [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0],          # duplicates
+            [1.0, 1e-4, 0.0], [1.0, 1.1e-4, 0.0],     # tie at 6 dp
+            [0.0, 0.0, 0.0], [-0.0, 0.0, -0.0],       # zero, +-0.0
+            None, [1.0, None, 0.0],                   # NULL vec / elem
+            [1.0, 2.0], [_NAN, 1.0, 0.0]]             # length, NaN
+    bulk = rng.normal(size=(30, 3)).round(3).tolist()
+    return spark.createDataFrame(list(enumerate(edge + bulk)),
+                                 "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("k", [3, 100])
+def test_topk_operators_match_hof_on_edge_vectors(spark, edge_vectors, k):
+    """cosine_topk_bruteforce and cosine_topk_ivf return the same rows
+    as the native per-pair composition they replaced, on a table of
+    every cosine edge case, with k below and above |items|, and on
+    empty items, queries and centroids."""
+    items = edge_vectors
+    queries = items.where("vec_id < 12 OR vec_id % 7 = 0")
+    empty = items.limit(0)
+    for it, q in [(items, queries), (empty, queries), (items, empty)]:
+        assert _rows(cosine_topk_bruteforce(it, q, k=k)) == \
+            _rows(_hof_bruteforce(it, q, k))
+    # the NaN centroid ties every query's probes (Spark ranks them all);
+    # the numeric set leaves most queries' probes decided by the kernel
+    cents = items.where("vec_id IN (0, 4, 6, 9, 15, 22, 31)")
+    numeric = items.where("vec_id IN (0, 2, 15, 22, 31)")
+    for it, q, c in [(items, queries, cents), (items, queries, numeric),
+                     (empty, queries, cents), (items, empty, cents),
+                     (items, queries, empty)]:
+        assert _rows(cosine_topk_ivf(it, q, c, k=k, nprobe=2)) == \
+            _rows(_hof_ivf(it, q, c, k, 2))
+
+
+def test_train_ivf_centroids_matches_hof_on_edge_vectors(spark, edge_vectors):
+    """train_ivf_centroids returns the centroids of the native per-pair
+    assignment it replaced: on the edge-case table (its NaN row turns
+    every centroid it joins NaN), without the NULL/NaN/short rows, and
+    on no items."""
+    items = edge_vectors
+    for it in (items, items.where("vec_id NOT IN (6, 7, 8, 9)"),
+               items.limit(0)):
+        assert _rows(train_ivf_centroids(it, k=4, iters=2)) == \
+            _rows(_hof_train(it, 4, 2))
 
 
 # ------------------------------------------- swap_dir crash injection
