@@ -368,13 +368,10 @@ QUALIFY rank <= 10
 def er_matches_topk(spark, sf_dir):
     """Top-k accepted matches per record (ancestors J2/J3/O1: ORDER BY
     distance LIMIT k + top-1 early break, vector/sqlite.go:391)."""
-    scores = _doc_scores(spark, sf_dir).where(F.col("score") >= ER_THRESHOLD)
-    w = Window.partitionBy("id_a").orderBy(F.desc("score"), "id_b")
-    return (
-        scores.select("id_a", "id_b", "score")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 10)
-    )
+    from go_dedupe_spark.operators.scoring import top_k_matches
+
+    return top_k_matches(er_scores(spark, sf_dir), k=10).select(
+        "id_a", "id_b", "score", F.col("rank").cast("long").alias("rank"))
 
 
 _COMPONENTS_SQL = f"""

@@ -1,4 +1,4 @@
-"""Stage 4 — pairwise scoring: ``pairs`` + ``records`` -> ``scores``.
+"""Stage 4 — pairwise scoring: ``pairs`` + ``features`` -> ``scores``.
 
 Ancestor: the kNN probe + threshold accept (vector/sqlite.go:368-437
 SQL at :378-391; MeetsThreshold :440-447; top-1 early break
@@ -12,6 +12,12 @@ deterministic features (north_star):
 
 composite:  score = 0.15*jw + 0.55*jaccard + 0.30*cosine
 match iff  jaccard >= JAC_FLOOR  AND  score >= threshold.
+
+Every pair is scored this one way and accepted against one threshold,
+as the reference does (MeetsThreshold, vector/sqlite.go:440-447); the
+default threshold is ``PipelineConfig.threshold``. ``build_features``
+runs once per record and ``score_pairs`` takes its (checkpointed)
+output — plans.pipeline materializes it as its own stage.
 
 TWO-PHASE EXECUTION — the scale-critical design (the distributed analog
 of the reference's per-record early break, compare/geohash.go:184-186):
@@ -27,11 +33,18 @@ of the reference's per-record early break, compare/geohash.go:184-186):
            strings + 128-dim hashed-n-gram vectors) and run the Arrow
            UDF. Bytes through the wide join drop by the same >90%.
 
-Weights + thresholds calibrated on the labeled synthetic fixtures
+Weights + threshold calibrated on the labeled synthetic fixtures
 (tests/test_pipeline.py::test_f1_on_labeled_same_block_pairs):
 3-token-shingle Jaccard separates near duplicates (>=0.16) from
 hard negatives (0.0) perfectly; composite margins: near >= 0.50,
 hard-negative <= 0.40.
+
+The weights sum to exactly 1.0 in double, so the composite is the
+plain weighted sum (no normalizing division).
+
+The bench/oracle entry queries (entry_queries._doc_scores) keep their
+own two-feature composite on purpose: it is the Spark twin of a DuckDB
+SQL oracle, and the hashed n-gram cosine here has no SQL twin.
 """
 
 from __future__ import annotations
@@ -41,7 +54,6 @@ from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.similarity import (
     hashed_ngram_vector_udf,
-    jaro_winkler_udf,
     path_vec_scores_udf,
     set_jaccard,
     token_shingles,
@@ -51,7 +63,6 @@ from go_dedupe_spark.functions.similarity import (
 W_JW = 0.15
 W_JACCARD = 0.55
 W_COSINE = 0.30
-DEFAULT_THRESHOLD = 0.45
 JAC_FLOOR = 0.10
 SHINGLE_N = 3
 
@@ -65,7 +76,7 @@ def _shingle_hash32(shingles):
     )
 
 
-def build_features(records: DataFrame, with_cosine: bool = True) -> DataFrame:
+def build_features(records: DataFrame) -> DataFrame:
     """Per-record scoring features, computed ONCE: (id, path,
     content_sha256, toks [distinct int32 shingle hashes], n_toks [their
     count], ngram_vec [float32, normalized]).
@@ -88,34 +99,28 @@ def build_features(records: DataFrame, with_cosine: bool = True) -> DataFrame:
     return base.select(
         "id", "path", "content_sha256", "toks",
         F.size("toks").alias("n_toks"),
-        (hashed_ngram_vector_udf(F.col("content")) if with_cosine
-         else F.lit(None).cast("array<float>")).alias("ngram_vec"),
+        hashed_ngram_vector_udf(F.col("content")).alias("ngram_vec"),
     )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    records: DataFrame | None = None,
-    threshold: float = DEFAULT_THRESHOLD,
-    with_cosine: bool = True,
-    jac_floor: float = JAC_FLOOR,
-    features: DataFrame | None = None,
-) -> DataFrame:
-    """-> scores(id_a, id_b, block_key, jw_path, jaccard_content,
-    cosine_ngram, score, is_match, decided_by).
+def score_pairs(pairs: DataFrame, features: DataFrame,
+                threshold: float) -> DataFrame:
+    """pairs + ``build_features`` output -> scores(id_a, id_b,
+    block_key, jw_path, jaccard_content, cosine_ngram, score, is_match,
+    decided_by).
 
     Rows decided at phase 1 carry NULL jw_path/cosine_ngram, a
     lower-bound score (W_JACCARD * jaccard) and decided_by =
     'jaccard_floor'; phase-2 rows carry full features and decided_by
     'exact' (byte-identical content) or 'full'.
 
+    Pass ``features`` materialized (localCheckpoint or a checkpoint
+    table): each phase joins it twice, and a lazy frame re-runs the
+    vector UDF per join side.
+
     The feature sides join by shuffle, not broadcast: a broadcast was
     measured slower even where it fits, and cannot fit at corpus scale
     (there, bucket records+pairs on id to co-locate instead)."""
-    if features is None:
-        # not checkpointed by the caller -> cut the plan here so the
-        # vector UDF evaluates once, not once per join side
-        features = build_features(records, with_cosine).localCheckpoint(eager=True)
     par = pairs.sparkSession.sparkContext.defaultParallelism
 
     # ---------------- phase 1: compact Jaccard + floor decision
@@ -130,7 +135,7 @@ def score_pairs(
                 set_jaccard("toks_a", "toks_b", "n_a", "n_b")
                 .alias("jaccard_content"))
     )
-    floor_neg = p1.where(F.col("jaccard_content") < jac_floor).select(
+    floor_neg = p1.where(F.col("jaccard_content") < JAC_FLOOR).select(
         "id_a", "id_b", "block_key",
         F.lit(None).cast("double").alias("jw_path"),
         "jaccard_content",
@@ -139,7 +144,7 @@ def score_pairs(
         F.lit(False).alias("is_match"),
         F.lit("jaccard_floor").alias("decided_by"),
     )
-    survivors = p1.where(F.col("jaccard_content") >= jac_floor)
+    survivors = p1.where(F.col("jaccard_content") >= JAC_FLOOR)
 
     # ---------------- phase 2: heavy features for floor survivors only
     wide = features.select("id", "path", "content_sha256", "ngram_vec")
@@ -149,36 +154,24 @@ def score_pairs(
     b2 = wide.select(F.col("id").alias("id_b"), F.col("path").alias("path_b"),
                      F.col("content_sha256").alias("sha_b"),
                      F.col("ngram_vec").alias("vec_b"))
-    j2 = survivors.join(a2, "id_a").join(b2, "id_b")
+    j2 = survivors.join(a2, "id_a").join(b2, "id_b").withColumn(
+        "_uv", path_vec_scores_udf(
+            F.col("path_a"), F.col("path_b"), F.col("vec_a"), F.col("vec_b")))
 
     exact = F.col("sha_a") == F.col("sha_b")
-    if with_cosine:
-        uv = path_vec_scores_udf(
-            F.col("path_a"), F.col("path_b"), F.col("vec_a"), F.col("vec_b")
-        )
-        j2 = j2.withColumn("_uv", uv)
-        jw = F.when(exact, F.lit(1.0)).otherwise(F.col("_uv.jw"))
-        cos = F.when(exact, F.lit(1.0)).otherwise(F.col("_uv.cos"))
-    else:
-        jw = F.when(exact, F.lit(1.0)).otherwise(
-            jaro_winkler_udf(F.col("path_a"), F.col("path_b"))
-        )
-        cos = F.lit(0.0)
-    jac2 = F.when(exact, F.lit(1.0)).otherwise(F.col("jaccard_content"))
-    w_cos = W_COSINE if with_cosine else 0.0
-    w_total = W_JW + W_JACCARD + w_cos
-
     scored2 = j2.select(
         "id_a", "id_b", "block_key",
-        jw.alias("jw_path"),
-        jac2.alias("jaccard_content"),
-        cos.alias("cosine_ngram"),
+        F.when(exact, F.lit(1.0)).otherwise(F.col("_uv.jw")).alias("jw_path"),
+        F.when(exact, F.lit(1.0)).otherwise(F.col("jaccard_content"))
+        .alias("jaccard_content"),
+        F.when(exact, F.lit(1.0)).otherwise(F.col("_uv.cos"))
+        .alias("cosine_ngram"),
         F.when(exact, F.lit("exact")).otherwise(F.lit("full")).alias("decided_by"),
     ).withColumn(
         "score",
-        (F.col("jw_path") * W_JW
-         + F.col("jaccard_content") * W_JACCARD
-         + F.col("cosine_ngram") * w_cos) / F.lit(w_total),
+        F.col("jw_path") * W_JW
+        + F.col("jaccard_content") * W_JACCARD
+        + F.col("cosine_ngram") * W_COSINE,
     ).withColumn("is_match", F.col("score") >= F.lit(threshold)) \
      .select("id_a", "id_b", "block_key", "jw_path", "jaccard_content",
              "cosine_ngram", "score", "is_match", "decided_by")
@@ -187,9 +180,11 @@ def score_pairs(
 
 
 def top_k_matches(scores: DataFrame, k: int = 10) -> DataFrame:
-    """Optional top-k per left record — the analog of the reference's
-    ``ORDER BY distance LIMIT k`` + top-1 early break (vector/sqlite.go:391,
-    compare/geohash.go:184-186). Window-ranked, JVM-side."""
+    """Top-k accepted matches (``is_match``) per left record, ranked by
+    score then id_b — the analog of the reference's ``ORDER BY distance
+    LIMIT k`` + top-1 early break (vector/sqlite.go:391,
+    compare/geohash.go:184-186). Window-ranked, JVM-side; the
+    ``er_matches_topk`` entry query is this over its own scores."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("id_a").orderBy(F.desc("score"), "id_b")

@@ -11,17 +11,14 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.similarity import word_tokens
 from go_dedupe_spark.operators.blocking import Band, make_blocks
-from go_dedupe_spark.operators.components import (
-    DRIVER_MAX_EDGES_DEFAULT as CC_DRIVER_MAX_EDGES,
-    connected_components,
-)
+from go_dedupe_spark.operators.components import connected_components
 from go_dedupe_spark.operators.normalize import normalize
 from go_dedupe_spark.operators.pairs import candidate_pairs
 from go_dedupe_spark.operators.resolve import resolve_clusters
@@ -38,16 +35,6 @@ class PipelineConfig:
     content_band_rows: int = 3
     max_block: int = 64
     salt_cap: int = 32
-    with_cosine: bool = True
-    cc_max_iter: int = 25
-    # driver union-find fast path bound — single source of truth (with
-    # the measured rationale) lives in operators.components
-    cc_driver_max_edges: int = CC_DRIVER_MAX_EDGES
-    # survivors' cluster-sized supersedes arrays (reference parity) —
-    # set False at corpus scale; edges stay on the loser rows
-    # (operators.resolve.resolve_clusters docstring)
-    supersedes_arrays: bool = True
-    extra: dict = field(default_factory=dict)
 
     def fingerprint(self) -> str:
         """Deterministic hash of every stage-relevant field. Folded into
@@ -55,7 +42,7 @@ class PipelineConfig:
         band geometry / max_block must NOT silently reuse stage outputs
         computed under the old config."""
         return hashlib.sha256(
-            json.dumps(asdict(self), sort_keys=True, default=str).encode()
+            json.dumps(asdict(self), sort_keys=True).encode()
         ).hexdigest()[:16]
 
     def bands(self) -> list[Band]:
@@ -119,22 +106,17 @@ def run_pipeline(
                                 salt_cap=cfg.salt_cap),
         sort_by=["id_a", "id_b"],
     )
-    features = stage(
-        "features",
-        lambda: build_features(records, with_cosine=cfg.with_cosine),
-        sort_by=["id"],
-    )
+    features = stage("features", lambda: build_features(records),
+                     sort_by=["id"])
     scores = stage(
         "scores",
-        lambda: score_pairs(pairs, threshold=cfg.threshold,
-                            with_cosine=cfg.with_cosine, features=features),
+        lambda: score_pairs(pairs, features=features, threshold=cfg.threshold),
         sort_by=["id_a", "id_b"],
     )
     matches = scores.where("is_match").select("id_a", "id_b")
 
     def compute_components() -> DataFrame:
-        comp = connected_components(matches, max_iter=cfg.cc_max_iter,
-                                    driver_max_edges=cfg.cc_driver_max_edges)
+        comp = connected_components(matches)
         singletons = (
             records.select("id")
             .join(comp.select("id"), "id", "left_anti")
@@ -143,10 +125,7 @@ def run_pipeline(
         return comp.unionByName(singletons)
 
     components = stage("components", compute_components, sort_by=["id"])
-    resolution = stage(
-        "resolution",
-        lambda: resolve_clusters(components, records,
-                                 supersedes_arrays=cfg.supersedes_arrays),
-        sort_by=["cluster_id", "id"],
-    )
+    resolution = stage("resolution",
+                       lambda: resolve_clusters(components, records),
+                       sort_by=["cluster_id", "id"])
     return PipelineResult(records, blocks, pairs, scores, components, resolution)

@@ -157,7 +157,6 @@ def streaming_near_dup_pairs(
     salt_cap: int = 40,
     index_bucket_cap: int = 50,
     trigger_once: bool = True,
-    stats_dir: str | None = None,
     compact_every: int | None = None,
 ):
     """Streaming NEAR-dup detection — the streaming twin of the batch
@@ -179,10 +178,11 @@ def streaming_near_dup_pairs(
        philosophy as the salt cap (bounded recall, bounded cost).
        Per-batch incremental cost: one count-aggregate over the index
        (map-side combine, ~one long per block key) plus a window over
-       the BATCH only — never a re-rank of the full history. On a
-       cluster, bucketBy(block_key) the index table so the join
-       co-locates, and keep the per-key counts as a running table
-       instead of re-aggregating.
+       the BATCH only — never a re-rank of the full history. The
+       batch already scans the full index twice (this join and the
+       replay anti-join below), so the count is the third of three
+       index scans. On a cluster, bucketBy(block_key) the index table
+       so the joins co-locate.
     3. append new pairs to ``pairs_dir``, admitted band keys to the
        index.
 
@@ -196,48 +196,22 @@ def streaming_near_dup_pairs(
     parity: buckets never cross scopes, within a batch or across
     batches.
 
-    Index maintenance (VERDICT r4 missing #4):
+    Occupancy is always counted from the capped index itself, so it
+    cannot drift from what was admitted: a restart, a reset streaming
+    checkpoint or a replayed batch reads the same truth.
 
-    - ``stats_dir``: a running per-key occupancy table. Each batch
-      appends one (block_key, n, batch_id) delta row per admitted key
-      and reads occupancy from THIS table instead of count-aggregating
-      the full id-level index — the per-batch aggregate shrinks from
-      one row per (id, block_key) index entry to one row per
-      (block_key, batch) delta, and compaction (below) collapses the
-      deltas to one row per key. Parquet appends can't update in
-      place, so deltas-summed-on-read is the append-only equivalent of
-      a running-counts upsert; on a cluster make stats an Iceberg
-      table and MERGE. Two invariants keep stats from silently
-      UNDER-counting the index (which would let buckets grow past the
-      cap — the blowup the cap exists to prevent): (1) enabling
-      stats_dir over a pre-existing index first SEEDS the table with a
-      one-time full per-key count (batch_id = -1), so deltas always
-      cover the whole index; (2) the delta is appended BEFORE the
-      index append and occupancy reads take max(n) per (block_key,
-      batch_id) before summing, so an at-least-once replay of a batch
-      that crashed between the two writes leaves stats >= true index
-      occupancy — a bounded CONSERVATIVE error (a few cap slots
-      wasted), never an unbounded bucket.
-    - ``compact_every``: every N batches, rewrite ``index_dir`` to
-      ~sqrt(n_rows/64k) files and collapse ``stats_dir`` to one row
-      per key — a long-running stream otherwise accumulates one file
-      set per batch and the membership anti-join rereads them all.
-      The rewrite breaks lineage via localCheckpoint, writes the
-      compacted snapshot to a scratch dir, and atomically swaps it in
-      (writeback.swap_dir's two-rename shuffle; the between-renames
-      window is healed by recover_dir on the next read) — a crash at
-      any point leaves a complete copy of the index on disk.
-      foreachBatch serializes batches so no reader races the swap.
-      On a cluster an Iceberg sink (plans.checkpoint.IcebergBackend)
-      is the catalog form; rewrite_data_files is this operation.
-    - Stats coverage is self-healing: each stats-enabled batch writes
-      a marker row, and a batch that finds markers missing for prior
-      batches (stats_dir was toggled off and back on) re-seeds the
-      table from a full index count instead of silently
-      under-counting. Do NOT reset the streaming checkpoint (which
-      restarts batch ids at 0) while keeping an old stats_dir — batch
-      id collisions would make replay-dedup treat new deltas as
-      replays; reset both together.
+    Index maintenance (VERDICT r4 missing #4): ``compact_every``
+    rewrites ``index_dir`` every N batches to ~sqrt(n_rows/64k) files —
+    a long-running stream otherwise accumulates one file set per batch
+    and every index scan rereads them all. The rewrite breaks lineage
+    via localCheckpoint, writes the compacted snapshot to a scratch
+    dir, and atomically swaps it in (writeback.swap_dir's two-rename
+    shuffle; the between-renames window is healed by recover_dir on
+    the next read) — a crash at any point leaves a complete copy of
+    the index on disk. foreachBatch serializes batches so no reader
+    races the swap. On a cluster an Iceberg sink
+    (plans.checkpoint.IcebergBackend) is the catalog form;
+    rewrite_data_files is this operation.
 
     Pairs schema: (id_a, id_b, batch_id) with id_a < id_b. Returns the
     StreamingQuery."""
@@ -379,115 +353,17 @@ def streaming_near_dup_pairs(
             fresh = keyed.join(idx, ["id", "block_key"], "left_anti")
         admitted = fresh.withColumn("_r", F.row_number().over(w_new))
         if have_index:
-            stats = read_or_none(stats_dir) if stats_dir else None
-            # batch 0 over an existing stats table is a restarted stream
-            # (or batch 0 replayed): reseed. The max_b checks below
-            # cannot see a reset whose prior stream wrote <= 2 batches —
-            # its ids 0..1 overlap the new stream's exactly.
-            need_seed = bool(stats_dir) and (stats is None or batch_id == 0)
-            if stats is not None and batch_id > 0:
-                # coverage-gap check (ADVICE r5): every stats-enabled
-                # batch appends at least a MARKER row (below), so in
-                # healthy operation max(batch_id) in stats is the
-                # previous batch (or this one, on a replay). A smaller
-                # max means some batches ran with stats_dir disabled —
-                # their admits are in the index but uncounted, the
-                # exact unbounded-bucket drift the table exists to
-                # prevent. Re-seed from the full index. One scalar
-                # collect per batch over the small stats table.
-                # max_b > batch_id is the checkpoint-RESET signature
-                # (ADVICE r6): a restarted stream over a kept stats_dir
-                # re-numbers batches from 0, so the old per-batch
-                # deltas belong to batches this stream never counted —
-                # replay-dedup's max(n)-per-(key,batch) would silently
-                # under-count occupancy. Detectable in this same scalar
-                # collect; the replacing re-seed self-heals in one
-                # batch.
-                max_b = stats.agg(F.max("batch_id")).first()[0]
-                if max_b is None or max_b < batch_id - 1 \
-                        or max_b > batch_id:
-                    need_seed = True
-            if need_seed:
-                # seed (or RE-seed) the running table with the full
-                # per-key index count, batch_id = -1, REPLACING any
-                # prior contents — after a coverage gap the old deltas
-                # overlap the full count and appending would double-
-                # count. The scratch-write + two-rename swap makes the
-                # replacement crash-atomic: a driver death leaves
-                # either the old table, the old plus a stale scratch,
-                # or the new — never a partial seed (recover_dir heals
-                # the between-renames window on the next read).
-                # coalesce(1): one task for a one-time per-key
-                # aggregate, and one file to rename.
-                seed = (
-                    idx.groupBy("block_key")
-                    .agg(F.count("*").alias("n"))
-                    .withColumn("batch_id", F.lit(-1).cast("long"))
-                    .coalesce(1)
-                )
-                sp = Path(stats_dir)
-                staging = sp.with_name(sp.name + ".seeding")
-                seed.write.mode("overwrite").parquet(str(staging))
-                swap_dir(staging, sp)
-                stats = read_or_none(stats_dir)
-            if stats is not None:
-                # running-counts table: sum the per-batch deltas —
-                # rows ~ (keys x batches-since-compaction), never the
-                # id-level index. max(n) per (block_key, batch_id)
-                # first: a replayed batch appends a second delta row
-                # under the same batch_id, which must not double-count.
-                occupancy = (
-                    stats.groupBy("block_key", "batch_id")
-                    .agg(F.max("n").alias("_bn"))
-                    .groupBy("block_key").agg(F.sum("_bn").alias("_n_old"))
-                )
-            else:
-                occupancy = idx.groupBy("block_key").agg(
-                    F.count("*").alias("_n_old"))
+            occupancy = idx.groupBy("block_key").agg(
+                F.count("*").alias("_n_old"))
             admitted = admitted.join(occupancy, "block_key", "left") \
                 .withColumn("_r", F.col("_r") + F.coalesce("_n_old", F.lit(0)))
-        adm = _tracked_ckpt(
-            admitted.where(F.col("_r") <= index_bucket_cap)
-            .select("id", "block_key"), tracked)
-        # delta BEFORE the index append: a crash between the two writes
-        # then replays with stats >= index occupancy (conservative; the
-        # orphan delta's slots are wasted, the cap is never exceeded).
-        # The reverse order would leave stats UNDER-counting forever.
-        # Every stats-enabled batch also appends one MARKER row
-        # (block_key = "", n = 0) even when nothing was admitted, so
-        # the coverage-gap check above can tell "previous batch wrote
-        # stats" from "stats was disabled for it". The empty key never
-        # matches a real band key (all are 'lsh'-prefixed), sums to 0,
-        # and compaction collapses markers to one row carrying
-        # max(batch_id) — coverage survives compaction.
-        if stats_dir:
-            marker = spark.createDataFrame(
-                [("", 0, batch_id)],
-                "block_key string, n long, batch_id long")
-            adm.groupBy("block_key").agg(F.count("*").alias("n")) \
-                .withColumn("batch_id", F.lit(batch_id).cast("long")) \
-                .unionByName(marker) \
-                .write.mode("append").parquet(stats_dir)
-        adm.write.mode("append").parquet(index_dir)
+        admitted.where(F.col("_r") <= index_bucket_cap) \
+            .select("id", "block_key") \
+            .write.mode("append").parquet(index_dir)
 
         if compact_every and (batch_id + 1) % compact_every == 0:
-            for path, collapse in ((index_dir, False), (stats_dir, True)):
-                if not path:
-                    continue
-                cur = read_or_none(path)
-                if cur is None:
-                    continue
-                if collapse:
-                    # same max-per-(key, batch) dedup as the occupancy
-                    # read, so replay-duplicated deltas collapse to the
-                    # conservative count instead of summing twice
-                    cur = (
-                        cur.groupBy("block_key", "batch_id")
-                        .agg(F.max("n").alias("n"))
-                        .groupBy("block_key")
-                        .agg(F.sum("n").alias("n"),
-                             F.max("batch_id").alias("batch_id"))
-                    )
+            cur = read_or_none(index_dir)
+            if cur is not None:
                 snap = _tracked_ckpt(cur, tracked)      # break lineage
                 nf = max(1, int((snap.count() / 65536) ** 0.5))
                 # crash-atomic rewrite (VERDICT r5 wrong #1): plain
@@ -502,7 +378,7 @@ def streaming_near_dup_pairs(
                 # between-renames window). Iceberg's
                 # rewrite_data_files is the cluster-catalog form of
                 # this same operation.
-                p = Path(path)
+                p = Path(index_dir)
                 staging = p.with_name(p.name + ".compacting")
                 snap.repartition(nf).write.mode("overwrite") \
                     .parquet(str(staging))

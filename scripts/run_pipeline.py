@@ -31,7 +31,6 @@ def main() -> None:
                     help="input snapshot id (e.g. Iceberg snapshot) for resume keying")
     ap.add_argument("--threshold", type=float, default=None)
     ap.add_argument("--max-block", type=int, default=None)
-    ap.add_argument("--no-cosine", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -46,8 +45,6 @@ def main() -> None:
         kwargs["threshold"] = args.threshold
     if args.max_block is not None:
         kwargs["max_block"] = args.max_block
-    if args.no_cosine:
-        kwargs["with_cosine"] = False
     cfg = PipelineConfig(**kwargs)
 
     files = spark.read.parquet(args.input)

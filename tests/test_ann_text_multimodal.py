@@ -811,198 +811,6 @@ def test_streaming_near_dup_index_capped_at_write(spark, tmp_path):
     assert all(i.startswith("a") for i in ids)
 
 
-def test_streaming_near_dup_stats_and_compaction(spark, tmp_path):
-    """VERDICT r4 missing #4 — index maintenance. A 3-batch stream run
-    twice, default path vs stats_dir + compact_every=2, with a tight
-    index_bucket_cap so ADMISSION DEPENDS on the occupancy numbers:
-    identical pairs and identical index content prove the running-stats
-    deltas are read and correct; after compaction the stats table holds
-    one row per key matching the true index occupancy, and the index
-    dir holds fewer part files than the append-per-batch run."""
-    from pyspark.sql import functions as F
-
-    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
-
-    text = "identical shared boilerplate text in every single document"
-    batches = [
-        [(f"{b}{i:02d}", text) for i in range(4)] for b in ("a", "b", "c")
-    ]
-
-    def run(tag, **kw):
-        src = tmp_path / f"{tag}_src"
-        for j, rows in enumerate(batches):
-            spark.createDataFrame(rows, ["doc_id", "text"]) \
-                .repartition(1).write.parquet(str(src / f"f{j}"))
-        stream = (spark.readStream
-                  .schema("doc_id string, text string")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(src / "*")))
-        q = streaming_near_dup_pairs(
-            stream,
-            index_dir=str(tmp_path / f"{tag}_index"),
-            pairs_dir=str(tmp_path / f"{tag}_pairs"),
-            checkpoint_dir=str(tmp_path / f"{tag}_ck"),
-            num_hashes=4, band_rows=2, index_bucket_cap=6, **kw)
-        q.awaitTermination(180)
-        pairs = {(r["id_a"], r["id_b"]) for r in
-                 spark.read.parquet(str(tmp_path / f"{tag}_pairs")).collect()}
-        index = {(r["id"], r["block_key"]) for r in
-                 spark.read.parquet(str(tmp_path / f"{tag}_index")).collect()}
-        nfiles = len(list((tmp_path / f"{tag}_index").glob("part-*")))
-        return pairs, index, nfiles
-
-    p0, i0, f0 = run("plain")
-    p1, i1, f1 = run("maint", stats_dir=str(tmp_path / "maint_stats"),
-                     compact_every=2)
-    assert p1 == p0                         # pair set identical
-    assert i1 == i0                         # admission decisions identical
-    assert f1 < f0                          # compaction shrank the file count
-
-    stats = spark.read.parquet(str(tmp_path / "maint_stats"))
-    # block_key == "" rows are per-batch coverage MARKERS (n = 0),
-    # never real occupancy — exclude them from the truth comparison
-    occ = {r["block_key"]: r["n"] for r in
-           stats.where(F.col("block_key") != "")
-           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
-    truth = {r["block_key"]: r["n"] for r in
-             spark.read.parquet(str(tmp_path / "maint_index"))
-             .groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert occ == truth                     # running counts == index truth
-    # every batch wrote its coverage marker; compaction collapsed the
-    # earlier ones keeping max(batch_id)
-    marker_batches = {r["batch_id"] for r in
-                      stats.where(F.col("block_key") == "").collect()}
-    assert max(marker_batches) == 2
-    # compaction at batch 2 collapsed deltas; batch 3 added at most one
-    # delta row per key afterwards
-    per_key_rows = (stats.groupBy("block_key").count()
-                    .agg(F.max("count")).collect()[0][0])
-    assert per_key_rows <= 2
-
-
-def test_streaming_near_dup_stats_seeded_on_existing_index(spark, tmp_path):
-    """Enabling stats_dir on a RESTARTED stream whose index already has
-    pre-stats batches must seed the running table with the full per-key
-    index count (batch_id=-1) — otherwise occupancy omits every
-    pre-stats row and each batch re-admits up to the cap per key,
-    unbounding the buckets the cap exists to bound. Admission decisions
-    must equal an all-plain run's, and stats occupancy must equal true
-    index occupancy."""
-    from pyspark.sql import functions as F
-
-    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
-
-    text = "identical shared boilerplate text in every single document"
-    batches = [
-        [(f"{b}{i:02d}", text) for i in range(4)] for b in ("a", "b", "c")
-    ]
-
-    def start(tag, nfiles, **kw):
-        src = tmp_path / f"{tag}_src"
-        for j in range(nfiles):
-            out = src / f"f{j}"
-            if not out.exists():
-                spark.createDataFrame(batches[j], ["doc_id", "text"]) \
-                    .repartition(1).write.parquet(str(out))
-        stream = (spark.readStream
-                  .schema("doc_id string, text string")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(src / "*")))
-        q = streaming_near_dup_pairs(
-            stream,
-            index_dir=str(tmp_path / f"{tag}_index"),
-            pairs_dir=str(tmp_path / f"{tag}_pairs"),
-            checkpoint_dir=str(tmp_path / f"{tag}_ck"),
-            num_hashes=4, band_rows=2, index_bucket_cap=6, **kw)
-        q.awaitTermination(180)
-
-    # reference: all three batches with no stats table
-    start("ref", 3)
-    # restart path: two batches plain, then stats_dir enabled for batch 3
-    start("re", 2)
-    stats_dir = str(tmp_path / "re_stats")
-    start("re", 3, stats_dir=stats_dir)
-
-    def index_of(tag):
-        return {(r["id"], r["block_key"]) for r in
-                spark.read.parquet(str(tmp_path / f"{tag}_index")).collect()}
-
-    assert index_of("re") == index_of("ref")   # admission identical
-    stats = spark.read.parquet(stats_dir)
-    # the seed row set carries batch_id = -1
-    assert stats.where(F.col("batch_id") == -1).count() > 0
-    occ = {r["block_key"]: r["n"] for r in
-           stats.where(F.col("block_key") != "")
-           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
-    truth = {r["block_key"]: r["n"] for r in
-             spark.read.parquet(str(tmp_path / "re_index"))
-             .groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert occ == truth
-
-
-def test_streaming_near_dup_replayed_delta_read_conservative(spark, tmp_path):
-    """The crash-replay contract: a batch that dies between its stats
-    append and its index append leaves an ORPHAN delta under its
-    batch_id; the retry appends another delta under the SAME batch_id.
-    Occupancy reads take max(n) per (block_key, batch_id) before
-    summing — the orphan is counted once (conservative: stats >= true
-    index occupancy, its slots wasted), not summed twice, and the cap
-    is never exceeded. Simulated by hand-appending a duplicate-batch_id
-    delta row between restarts."""
-    from pyspark.sql import functions as F
-
-    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
-
-    text = "identical shared boilerplate text in every single document"
-    batches = [
-        [(f"{b}{i:02d}", text) for i in range(4)] for b in ("a", "b", "c")
-    ]
-    stats_dir = str(tmp_path / "stats")
-
-    def start(nfiles):
-        src = tmp_path / "src"
-        for j in range(nfiles):
-            out = src / f"f{j}"
-            if not out.exists():
-                spark.createDataFrame(batches[j], ["doc_id", "text"]) \
-                    .repartition(1).write.parquet(str(out))
-        stream = (spark.readStream
-                  .schema("doc_id string, text string")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(str(src / "*")))
-        q = streaming_near_dup_pairs(
-            stream,
-            index_dir=str(tmp_path / "index"),
-            pairs_dir=str(tmp_path / "pairs"),
-            checkpoint_dir=str(tmp_path / "ck"),
-            num_hashes=4, band_rows=2, index_bucket_cap=12,
-            stats_dir=stats_dir)
-        q.awaitTermination(180)
-
-    start(2)                 # batches 0 and 1: 4 + 4 admitted per key
-    stats = spark.read.parquet(stats_dir)
-    # orphan: pretend batch 1's first (crashed) attempt admitted 6 per
-    # key before dying pre-index-append; its delta rows remain
-    stats.select("block_key").distinct() \
-        .withColumn("n", F.lit(6).cast(stats.schema["n"].dataType)) \
-        .withColumn("batch_id", F.lit(1).cast("long")) \
-        .write.mode("append").parquet(stats_dir)
-    start(3)                 # batch 2 under the poisoned stats table
-
-    idx = spark.read.parquet(str(tmp_path / "index"))
-    per_key = idx.groupBy("block_key").agg(F.count("*").alias("n"))
-    # cap never exceeded
-    assert per_key.where(F.col("n") > 12).count() == 0
-    # max-dedup read: occupancy = 4 + max(4, 6) = 10 -> batch 2 admits
-    # exactly 2 per key (a sum read would see 14 and admit 0; a true
-    # read would see 8 and admit 4)
-    batch2 = idx.where(F.col("id").startswith("c"))
-    got = {r["n"] for r in
-           batch2.groupBy("block_key").agg(F.count("*").alias("n"))
-           .collect()}
-    assert got == {2}
-
-
 def _near_dup_batches():
     text = "identical shared boilerplate text in every single document"
     return [
@@ -1041,6 +849,50 @@ def _near_dup_state(spark, tmp_path, tag):
     index = {(r["id"], r["block_key"]) for r in
              spark.read.parquet(str(tmp_path / f"{tag}_index")).collect()}
     return pairs, index
+
+
+def _assert_first_six_admitted(index):
+    """Every band key of the 3x4 identical-text fixture holds exactly
+    the first-arrived ids up to the cap of 6: a00-a03, then b00-b01."""
+    per_key: dict = {}
+    for doc, key in index:
+        per_key.setdefault(key, set()).add(doc)
+    want = {"a00", "a01", "a02", "a03", "b00", "b01"}
+    assert per_key and all(ids == want for ids in per_key.values())
+
+
+def test_streaming_near_dup_compaction(spark, tmp_path):
+    """VERDICT r4 missing #4 — index maintenance. A 3-batch stream run
+    twice, plain vs compact_every=2, with a tight index_bucket_cap so
+    ADMISSION DEPENDS on the occupancy counted over the compacted
+    index: identical pairs and identical index content, and the
+    compacted index dir holds fewer part files than the
+    append-per-batch run."""
+    _near_dup_start(spark, tmp_path, "plain", 3).awaitTermination(180)
+    _near_dup_start(spark, tmp_path, "maint", 3,
+                    compact_every=2).awaitTermination(180)
+    pairs, index = _near_dup_state(spark, tmp_path, "maint")
+    assert (pairs, index) == _near_dup_state(spark, tmp_path, "plain")
+    _assert_first_six_admitted(index)
+
+    def nfiles(tag):
+        return len(list((tmp_path / f"{tag}_index").glob("part-*")))
+
+    assert nfiles("maint") < nfiles("plain")
+
+
+def test_streaming_near_dup_stats_seeded_on_existing_index(spark, tmp_path):
+    """A RESTARTED stream over an index that earlier batches already
+    filled must count their rows toward the cap — otherwise each restart
+    re-admits up to the cap per key, unbounding the buckets the cap
+    exists to bound. Two batches, restart, third batch: admission
+    decisions must equal an uninterrupted 3-batch run's."""
+    _near_dup_start(spark, tmp_path, "ref", 3).awaitTermination(180)
+    _near_dup_start(spark, tmp_path, "re", 2).awaitTermination(180)
+    _near_dup_start(spark, tmp_path, "re", 3).awaitTermination(180)
+    index = _near_dup_state(spark, tmp_path, "re")[1]
+    assert index == _near_dup_state(spark, tmp_path, "ref")[1]
+    _assert_first_six_admitted(index)
 
 
 def test_streaming_near_dup_compaction_crash_atomic(spark, tmp_path,
@@ -1121,8 +973,8 @@ def test_streaming_near_dup_swap_window_healed(spark, tmp_path):
 
 def _reset_run(spark, tmp_path, tag, prefixes, cap):
     """One near-dup stream over 4-doc batches of identical text (one
-    batch per prefix) with its own checkpoint, into the ``rs_`` index,
-    pairs and stats tables that every stream of a test shares."""
+    batch per prefix) with its own checkpoint, into the ``rs_`` index
+    and pairs tables that every stream of a test shares."""
     from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
 
     text = "identical shared boilerplate text in every single document"
@@ -1143,94 +995,56 @@ def _reset_run(spark, tmp_path, tag, prefixes, cap):
         index_dir=str(tmp_path / "rs_index"),
         pairs_dir=str(tmp_path / "rs_pairs"),
         checkpoint_dir=str(tmp_path / f"{tag}_ck"),
-        num_hashes=4, band_rows=2, index_bucket_cap=cap,
-        stats_dir=str(tmp_path / "rs_stats"))
+        num_hashes=4, band_rows=2, index_bucket_cap=cap)
     q.awaitTermination(180)
 
 
-def _assert_reset_cap_and_stats(spark, tmp_path, cap):
+def _assert_reset_cap(spark, tmp_path, cap):
     idx = spark.read.parquet(str(tmp_path / "rs_index"))
-    truth = {r["block_key"]: r["n"] for r in
-             idx.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert max(truth.values()) <= cap
-    stats = spark.read.parquet(str(tmp_path / "rs_stats"))
-    occ = {r["block_key"]: r["n"] for r in
-           stats.where(F.col("block_key") != "")
-           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
-    assert occ == truth
+    per_key = idx.groupBy("block_key").agg(F.count("*").alias("n"))
+    assert per_key.agg(F.max("n")).first()[0] == cap
 
 
 def test_streaming_near_dup_stats_checkpoint_reset_reseeded(spark, tmp_path):
     """ADVICE r6 — a RESTARTED stream (fresh streaming checkpoint) over
-    a kept index + stats_dir re-numbers batches from 0; its per-batch
-    delta rows collide with the old stream's same-numbered rows and
-    replay-dedup's max(n)-per-(key,batch) silently under-counts
-    occupancy, over-admitting past the bucket cap. The restarted
-    stream's batch 0 must reseed from the index and self-heal.
+    a kept index re-numbers batches from 0. Occupancy must still count
+    every row the old stream admitted, so the bucket cap holds across
+    the reset.
 
-    Shape: stream A (3 batches, cap 20) admits 12 docs and leaves
-    deltas for batch ids 0..2. Stream B over 12 NEW docs with a fresh
-    checkpoint re-runs ids 0..2; its deltas collide with A's. Without
-    the reseed, occupancy reads 16 where 20 were admitted and batch 2
-    admits 4 past the cap (24 > 20)."""
+    Shape: stream A (3 batches, cap 20) admits 12 docs per key. Stream
+    B over 12 NEW docs with a fresh checkpoint re-runs ids 0..2 and may
+    fill only the 8 slots left: every key ends at exactly 20."""
     _reset_run(spark, tmp_path, "rsa", ["a", "b", "c"], 20)   # A: ids 0..2
     _reset_run(spark, tmp_path, "rsb", ["d", "e", "g"], 20)   # B: ids 0..2
-    # the cap must hold and the running counts must equal the index
-    _assert_reset_cap_and_stats(spark, tmp_path, 20)
+    _assert_reset_cap(spark, tmp_path, 20)
 
 
 @pytest.mark.parametrize("prior", [1, 2])
 def test_streaming_near_dup_stats_short_stream_reset_reseeded(
         spark, tmp_path, prior):
-    """ADVICE r7 #1 — a restart over a prior stream of <= 2 batches:
-    the new stream's batch ids overlap the old ones exactly, so
-    max(batch_id) never exceeds the current id and the reset used to
-    go unseen. Stream A writes ``prior`` batches (4 docs per key each);
-    stream B, with a fresh checkpoint, writes 2 under cap 4*prior + 6.
-    Without the batch-0 reseed B's batch-0 delta collides with A's,
-    batch 1 reads occupancy 4 short and admits all 4 docs
-    (4*prior + 8 > cap)."""
+    """ADVICE r7 #1 — a restart over a prior stream of <= 2 batches,
+    whose batch ids the new stream's overlap exactly. Stream A writes
+    ``prior`` batches (4 docs per key each); stream B, with a fresh
+    checkpoint, writes 2 under cap 4*prior + 6: its batch 1 may admit
+    only 2 of its 4 docs, so every key ends at exactly the cap."""
     cap = 4 * prior + 6
     _reset_run(spark, tmp_path, "rsa", ["a", "b"][:prior], cap)
     _reset_run(spark, tmp_path, "rsb", ["d", "e"], cap)
-    _assert_reset_cap_and_stats(spark, tmp_path, cap)
+    _assert_reset_cap(spark, tmp_path, cap)
 
 
 def test_streaming_near_dup_stats_gap_reseeded(spark, tmp_path):
-    """ADVICE r5 — stats_dir toggled off and back on over a live index
-    must not under-count: batch 0 runs WITH stats, batch 1 WITHOUT
-    (its admissions land in the index uncounted), batch 2 with stats
-    re-enabled. The coverage-gap check (missing batch-1 marker) must
-    re-seed the table from the full index, so batch 2's admissions
-    equal an all-plain run's — without the re-seed batch 2 would see
-    occupancy 4, admit 2 more per key, and blow the cap."""
-    # reference: no stats anywhere
-    q = _near_dup_start(spark, tmp_path, "gref", 3)
-    q.awaitTermination(180)
-    _, ref_index = _near_dup_state(spark, tmp_path, "gref")
-
-    stats_dir = str(tmp_path / "gap_stats")
-    q = _near_dup_start(spark, tmp_path, "gap", 1, stats_dir=stats_dir)
-    q.awaitTermination(180)                      # batch 0: stats on
-    q = _near_dup_start(spark, tmp_path, "gap", 2)
-    q.awaitTermination(180)                      # batch 1: stats OFF
-    q = _near_dup_start(spark, tmp_path, "gap", 3, stats_dir=stats_dir)
-    q.awaitTermination(180)                      # batch 2: stats back on
-
-    _, got_index = _near_dup_state(spark, tmp_path, "gap")
-    assert got_index == ref_index                # admission identical
-    stats = spark.read.parquet(stats_dir)
-    # the gap triggered a REPLACING re-seed: batch 0's deltas are gone,
-    # one full-count seed row set (batch_id = -1) covers the index
-    assert stats.where(F.col("batch_id") == 0).count() == 0
-    assert stats.where(F.col("batch_id") == -1).count() > 0
-    occ = {r["block_key"]: r["n"] for r in
-           stats.where(F.col("block_key") != "")
-           .groupBy("block_key").agg(F.sum("n").alias("n")).collect()}
-    truth = {r["block_key"]: r["n"] for r in
-             spark.read.parquet(str(tmp_path / "gap_index"))
-             .groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert occ == truth
+    """ADVICE r5 — a stream stopped and restarted after EVERY batch
+    must admit exactly what one uninterrupted run admits: each restart
+    counts the occupancy the earlier runs left in the index (without
+    it batch 2 would see too little, admit more per key, and blow the
+    cap)."""
+    _near_dup_start(spark, tmp_path, "gref", 3).awaitTermination(180)
+    for n in (1, 2, 3):
+        _near_dup_start(spark, tmp_path, "gap", n).awaitTermination(180)
+    index = _near_dup_state(spark, tmp_path, "gap")[1]
+    assert index == _near_dup_state(spark, tmp_path, "gref")[1]
+    _assert_first_six_admitted(index)
 
 
 def test_streaming_near_dup_unpersists_localcheckpoints(spark, tmp_path):
@@ -1240,8 +1054,7 @@ def test_streaming_near_dup_unpersists_localcheckpoints(spark, tmp_path):
     the stream finishes, the context holds no new persistent RDDs."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
-    q = _near_dup_start(spark, tmp_path, "up", 3, compact_every=2,
-                        stats_dir=str(tmp_path / "up_stats"))
+    q = _near_dup_start(spark, tmp_path, "up", 3, compact_every=2)
     q.awaitTermination(180)
     leaked = set(jsc.getPersistentRDDs().keys()) - before
     assert leaked == set()

@@ -10,6 +10,11 @@ from go_dedupe_spark.plans.checkpoint import CheckpointStore
 from go_dedupe_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 
+# the pipeline's checkpointed stages, in run order
+STAGES = ["records", "blocks", "pairs", "features", "scores",
+          "components", "resolution"]
+
+
 def _collect_sorted(df):
     cols = sorted(df.columns)
     return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
@@ -51,9 +56,28 @@ def test_pipeline_resume_byte_identical(spark, files_df, tmp_path):
 
     # metrics recorded one row per stage per run (7 stages, run 1 only),
     # in the pipeline's stage order
-    assert [m["stage"] for m in store.metrics()] == [
-        "records", "blocks", "pairs", "features", "scores",
-        "components", "resolution"]
+    assert [m["stage"] for m in store.metrics()] == STAGES
+
+
+def test_config_change_recomputes_every_stage(spark, files_df, tmp_path):
+    """Resume is keyed on the config fingerprint too: a rerun on the
+    same store and snapshot with a changed threshold must recompute all
+    seven stages (none computed under the old config is served), and
+    its matches must follow the new threshold."""
+    store = CheckpointStore(tmp_path / "cfg")
+    r1 = run_pipeline(spark, files_df, PipelineConfig(), store=store,
+                      input_snapshot="v1")
+    n1 = r1.scores.where("is_match").count()
+    assert [m["stage"] for m in store.metrics()] == STAGES
+
+    r2 = run_pipeline(spark, files_df, PipelineConfig(threshold=0.8),
+                      store=store, input_snapshot="v1")
+    assert [m["stage"] for m in store.metrics()] == STAGES + STAGES
+    wrong = r2.scores.where(
+        F.col("is_match") != (F.col("score") >= 0.8)).count()
+    assert wrong == 0
+    n2 = r2.scores.where("is_match").count()
+    assert 0 < n2 < n1
 
 
 def test_partition_lineage(spark, tmp_path):
@@ -83,9 +107,7 @@ def test_memory_backend_seam(spark, files_df, tmp_path):
                       input_snapshot="m1")
     assert _collect_sorted(r2.resolution) == res1
     # one metric row per stage, run 1 only (run 2 resumed everything)
-    assert sorted(m["stage"] for m in store.metrics()) == sorted(
-        ["records", "blocks", "pairs", "features", "scores",
-         "components", "resolution"])
+    assert sorted(m["stage"] for m in store.metrics()) == sorted(STAGES)
     assert not (tmp_path / "unused").exists()   # nothing touched disk
 
 
