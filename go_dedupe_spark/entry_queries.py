@@ -60,11 +60,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # r7: HASH-partition on the id column instead of round-robin —
         # (a) round-robin pays a local sort of every row before the
         # exchange (spark.sql.execution.sortBeforeRepartition, guide
-        # §2.5); hash does not; (b) HashPartitioning(id) satisfies the
-        # ClusteredDistribution of two downstream per-id operators —
-        # the simhash vote groupBy(id, n) and the IVF assignment
-        # Window.partitionBy(item_id) — removing those two exchanges.
-        # Other queries re-key on other columns and gain only (a). Ids
+        # §2.5); hash does not; (b) HashPartitioning(doc_id) satisfies
+        # the ClusteredDistribution of the simhash vote groupBy(id,
+        # n_toks) of both simhash queries, removing that one exchange
+        # (explain() of dedup_simhash: 2 exchanges, 3 with
+        # round-robin). The IVF
+        # assignment window keeps its exchange on item_id: the item
+        # scan runs through a mapInArrow kernel first, whose output
+        # carries no partitioning. Other queries gain only (a). Ids
         # are unique, so the spread is binomial-uniform — no skew
         # possible.
         key = "doc_id" if name == "documents" else "vec_id"

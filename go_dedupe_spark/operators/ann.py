@@ -221,17 +221,17 @@ def cosine_topk_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
     -> (query_id, item_id, cosine, rank); ties broken by item id for
     determinism (ancestor: ORDER BY distance LIMIT k,
-    vector/sqlite.go:391). Building the DataFrame collects ``queries``
-    to the driver (one job); the plan is then one scan of ``items``
-    through the cosine kernel, which emits a superset of each query's
-    top k per block, before the exchange into the ranking window.
-    Vectors must be array<float> or array<double>."""
+    vector/sqlite.go:391). A query never matches the item with its own
+    id (``query_id != item_id``; NULL ids match nothing). Building the
+    DataFrame collects ``queries`` to the driver (one job); the plan is
+    then one scan of ``items`` through the cosine kernel, which emits a
+    superset of each query's top k per block, before the exchange into
+    the ranking window. Vectors must be array<float> or array<double>."""
     q = _collect_vectors(queries, id_col, vec_col)
     it = items.select(F.col(id_col).alias("item_id"),
                       F.col(vec_col).alias("ivec"))
@@ -242,7 +242,7 @@ def cosine_topk_bruteforce(
 
     def score(batches):
         for blk in _blocks(batches, len(q.length)):
-            skip = _self_pairs(blk.ids, q.ids) if exclude_self else None
+            skip = _self_pairs(blk.ids, q.ids)
             cos, null = _cosines(blk, q, skip)
             i, j = np.nonzero(_keep(cos, null, k, axis=0, skip=skip))
             yield pa.RecordBatch.from_arrays(
@@ -617,14 +617,13 @@ def cosine_topk_lsh(
     n_bits: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe: bool = True,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: bucket items and queries by SRP
     bucket id, rank within buckets. Trades recall for one equi-join
-    instead of a cross join — the 100 TB path. With ``multiprobe`` each
-    query also probes all n_bits Hamming-1-adjacent buckets (the probe
-    explosion is on the small QUERY side only; the item table still
-    carries one row per item). Returns the brute-force schema
+    instead of a cross join — the 100 TB path. Each query also probes
+    all n_bits Hamming-1-adjacent buckets (the probe explosion is on
+    the small QUERY side only; the item table still carries one row
+    per item). Returns the brute-force schema
     (query_id, item_id, cosine, rank)."""
     bucketer = make_srp_bucketer(dim, n_bits)
     # per-SIDE norms hoisted out of the within-bucket cosine (r7)
@@ -636,17 +635,15 @@ def cosine_topk_lsh(
                        F.col(vec_col).alias("qvec"),
                        vec_norm_expr(vec_col).alias("qn"),
                        bucketer(F.col(vec_col)).alias("bucket"))
-    if multiprobe:
-        # probe keys: exact bucket + flip of each single bit. Distinct
-        # longs, so one (query, item) pair can match at most one probe —
-        # no post-join dedup needed.
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << b).cast("long"))
-              for b in range(n_bits)],
-        )
-        q = q.select("query_id", "qvec", "qn",
-                     F.explode(probes).alias("bucket"))
+    # probe keys: exact bucket + flip of each single bit. Distinct
+    # longs, so one (query, item) pair can match at most one probe —
+    # no post-join dedup needed.
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << b).cast("long"))
+          for b in range(n_bits)],
+    )
+    q = q.select("query_id", "qvec", "qn", F.explode(probes).alias("bucket"))
     joined = it.join(q, "bucket").where(F.col("query_id") != F.col("item_id"))
     scored = joined.select(
         "query_id", "item_id",

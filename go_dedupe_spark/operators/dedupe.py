@@ -26,6 +26,7 @@ from go_dedupe_spark.functions.similarity import (
     set_jaccard,
     word_tokens,
 )
+from go_dedupe_spark.operators.pairs import block_pairs, salted_rekey
 
 
 # ------------------------------------------------------------------ exact
@@ -48,6 +49,43 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 # ------------------------------------------------------------- MinHash+LSH
 
 
+def lsh_band_keys(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    band_rows: int = 2,
+    scope_col: str | None = None,
+) -> DataFrame:
+    """df -> (id, block_key): one row per MinHash band of each doc's
+    word tokens. ``scope_col`` (e.g. lang) prefixes every key so buckets
+    never cross scopes. Every key embeds its band number, so one id
+    never emits the same key twice. Lazy: callers materialize it."""
+    toked = df.select(
+        F.col(id_col).alias("id"),
+        word_tokens(F.col(text_col)).alias("_toks"),
+        *([F.col(scope_col).cast("string").alias("_scope")] if scope_col else []),
+    )
+    keys = minhash_band_keys(F.col("_toks"), num_hashes=num_hashes,
+                             band_rows=band_rows, prefix="lsh")
+    if scope_col:
+        return toked.select("id", F.explode(keys).alias("k"), "_scope").select(
+            "id", F.concat(F.col("_scope"), F.lit(":"), F.col("k")).alias("block_key"))
+    return toked.select("id", F.explode(keys).alias("block_key"))
+
+
+def lsh_pairs(keyed: DataFrame, max_block: int = 100,
+              salt_cap: int = 40) -> DataFrame:
+    """(id, block_key) band keys -> distinct (id_a, id_b), id_a < id_b:
+    buckets larger than ``max_block`` are md5-salted into sub-blocks of
+    ~``salt_cap`` members (operators/pairs.salted_rekey), then every
+    (sub-)bucket is self-joined once (operators/pairs.block_pairs).
+    ``keyed`` should be materialized: the salting and both join sides
+    read it."""
+    salted = salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap)
+    return block_pairs(salted).select("id_a", "id_b").distinct()
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -57,7 +95,6 @@ def minhash_lsh_pairs(
     scope_col: str | None = None,
     max_block: int = 100,
     salt_cap: int = 40,
-    checkpoint_fn=None,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding over word tokens:
     shingle -> minhash -> band -> SKEW-CAPPED bucket self-join. Returns
@@ -70,44 +107,19 @@ def minhash_lsh_pairs(
     members (operators/pairs.salted_rekey), bounding the candidate set
     at the documented cost of cross-sub-block recall.
 
-    Building the DataFrame runs one eager job: the salted keyed table
-    is localCheckpointed (or handed to ``checkpoint_fn``)."""
-    from go_dedupe_spark.operators.pairs import salted_rekey
-
-    toked = df.select(
-        F.col(id_col).alias("id"),
-        word_tokens(F.col(text_col)).alias("_toks"),
-        *([F.col(scope_col).cast("string").alias("_scope")] if scope_col else []),
-    )
-    keys = minhash_band_keys(F.col("_toks"), num_hashes=num_hashes,
-                             band_rows=band_rows, prefix="lsh")
-    if scope_col:
-        keyed = toked.select(
-            "id", F.explode(keys).alias("k0"), "_scope"
-        ).select("id", F.concat(F.col("_scope"), F.lit(":"), F.col("k0")).alias("block_key"))
-    else:
-        keyed = toked.select(F.col("id"), F.explode(keys).alias("block_key"))
-    # materialize the salted keyed table once (r7): the self-join's two
-    # sides otherwise EACH recompute tokenize + minhash + explode +
-    # rekey (the broadcast build side re-runs the full subtree). One
-    # (id, block_key) row per band membership — a bands-x-corpus-rows
-    # table of short rows, distributed executor storage.
-    # ``checkpoint_fn`` is the lifecycle seam: long-lived callers (the
-    # streaming per-batch path) inject a TRACKED checkpoint so the
-    # pinned RDD is released at end of batch; the default suits
-    # run-once queries (the session's ContextCleaner frees it on GC).
-    if checkpoint_fn is None:
-        def checkpoint_fn(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-    keyed = checkpoint_fn(
-        salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(b, (F.col("a.block_key") == F.col("b.block_key"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    Building the DataFrame runs one eager job: the band-key table is
+    localCheckpointed. The streaming twin
+    (streaming.ingest.streaming_near_dup_pairs) runs the same
+    ``lsh_band_keys`` -> ``lsh_pairs`` per micro-batch."""
+    # materialize the band keys once (r7): the salting and the
+    # self-join's two sides otherwise EACH recompute tokenize + minhash
+    # + explode. One (id, block_key) row per band membership — a
+    # bands-x-corpus-rows table of short rows, distributed executor
+    # storage, freed by the session's ContextCleaner on GC.
+    keyed = lsh_band_keys(df, id_col, text_col, num_hashes=num_hashes,
+                          band_rows=band_rows, scope_col=scope_col)
+    return lsh_pairs(keyed.localCheckpoint(eager=True),
+                     max_block=max_block, salt_cap=salt_cap)
 
 
 # ----------------------------------------------------------------- SimHash
@@ -169,7 +181,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 8,
     max_block: int = 100,
     salt_cap: int = 40,
-    checkpoint_fn=None,
 ) -> DataFrame:
     """Near-duplicate pairs via wide SimHash + banded Hamming join —
     the standard large-corpus near-dedup (Manku et al., WWW'07 shape):
@@ -187,10 +198,7 @@ def simhash_hamming_pairs(
     4. Verify: popcount(xor) <= max_hamming, native bit_count.
 
     Returns (id_a, id_b, hamming). Building the DataFrame runs one
-    eager job: the banded simhash table is localCheckpointed (or handed
-    to ``checkpoint_fn``)."""
-    from go_dedupe_spark.operators.pairs import salted_rekey
-
+    eager job: the banded simhash table is localCheckpointed."""
     width = bits // bands
     mask = (1 << width) - 1
     sim = simhash_column(df, id_col, text_col, bits=bits)
@@ -205,24 +213,14 @@ def simhash_hamming_pairs(
     keyed = sim.select("id", "simhash", F.explode(band_keys).alias("block_key"))
     # materialize once (r7): both self-join sides otherwise recompute
     # the simhash vote aggregation + banding + rekey — the single most
-    # expensive subtree of this operator. checkpoint_fn is the same
-    # lifecycle seam as minhash_lsh_pairs (streaming callers inject a
-    # tracked checkpoint).
-    if checkpoint_fn is None:
-        def checkpoint_fn(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-    keyed = checkpoint_fn(
-        salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap))
-    a = keyed.select(F.col("id").alias("id_a"),
-                     F.col("simhash").alias("sim_a"), "block_key")
-    b = keyed.select(F.col("id").alias("id_b"),
-                     F.col("simhash").alias("sim_b"), "block_key")
+    # expensive subtree of this operator.
+    keyed = salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap) \
+        .localCheckpoint(eager=True)
     return (
-        a.join(b, "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
+        block_pairs(keyed, carry=("simhash",))
         .select(
             "id_a", "id_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
              .cast("long").alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
@@ -240,13 +238,11 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 5,
     threshold: float = 0.5,
-    checkpoint_fn=None,
 ) -> DataFrame:
     """Exact char-n-gram Jaccard on candidate pairs (distinct grams).
     candidate_pairs: (id_a, id_b). Returns (id_a, id_b, jaccard) with
     jaccard >= ``threshold``. Building the DataFrame runs one eager
-    job: the per-doc gram table is localCheckpointed (or handed to
-    ``checkpoint_fn``).
+    job: the per-doc gram table is localCheckpointed.
 
     Every gram is md5-prefix-hashed to a 60-bit long BEFORE the pair
     join, so the per-pair shuffle carries 8-byte ints instead of full
@@ -264,12 +260,10 @@ def ngram_jaccard_pairs(
     # (~n_chars md5 calls per doc). Same distributed-materialization
     # policy as scoring.build_features. The per-doc distinct gram count
     # is stored next to the grams for set_jaccard.
-    if checkpoint_fn is None:
-        def checkpoint_fn(d: DataFrame) -> DataFrame:
-            return d.localCheckpoint(eager=True)
-    grams = checkpoint_fn(
+    grams = (
         df.select(F.col(id_col).alias("id"), gram_expr.alias("grams"))
-        .withColumn("n_grams", F.size("grams")))
+        .withColumn("n_grams", F.size("grams"))
+        .localCheckpoint(eager=True))
     # NO manual broadcast of the gram table: the full per-doc gram
     # dimension cannot broadcast at corpus scale. Shuffle joins by
     # default; AQE converts to broadcast at runtime when the gram table
@@ -349,8 +343,6 @@ def embedding_cosine_pairs(
     corpus is one block and therefore gets salted: a bounded-recall
     sub-sampling, not all-pairs — unblocked corpora should LSH-bucket
     first (ann.make_srp_bucketer) and pass the bucket as block_col."""
-    from go_dedupe_spark.operators.pairs import salted_rekey
-
     if block_col is None:
         sel = emb.select(F.col(id_col).alias("id"),
                          F.col(vec_col).alias("vec"),
@@ -361,15 +353,8 @@ def embedding_cosine_pairs(
                          F.col(block_col).cast("string").alias("block_key"))
     keyed = salted_rekey(sel, max_block=max_block, salt_cap=salt_cap) \
         .withColumn("vn", vec_norm_expr("vec"))
-    a = keyed.select(F.col("id").alias("id_a"),
-                     F.col("vec").alias("vec_a"),
-                     F.col("vn").alias("vn_a"), "block_key")
-    b = keyed.select(F.col("id").alias("id_b"),
-                     F.col("vec").alias("vec_b"),
-                     F.col("vn").alias("vn_b"), "block_key")
     return (
-        a.join(b, "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
+        block_pairs(keyed, carry=("vec", "vn"))
         .select("id_a", "id_b",
                 F.round(cosine_from_norms(F.col("vec_a"), F.col("vec_b"),
                                           F.col("vn_a"), F.col("vn_b")),

@@ -23,6 +23,8 @@ Scale design (the part that must survive 100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,13 +42,10 @@ def salted_rekey(
     keyed: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
     salt_cap: int = DEFAULT_SALT_CAP,
-    id_col: str = "id",
-    key_col: str = "block_key",
-    broadcast_mega_keys: bool = True,
 ) -> DataFrame:
-    """Attach block sizes and split mega-blocks into deterministic
-    md5-salted sub-blocks of ~salt_cap members. Returns the input with
-    ``key_col`` rewritten for mega-block rows and a ``salted`` flag.
+    """keyed(id, block_key, ...) -> the same rows with mega-block keys
+    split into deterministic md5-salted sub-blocks of ~salt_cap members,
+    plus a ``salted`` flag.
 
     The salt hashes the STRING form of the id (``md5(CAST(id AS
     VARCHAR))`` in the DuckDB oracle), so numeric and string ids get the
@@ -64,31 +63,26 @@ def salted_rekey(
     query's wall time at sf0.1 (126s vs 57s total; the AQE
     SMJ->broadcast conversion still pays the big side's shuffle
     write, and the extra stage boundary defeats downstream exchange
-    reuse). For a pathological key distribution whose mega-key set
-    could exceed broadcast limits, ``broadcast_mega_keys=False``
-    drops the hint and degrades to a shuffle join (differentially
-    tested to be result-identical). No persist: the downstream
-    self-join reads the rekeyed shuffle exchange twice via
-    ReusedExchange, and the size aggregation's second scan of the
-    input is cheap against a checkpointed stage table (callers with an
-    expensive unmaterialized input should persist it themselves — they
-    own the lifecycle)."""
-    mega_sizes = (
-        keyed.groupBy(key_col).agg(F.count("*").alias("_n"))
+    reuse). No persist: the downstream self-join reads the rekeyed
+    shuffle exchange twice via ReusedExchange, and the size
+    aggregation's second scan of the input is cheap against a
+    checkpointed stage table (callers with an expensive unmaterialized
+    input should persist it themselves — they own the lifecycle)."""
+    mega_sizes = F.broadcast(
+        keyed.groupBy("block_key").agg(F.count("*").alias("_n"))
         .where(F.col("_n") > max_block)
     )
-    if broadcast_mega_keys:
-        mega_sizes = F.broadcast(mega_sizes)
-    joined = keyed.join(mega_sizes, key_col, "left")
+    joined = keyed.join(mega_sizes, "block_key", "left")
     n_salt = F.ceil(F.col("_n") / F.lit(salt_cap)).cast("long")
     salt = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
         .cast("long") % n_salt
     ).cast("string")
     return joined.select(
-        *[c for c in keyed.columns if c != key_col],
-        F.when(F.col("_n").isNull(), F.col(key_col))
-         .otherwise(F.concat(F.col(key_col), F.lit("#"), salt)).alias(key_col),
+        *[c for c in keyed.columns if c != "block_key"],
+        F.when(F.col("_n").isNull(), F.col("block_key"))
+         .otherwise(F.concat(F.col("block_key"), F.lit("#"), salt))
+         .alias("block_key"),
         F.col("_n").isNotNull().alias("salted"),
     )
 
@@ -108,10 +102,15 @@ def candidate_pairs(
     """
     keyed = salted_rekey(blocks.select("id", "block_key"),
                          max_block=max_block, salt_cap=salt_cap)
-    return _self_join(keyed).dropDuplicates(["id_a", "id_b"])
+    return block_pairs(keyed).dropDuplicates(["id_a", "id_b"])
 
 
-def _self_join(keyed: DataFrame) -> DataFrame:
+def block_pairs(keyed: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
+    """keyed(id, block_key, salted, *carry) -> pairs(id_a, id_b,
+    block_key, salted, {c}_a, {c}_b for each carried column): every
+    same-block pair once, ``id_a < id_b``. The one block self-join of
+    every pair generator; callers dedupe pairs that share several
+    blocks themselves."""
     a = keyed.alias("a")
     b = keyed.alias("b")
     return (
@@ -125,5 +124,7 @@ def _self_join(keyed: DataFrame) -> DataFrame:
             F.col("b.id").alias("id_b"),
             F.col("a.block_key").alias("block_key"),
             F.col("a.salted").alias("salted"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
         )
     )

@@ -168,8 +168,10 @@ def streaming_near_dup_pairs(
     after its original is still paired with it.
 
     Per batch:
-    1. within-batch pairs: ``minhash_lsh_pairs(batch)`` — the batch
-       operator, salt caps included.
+    0. band keys: ``dedupe.lsh_band_keys`` of the batch, materialized
+       once (one eager job) and read by every step below.
+    1. within-batch pairs: ``dedupe.lsh_pairs`` over those keys — what
+       ``minhash_lsh_pairs`` runs on a batch, salt caps included.
     2. cross-batch pairs: the batch's band keys equi-join the
        accumulated index, which is CAPPED AT WRITE TIME to
        ``index_bucket_cap`` ids per block key (first-arrived kept,
@@ -217,9 +219,7 @@ def streaming_near_dup_pairs(
     StreamingQuery."""
     from pyspark.sql.window import Window
 
-    from go_dedupe_spark.functions.hashing import minhash_band_keys
-    from go_dedupe_spark.functions.similarity import word_tokens
-    from go_dedupe_spark.operators.dedupe import minhash_lsh_pairs
+    from go_dedupe_spark.operators.dedupe import lsh_band_keys, lsh_pairs
 
     def _tracked_ckpt(df: DataFrame, tracked: list) -> DataFrame:
         """localCheckpoint(eager) + record the checkpoint's OWN
@@ -262,36 +262,19 @@ def streaming_near_dup_pairs(
 
     def _process_inner(spark, batch_df: DataFrame, batch_id: int,
                        tracked: list) -> None:
-        batch = _tracked_ckpt(
-            batch_df.select(
-                F.col(id_col).cast("string").alias("id"),
-                F.col(text_col).alias("text"),
-                *([F.col(scope_col).cast("string").alias("_scope")]
-                  if scope_col else []),
-            ).dropDuplicates(["id"]), tracked)
-
-        within = minhash_lsh_pairs(
-            batch, "id", "text", num_hashes=num_hashes,
-            band_rows=band_rows, max_block=max_block, salt_cap=salt_cap,
-            scope_col="_scope" if scope_col else None,
-            # the operator materializes its keyed table (r7); route
-            # that through the tracked checkpoint so this batch's
-            # pinned RDD is released on exit like every other one
-            checkpoint_fn=lambda df: _tracked_ckpt(df, tracked))
-
-        keys = minhash_band_keys(
-            word_tokens(F.col("text")), num_hashes=num_hashes,
-            band_rows=band_rows, prefix="lsh")
-        keyed = batch.select(
-            "id", F.explode(keys).alias("k0"),
-            *(["_scope"] if scope_col else []),
-        )
-        block_key = (
-            F.concat(F.col("_scope"), F.lit(":"), F.col("k0"))
-            if scope_col else F.col("k0")
-        )
-        keyed = keyed.select("id", block_key.alias("block_key")) \
-            .dropDuplicates(["id", "block_key"])
+        # the batch's band keys, built and materialized ONCE: the
+        # within-batch pairs, the cross-batch join and index admission
+        # all read this one tracked checkpoint. dropDuplicates(["id"])
+        # keeps one text per id, so no (id, block_key) row repeats.
+        docs = batch_df.select(
+            F.col(id_col).cast("string").alias("id"),
+            F.col(text_col).alias("text"),
+            *([F.col(scope_col).alias("_scope")] if scope_col else []),
+        ).dropDuplicates(["id"])
+        keyed = _tracked_ckpt(lsh_band_keys(
+            docs, "id", "text", num_hashes=num_hashes, band_rows=band_rows,
+            scope_col="_scope" if scope_col else None), tracked)
+        within = lsh_pairs(keyed, max_block=max_block, salt_cap=salt_cap)
 
         # The parquet file listing is snapshotted when the read is
         # planned, so this frame is stable even though the batch

@@ -735,6 +735,42 @@ def test_streaming_near_dup_scope_col(spark, tmp_path):
     assert all({a[0], b[0]} != {"p", "j"} for a, b in pairs)
 
 
+def test_streaming_near_dup_within_batch_matches_batch_operator(
+        spark, tmp_path):
+    """Within one micro-batch the stream writes exactly the pair set of
+    the batch operator over the same docs and settings: one file of 60
+    docs in two lang scopes, with buckets dense enough that the salt cap
+    binds (the capped pair set is smaller than the uncapped one)."""
+    from go_dedupe_spark.operators.dedupe import minhash_lsh_pairs
+    from go_dedupe_spark.streaming.ingest import streaming_near_dup_pairs
+
+    base = "shared boilerplate header for every generated source file"
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}", base if i % 3 == 0 else f"{base} w{i % 7} x{i % 5}",
+          "py" if i % 2 else "js") for i in range(60)],
+        ["doc_id", "text", "lang"])
+    kw = dict(scope_col="lang", num_hashes=4, band_rows=2)
+    want = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(
+        docs, max_block=10, salt_cap=4, **kw).collect()}
+    uncapped = minhash_lsh_pairs(docs, max_block=1000, **kw).count()
+    assert 0 < len(want) < uncapped
+
+    src = tmp_path / "wb_src"
+    docs.repartition(1).write.parquet(str(src / "f1"))
+    stream = spark.readStream.schema(docs.schema).parquet(str(src / "*"))
+    q = streaming_near_dup_pairs(
+        stream,
+        index_dir=str(tmp_path / "wb_index"),
+        pairs_dir=str(tmp_path / "wb_pairs"),
+        checkpoint_dir=str(tmp_path / "wb_ck"),
+        max_block=10, salt_cap=4, **kw)
+    q.awaitTermination(180)
+    rows = spark.read.parquet(str(tmp_path / "wb_pairs")).collect()
+    got = [(r["id_a"], r["id_b"]) for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
 def test_streaming_near_dup_replayed_id_not_readmitted(spark, tmp_path):
     """A doc re-sent in a later batch (feed replay — dropDuplicates is
     batch-local) must NOT be re-admitted to the band index: no

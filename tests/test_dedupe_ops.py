@@ -197,33 +197,6 @@ def test_simhash_drops_zero_token_docs(spark):
     assert simhash_duplicates(docs).count() == 0
 
 
-def test_salted_rekey_shuffle_fallback(spark):
-    """VERDICT r2 defect #3: the mega-key broadcast has an escape hatch
-    for pathological key distributions — ``broadcast_mega_keys=False``
-    (with broadcasts ALSO disabled by conf, forcing the true shuffle
-    plan) must produce the identical rekeying."""
-    from go_dedupe_spark.operators.pairs import salted_rekey
-
-    rows = [(i, f"k{i % 3}" if i < 30 else "mega") for i in range(130)]
-    keyed = spark.createDataFrame(rows, ["id", "block_key"])
-
-    def run(**kw):
-        out = salted_rekey(keyed, max_block=50, salt_cap=20, **kw).collect()
-        return sorted((r["id"], r["block_key"], r["salted"]) for r in out)
-
-    base = run()
-    assert sum(1 for _, bk, s in base if s) == 100        # mega rows salted
-    assert len({bk for _, bk, s in base if s}) >= 2       # >= 2 sub-blocks
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        assert run(broadcast_mega_keys=False) == base
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
 def test_ngram_jaccard_pair_stage_stays_wide(spark):
     """r7 regression lock: the candidate-pair repartition before the
     jaccard join must STAY. A pair row is two bare ids (~16 B) while
