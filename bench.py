@@ -1,5 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+Without $SPARK_GRAFT_CPUS the cores are the CPUs this process may run
+on; ``cores`` reports Spark's defaultParallelism.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -93,11 +95,9 @@ def noise_signature(timings: dict[str, float]) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from go_dedupe_spark.session import get_spark
 
-    spark = get_spark("bench", cores=cores)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
@@ -131,7 +131,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cores": cores,
+        "cores": spark.sparkContext.defaultParallelism,
     }
     out.update(noise_signature(timings))
     print(json.dumps(out))

@@ -395,18 +395,15 @@ def _components_entry(spark, sf_dir, **cc_kwargs):
     """Shared body of er_components / er_components_dist — one place
     for the records/scores/matches/singletons construction so the two
     paths can never silently diverge (review r6)."""
-    from go_dedupe_spark.operators.components import connected_components
+    from go_dedupe_spark.operators.components import (
+        connected_components,
+        with_singletons,
+    )
 
     records = _doc_records(spark, sf_dir)
     scores = _doc_scores(spark, sf_dir)
     matches = scores.where(F.col("score") >= ER_THRESHOLD).select("id_a", "id_b")
-    comp = connected_components(matches, **cc_kwargs)
-    singletons = (
-        records.select("id")
-        .join(comp.select("id"), "id", "left_anti")
-        .withColumn("cluster_id", F.col("id"))
-    )
-    return comp.unionByName(singletons)
+    return with_singletons(connected_components(matches, **cc_kwargs), records)
 
 
 @query("er_components", _COMPONENTS_SQL)
@@ -835,7 +832,7 @@ FROM s QUALIFY rank <= {ANN_K}
 """)
 def ann_topk_lsh(spark, sf_dir):
     """SRP-LSH-bucketed approximate top-k with Hamming-1 multi-probe —
-    the 100 TB path (one equi-join instead of a cross join). Projection
+    the 100 TB path (only probed pairs are scored). Projection
     signs are md5-derived so the oracle recomputes every bucket exactly
     (reference analog: the per-block ANN accelerator,
     vector/sqlite.go:368-437)."""

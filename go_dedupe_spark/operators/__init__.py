@@ -17,7 +17,6 @@ from go_dedupe_spark.operators.pairs import salted_rekey  # noqa: F401
 from go_dedupe_spark.operators.scoring import build_features, top_k_matches  # noqa: F401
 from go_dedupe_spark.operators.resolve import match_table  # noqa: F401
 from go_dedupe_spark.operators.dedupe import (  # noqa: F401
-    cosine_expr,
     embedding_cosine_pairs,
     exact_duplicates,
     minhash_lsh_pairs,

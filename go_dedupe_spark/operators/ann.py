@@ -14,9 +14,11 @@ kNN inside a block. Spark-native equivalents:
   spherical k-means trains the centroids with it.
 - sign-random-projection LSH buckets (scale path): items and queries
   hash to the same bucket with probability rising in cosine; top-k is
-  computed within buckets only. Queries MULTI-PROBE: they join their
+  computed within buckets only. Queries MULTI-PROBE: they probe their
   exact bucket plus every Hamming-1-adjacent bucket (n_bits + 1 probe
   keys), recovering most of the recall lost to single-bucket banding.
+  The same kernel scan buckets each item block and scores only the
+  (item, query) pairs whose bucket the query probes.
   Projection signs are md5-derived (sign(b, j) = parity of the first
   hex digit of md5("b:j")) — deterministic across reruns AND exactly
   reproducible in the DuckDB SQL oracle, unlike a seeded RNG matrix.
@@ -56,11 +58,6 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from go_dedupe_spark.operators.dedupe import (
-    cosine_from_norms,
-    vec_norm_expr,
-)
-
 # ------------------------------------------------ cosine block kernel
 
 # A row leaves the kernel when its raw cosine is within this of the k-th
@@ -90,6 +87,12 @@ class _Vectors(NamedTuple):
         return _Vectors(self.ids.take(idx), self.vecs.take(idx),
                         self.dense[idx], self.length[idx], self.norm[idx],
                         self.ok[idx])
+
+    def column(self) -> _Vectors:
+        """These rows as a column, to broadcast against a row side."""
+        return self._replace(dense=self.dense[:, None],
+                             length=self.length[:, None],
+                             norm=self.norm[:, None], ok=self.ok[:, None])
 
 
 def _vectors(ids, vecs) -> _Vectors:
@@ -131,18 +134,20 @@ def _collect_vectors(df: DataFrame, id_col: str, vec_col: str) -> _Vectors:
 
 def _cosines(a: _Vectors, b: _Vectors,
              skip: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """Raw cosine of every (a row, b row) pair -> (values, NULL mask),
-    bit-identical to ``cosine_from_norms(a, b, |a|, |b|)``: a NULL norm
-    or a norm <= 0 gives 0.0 (NaN counts as > 0, as in Spark), a length
-    mismatch NULL. ``skip`` marks pairs the caller drops; a kept pair
-    whose norm product underflows to 0 raises, as ANSI division does."""
-    dot = np.zeros((len(a.length), len(b.length)))
-    for j in range(min(a.dense.shape[1], b.dense.shape[1])):
-        dot += np.multiply.outer(a.dense[:, j], b.dense[:, j])
-    pos_a = a.ok & ((a.norm > 0) | np.isnan(a.norm))
-    pos_b = b.ok & ((b.norm > 0) | np.isnan(b.norm))
-    both = np.logical_and.outer(pos_a, pos_b)
-    denom = np.multiply.outer(a.norm, b.norm)
+    """Raw cosine of a's and b's rows broadcast against each other ->
+    (values, NULL mask): ``a.column()`` against ``b`` scores every
+    (a row, b row) pair, and two equal-length takes score gathered
+    pairs. Bit-identical to ``cosine_from_norms(a, b, |a|, |b|)``: a
+    NULL norm or a norm <= 0 gives 0.0 (NaN counts as > 0, as in Spark),
+    a length mismatch NULL. ``skip`` marks pairs the caller drops; a
+    kept pair whose norm product underflows to 0 raises, as ANSI
+    division does."""
+    dot = np.zeros(np.broadcast_shapes(a.length.shape, b.length.shape))
+    for j in range(min(a.dense.shape[-1], b.dense.shape[-1])):
+        dot += a.dense[..., j] * b.dense[..., j]
+    both = (a.ok & ((a.norm > 0) | np.isnan(a.norm))
+            & b.ok & ((b.norm > 0) | np.isnan(b.norm)))
+    denom = a.norm * b.norm
     zero = both & (denom == 0)
     if skip is not None:
         zero &= ~skip
@@ -151,7 +156,7 @@ def _cosines(a: _Vectors, b: _Vectors,
                               "of a vector pair underflows to 0")
     with np.errstate(all="ignore"):
         cos = np.where(both, dot / denom, 0.0)
-    return cos, both & np.not_equal.outer(a.length, b.length)
+    return cos, both & (a.length != b.length)
 
 
 def _keep(cos: np.ndarray, null: np.ndarray, k: int, axis: int,
@@ -200,9 +205,35 @@ def _centroid_candidates(blk: _Vectors, cents: _Vectors):
     """Each item's candidate lists: (item rows, centroid rows, raw
     cosines, NULL mask) — its nearest centroid and any that may round
     level with it."""
-    cos, null = _cosines(blk, cents)
+    cos, null = _cosines(blk.column(), cents)
     i, j = np.nonzero(_keep(cos, null, 1, axis=1))
     return i, j, cos[i, j], null[i, j]
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Round (query_id, item_id, cosine) rows to 6 decimals and rank each
+    query's: cosine desc, then item id; keep ranks <= k."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
+                                               F.col("item_id"))
+    return (
+        scored.withColumn("cosine", F.round("cosine", 6))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _query_scan(items: DataFrame, queries: DataFrame, id_col: str,
+                vec_col: str, score, k: int) -> DataFrame:
+    """One scan of ``items`` as (item_id, ivec) Arrow batches through
+    ``score``, which yields (query_id, item_id, raw cosine) batches, then
+    each query's top k."""
+    it = items.select(F.col(id_col).alias("item_id"),
+                      F.col(vec_col).alias("ivec"))
+    schema = StructType([StructField("query_id",
+                                     queries.schema[id_col].dataType),
+                         StructField("item_id", it.schema["item_id"].dataType),
+                         StructField("cosine", DoubleType())])
+    return _top_k(it.mapInArrow(score, schema), k)
 
 
 def _assigned(scored: DataFrame) -> DataFrame:
@@ -233,30 +264,18 @@ def cosine_topk_bruteforce(
     superset of each query's top k per block, before the exchange into
     the ranking window. Vectors must be array<float> or array<double>."""
     q = _collect_vectors(queries, id_col, vec_col)
-    it = items.select(F.col(id_col).alias("item_id"),
-                      F.col(vec_col).alias("ivec"))
-    schema = StructType([StructField("query_id",
-                                     queries.schema[id_col].dataType),
-                         StructField("item_id", it.schema["item_id"].dataType),
-                         StructField("cosine", DoubleType())])
 
     def score(batches):
         for blk in _blocks(batches, len(q.length)):
             skip = _self_pairs(blk.ids, q.ids)
-            cos, null = _cosines(blk, q, skip)
+            cos, null = _cosines(blk.column(), q, skip)
             i, j = np.nonzero(_keep(cos, null, k, axis=0, skip=skip))
             yield pa.RecordBatch.from_arrays(
                 [q.ids.take(j), blk.ids.take(i),
                  _cosine_column(cos[i, j], null[i, j])],
                 names=["query_id", "item_id", "cosine"])
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("item_id"))
-    return (
-        it.mapInArrow(score, schema)
-        .withColumn("cosine", F.round("cosine", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _query_scan(items, queries, id_col, vec_col, score, k)
 
 
 def cosine_topk_ivf(
@@ -297,7 +316,7 @@ def cosine_topk_ivf(
     qv = _collect_vectors(queries, id_col, vec_col)
     qid_type = queries.schema[id_col].dataType
     cid_type = centroids.schema[cid].dataType
-    cos, null = _cosines(qv, cents)
+    cos, null = _cosines(qv.column(), cents)
     keep = _keep(cos, null, nprobe, axis=1)
     # a query keeping at most nprobe lists probes exactly those: every
     # other list rounds strictly lower. Only the rest need Spark's rank.
@@ -347,7 +366,7 @@ def cosine_topk_ivf(
                 r = np.nonzero(cc == c)[0]
                 members, probers = blk.take(ii[r]), qv.take(lists[c])
                 skip = _self_pairs(members.ids, probers.ids)
-                cos, null = _cosines(members, probers, skip)
+                cos, null = _cosines(members.column(), probers, skip)
                 a, b = np.nonzero(~skip)
                 hr = np.concatenate([hr, r[a]])
                 hq = np.concatenate([hq, lists[c][b]])
@@ -367,16 +386,10 @@ def cosine_topk_ivf(
                  _cosine_column(ccos, cnull), hits],
                 names=["item_id", "cid", "ccos", "hits"])
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.col("item_id"))
-    return (
+    return _top_k(
         _assigned(it.mapInArrow(score, schema))
         .select("item_id", F.explode("hits").alias("h"))
-        .select("h.query_id", "item_id",
-                F.round("h.cosine", 6).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        .select("h.query_id", "item_id", "h.cosine"), k)
 
 
 def train_ivf_centroids(
@@ -584,29 +597,30 @@ def srp_signs(dim: int, n_bits: int) -> np.ndarray:
     return m
 
 
+def _srp_buckets(vecs: np.ndarray, signs: np.ndarray) -> np.ndarray:
+    """SRP bucket ids (int64; bit b set iff projection b is positive) of
+    (n, dim) vectors. Each projection is summed in dimension order from
+    0.0 in double, as the kernel's dot and the oracle's ``list_sum`` are,
+    so a row's bucket does not depend on the rows batched with it; a
+    NaN projection is not positive."""
+    dots = np.zeros((len(vecs), signs.shape[1]))
+    for j in range(vecs.shape[1]):
+        dots += np.multiply.outer(vecs[:, j].astype("float64"), signs[j])
+    return (dots > 0) @ (1 << np.arange(signs.shape[1], dtype="int64"))
+
+
 def make_srp_bucketer(dim: int, n_bits: int = 12):
     """Returns a pandas UDF mapping an embedding column to its
     sign-random-projection bucket id (long; bit b set iff the b-th
-    projection is positive). Arrow-batched numpy matmul — one GEMM per
-    batch, no per-row Python."""
-    proj = srp_signs(dim, n_bits)
-    weights = (1 << np.arange(n_bits)).astype("int64")
+    projection is positive) — the bucket ``cosine_topk_lsh`` uses."""
+    signs = srp_signs(dim, n_bits)
 
     @pandas_udf(LongType())
     def srp_bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype="float64")
-        if mat.size == 0:
-            return pd.Series([], dtype="int64")
-        bits = (mat @ proj) > 0
-        return pd.Series(bits @ weights)
+        mat = np.array(vecs.tolist(), dtype="float64").reshape(len(vecs), dim)
+        return pd.Series(_srp_buckets(mat, signs))
 
-    # pure function, but its output is a JOIN KEY: the inferred
-    # isnotnull(bucket) constraint was pushed below the projection and
-    # duplicated the UDF on BOTH join sides — 6 ArrowEvalPython nodes
-    # for 2 logical calls, one of them below the parallelizing
-    # repartition (single-task full-corpus GEMM). asNondeterministic()
-    # forbids the duplication (guide §4.4); values unchanged.
-    return srp_bucket.asNondeterministic()
+    return srp_bucket
 
 
 def cosine_topk_lsh(
@@ -619,40 +633,43 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: bucket items and queries by SRP
-    bucket id, rank within buckets. Trades recall for one equi-join
-    instead of a cross join — the 100 TB path. Each query also probes
-    all n_bits Hamming-1-adjacent buckets (the probe explosion is on
-    the small QUERY side only; the item table still carries one row
-    per item). Returns the brute-force schema
-    (query_id, item_id, cosine, rank)."""
-    bucketer = make_srp_bucketer(dim, n_bits)
-    # per-SIDE norms hoisted out of the within-bucket cosine (r7)
-    it = items.select(F.col(id_col).alias("item_id"),
-                      F.col(vec_col).alias("ivec"),
-                      vec_norm_expr(vec_col).alias("inorm"),
-                      bucketer(F.col(vec_col)).alias("bucket"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"),
-                       vec_norm_expr(vec_col).alias("qn"),
-                       bucketer(F.col(vec_col)).alias("bucket"))
-    # probe keys: exact bucket + flip of each single bit. Distinct
-    # longs, so one (query, item) pair can match at most one probe —
-    # no post-join dedup needed.
-    probes = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << b).cast("long"))
-          for b in range(n_bits)],
-    )
-    q = q.select("query_id", "qvec", "qn", F.explode(probes).alias("bucket"))
-    joined = it.join(q, "bucket").where(F.col("query_id") != F.col("item_id"))
-    scored = joined.select(
-        "query_id", "item_id",
-        F.round(cosine_from_norms(F.col("qvec"), F.col("ivec"),
-                                  F.col("qn"), F.col("inorm")),
-                6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("item_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    bucket id, rank within buckets — the 100 TB path, scoring a
+    fraction of the pairs brute force scores. Each query probes its
+    bucket and all n_bits Hamming-1-adjacent buckets. Returns the
+    brute-force schema (query_id, item_id, cosine, rank).
+
+    Shape: as ``cosine_topk_bruteforce``, building the DataFrame
+    collects ``queries`` to the driver and buckets them there; the plan
+    is one scan of ``items`` through the cosine kernel, which buckets
+    each block and scores only the (item, query) pairs whose bucket the
+    query probes (``query_id != item_id``), before the exchange into
+    the ranking window. A vector with a NULL element lands in bucket 0
+    and scores 0.0, as a zero vector does; a NULL vector or one whose
+    length is not ``dim`` raises ValueError."""
+    signs = srp_signs(dim, n_bits)
+
+    def buckets(v: _Vectors) -> np.ndarray:
+        valid = v.vecs.is_valid().to_numpy(zero_copy_only=False)
+        bad = np.nonzero(~valid | (v.length != dim))[0]
+        if len(bad):
+            r = int(bad[0])
+            got = f"length {v.length[r]}" if valid[r] else "a NULL vector"
+            raise ValueError(f"cosine_topk_lsh: {id_col} {v.ids[r].as_py()!r} "
+                             f"has {got}, expected dim={dim}")
+        return np.where(v.ok, _srp_buckets(v.dense, signs), 0)
+
+    q = _collect_vectors(queries, id_col, vec_col)
+    q_bucket = buckets(q)
+
+    def score(batches):
+        for blk in _blocks(batches, len(q.length)):
+            # probed: the buckets differ in at most one bit
+            x = np.bitwise_xor.outer(buckets(blk), q_bucket)
+            i, j = np.nonzero(((x & (x - 1)) == 0)
+                              & ~_self_pairs(blk.ids, q.ids))
+            cos, null = _cosines(blk.take(i), q.take(j))
+            yield pa.RecordBatch.from_arrays(
+                [q.ids.take(j), blk.ids.take(i), _cosine_column(cos, null)],
+                names=["query_id", "item_id", "cosine"])
+
+    return _query_scan(items, queries, id_col, vec_col, score, k)

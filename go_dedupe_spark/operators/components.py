@@ -53,7 +53,7 @@ def connected_components(
     """edges(src, dst) -> components(id, cluster_id).
 
     Includes singleton handling only for nodes present in edges; callers
-    union isolated records back (see plans.pipeline.run_pipeline).
+    union isolated records back with ``with_singletons``.
 
     Hybrid execution: when the (deduped) edge set fits comfortably on
     the driver (<= driver_max_edges), a local union-find answers in one
@@ -140,6 +140,17 @@ def connected_components(
         .withColumn("cluster_id", F.col("id"))
     )
     return comp.unionByName(roots).dropDuplicates(["id"])
+
+
+def with_singletons(components: DataFrame, ids: DataFrame) -> DataFrame:
+    """``components`` plus every id of ``ids`` (an ``id`` column) that no
+    edge touched, as its own cluster (cluster_id = id)."""
+    singletons = (
+        ids.select("id")
+        .join(components.select("id"), "id", "left_anti")
+        .withColumn("cluster_id", F.col("id"))
+    )
+    return components.unionByName(singletons)
 
 
 def _edge_stats(e: DataFrame) -> dict:

@@ -295,18 +295,9 @@ def ngram_jaccard_pairs(
 # ------------------------------------------------------- embedding cosine
 
 
-def cosine_expr(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity between two array<numeric> columns, native
-    (zip_with product + aggregate sums — sequential, deterministic)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return cosine_from_norms(a, b, vec_norm_expr(a), vec_norm_expr(b))
-
-
 def vec_norm_expr(v: str | Column) -> Column:
-    """L2 norm of an array<numeric> column — the exact norm
-    subexpression of ``cosine_expr``, exposed so PAIR producers can
-    compute it once per ROW instead of once per pair (r7, guide §2.3
+    """L2 norm of an array<numeric> column, computed once per ROW so
+    pair producers do not recompute it once per pair (r7, guide §2.3
     applied to interpreted HOF cost: the higher-order-function lambdas
     are evaluated per element per call, so hoisting both norms to the
     row side cuts each pairwise cosine from 3 array passes to 1)."""
@@ -316,9 +307,9 @@ def vec_norm_expr(v: str | Column) -> Column:
 
 
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Cosine given precomputed L2 norms. Bit-identical to
-    ``cosine_expr``: same dot expression, same guard, same division —
-    only WHERE the norms are evaluated moves."""
+    """Cosine similarity of two array<numeric> columns given their
+    ``vec_norm_expr`` norms, native (zip_with product + aggregate sum —
+    sequential, deterministic); 0.0 unless both norms are > 0."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))

@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.similarity import word_tokens
 from go_dedupe_spark.operators.blocking import Band, make_blocks
-from go_dedupe_spark.operators.components import connected_components
+from go_dedupe_spark.operators.components import (
+    connected_components,
+    with_singletons,
+)
 from go_dedupe_spark.operators.normalize import normalize
 from go_dedupe_spark.operators.pairs import candidate_pairs
 from go_dedupe_spark.operators.resolve import resolve_clusters
@@ -115,16 +118,11 @@ def run_pipeline(
     )
     matches = scores.where("is_match").select("id_a", "id_b")
 
-    def compute_components() -> DataFrame:
-        comp = connected_components(matches)
-        singletons = (
-            records.select("id")
-            .join(comp.select("id"), "id", "left_anti")
-            .withColumn("cluster_id", F.col("id"))
-        )
-        return comp.unionByName(singletons)
-
-    components = stage("components", compute_components, sort_by=["id"])
+    components = stage(
+        "components",
+        lambda: with_singletons(connected_components(matches), records),
+        sort_by=["id"],
+    )
     resolution = stage("resolution",
                        lambda: resolve_clusters(components, records),
                        sort_by=["cluster_id", "id"])

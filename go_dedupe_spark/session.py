@@ -18,6 +18,12 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "go-dedupe-spark",
     cores: int | None = None,
@@ -26,14 +32,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS, else the CPUs this process
-    may run on. ``shuffle_partitions`` defaults to 2x cores — small
+    ``cores`` defaults to ``default_cores()``. ``shuffle_partitions`` defaults to 2x cores — small
     enough for local mode, and the knob a cluster deployment retunes
     first.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   len(os.sched_getaffinity(0))))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * cores)
 

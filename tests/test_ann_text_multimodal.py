@@ -99,6 +99,55 @@ def test_ann_lsh_buckets_match_manual_signs(spark):
     assert got == expect
 
 
+def _lsh_table(spark, odd):
+    """20 random 4-dim rows plus ``odd`` as row 99."""
+    import numpy as np
+
+    rng = np.random.default_rng(23)
+    rows = [(i, v) for i, v in enumerate(rng.normal(size=(20, 4)).tolist())]
+    return spark.createDataFrame(rows + [(99, odd)],
+                                 "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("odd, msg", [
+    (None, "a NULL vector"),
+    ([1.0, 2.0], "length 2"),
+])
+def test_ann_lsh_rejects_vector_without_bucket(spark, odd, msg):
+    """A NULL vector or one whose length is not dim has no bucket:
+    cosine_topk_lsh names itself, the id and dim in a ValueError — from
+    the item scan, and from the query collect before any plan runs."""
+    emb = _lsh_table(spark, odd)
+    clean = emb.where("vec_id < 99")
+    want = f"cosine_topk_lsh: vec_id 99 has {msg}, expected dim=4"
+    with pytest.raises(Exception, match=want):
+        cosine_topk_lsh(emb, clean, dim=4, k=3, n_bits=3).collect()
+    with pytest.raises(ValueError, match=want):
+        cosine_topk_lsh(clean, emb, dim=4, k=3, n_bits=3)
+
+
+@pytest.mark.parametrize("odd", [[1.0, None, 0.5, 0.2], [0.0, 0.0, 0.0, 0.0]],
+                         ids=["null_element", "zero"])
+def test_ann_lsh_degenerate_vector_lands_in_bucket_zero(spark, odd):
+    """A vector with a NULL element, like a zero vector, lands in bucket
+    0 and scores 0.0 against everything: it pairs with exactly the rows
+    whose bucket is within one bit of 0, both as an item and as a
+    query."""
+    from go_dedupe_spark.operators.ann import make_srp_bucketer
+
+    emb = _lsh_table(spark, odd)
+    clean = emb.where("vec_id < 99")
+    bucket = make_srp_bucketer(4, 3)
+    near_zero = {r["vec_id"] for r in
+                 clean.select("vec_id", bucket("embedding").alias("b"))
+                 .collect() if bin(r["b"]).count("1") <= 1}
+    assert 0 < len(near_zero) < 20
+    out = cosine_topk_lsh(emb, emb, dim=4, k=100, n_bits=3).collect()
+    as_item = {r["query_id"]: r["cosine"] for r in out if r["item_id"] == 99}
+    as_query = {r["item_id"]: r["cosine"] for r in out if r["query_id"] == 99}
+    assert as_item == as_query == dict.fromkeys(near_zero, 0.0)
+
+
 def test_quantize_binary_and_matryoshka(spark):
     """X3/X4 compression variants: sign bits pack little-endian into
     60-bit words; matryoshka truncation is unit-norm and
@@ -432,7 +481,10 @@ def test_ivf_trained_centroids_beat_subset(spark):
         cosine_topk_ivf,
         train_ivf_centroids,
     )
-    from go_dedupe_spark.operators.dedupe import cosine_expr
+    from go_dedupe_spark.operators.dedupe import (
+        cosine_from_norms,
+        vec_norm_expr,
+    )
 
     rng = np.random.default_rng(5)
     centers = rng.standard_normal((8, 16)) * 4
@@ -460,7 +512,9 @@ def test_ivf_trained_centroids_beat_subset(spark):
                          F.col("embedding").alias("cvec"))
         best = (
             items.crossJoin(F.broadcast(c))
-            .select("vec_id", cosine_expr("embedding", "cvec").alias("cc"))
+            .select("vec_id", cosine_from_norms(
+                F.col("embedding"), F.col("cvec"), vec_norm_expr("embedding"),
+                vec_norm_expr("cvec")).alias("cc"))
             .groupBy("vec_id").agg(F.max("cc").alias("cc"))
         )
         return best.agg(F.avg("cc")).collect()[0][0]

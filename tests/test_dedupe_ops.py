@@ -8,13 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.operators.dedupe import (
-    cosine_expr,
+    cosine_from_norms,
     embedding_cosine_pairs,
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_duplicates,
     simhash_hamming_pairs,
+    vec_norm_expr,
 )
 
 
@@ -160,7 +161,9 @@ def test_cosine_expr_matches_numpy(spark):
     a = rng.standard_normal(32).tolist()
     b = rng.standard_normal(32).tolist()
     df = spark.createDataFrame([(a, b)], ["va", "vb"])
-    got = df.select(cosine_expr("va", "vb").alias("c")).collect()[0]["c"]
+    cos = cosine_from_norms(F.col("va"), F.col("vb"), vec_norm_expr("va"),
+                            vec_norm_expr("vb"))
+    got = df.select(cos.alias("c")).collect()[0]["c"]
     want = float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
     assert abs(got - want) < 1e-9
 
@@ -218,25 +221,6 @@ def test_ngram_jaccard_pair_stage_stays_wide(spark):
     assert "hashpartitioning(id_a" in plan, plan
 
 
-def test_srp_bucketer_evaluates_once_per_side(spark):
-    """r7 regression lock: the SRP bucket is a join key, and without
-    the non-deterministic mark the inferred isnotnull(bucket)
-    constraint is pushed below the projection and DUPLICATES the
-    pandas UDF (one copy ran as a single-task full-corpus GEMM below
-    the parallelizing repartition). Exactly one ArrowEvalPython per
-    join side may appear in the physical plan."""
-    from go_dedupe_spark.operators.ann import cosine_topk_lsh
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 5) for j in range(8)])
-         for i in range(30)],
-        "vec_id long, embedding array<double>")
-    out = cosine_topk_lsh(emb, emb.where("vec_id < 2"), dim=8, k=3,
-                          n_bits=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 2, plan
-
-
 def _final_plan(df) -> str:
     """The executed physical plan (AQE's final plan once it has run)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -249,10 +233,13 @@ def test_ann_kernel_runs_one_python_stage_at_a_time(spark, monkeypatch):
     worker alive: ~+75 MB PSS on perfbench near_dup_ann). Every plan
     they execute on the way holds at most one Python map node: the
     small-side collects, the IVF probes included, hold none, and each
-    item pass (the returned plan, and each trainer iteration) one."""
+    item pass (the returned plan, and each trainer iteration) one. The
+    LSH item pass buckets inside that node: no bucket UDF, no join on
+    the bucket."""
     from go_dedupe_spark.operators.ann import (
         cosine_topk_bruteforce,
         cosine_topk_ivf,
+        cosine_topk_lsh,
         train_ivf_centroids,
     )
 
@@ -284,7 +271,14 @@ def test_ann_kernel_runs_one_python_stage_at_a_time(spark, monkeypatch):
     assert plan.count("MapInArrow") == 1, plan
     assert "BroadcastExchange" not in plan, plan     # probes: driver data
 
-    # queries; centroids, queries and (when some are tied) probes
+    lsh = cosine_topk_lsh(emb, queries, dim=8, k=3, n_bits=4)
+    lsh.collect()
+    plan = _final_plan(lsh)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "Join" not in plan and "bucket" not in plan, plan
+
+    # queries; centroids, queries and (when some are tied) probes; queries
     assert side_plans and all(p.count("MapInArrow") == 0
                               for p in side_plans), side_plans
     side_plans.clear()

@@ -14,9 +14,10 @@ scores or destroys a table:
   the entry queries and n-gram dedup) equals Jaccard over Python sets,
   including the identical, disjoint and empty-set edge cases.
 - the ANN cosine block kernel: raw cosines bit-identical to the native
-  cosine_from_norms on array<double> and array<float>, and the three
-  operators built on it return the rows of the per-pair native
-  composition they replaced, edge cases included.
+  cosine_from_norms on array<double> and array<float>, over every pair
+  and over gathered pairs, and the four operators built on it return
+  the rows of the per-pair native composition they replaced, edge
+  cases included.
 - swap_dir/recover_dir: a crash injected before ANY filesystem
   operation of the real swap_dir, over a SEQUENCE of versioned swaps,
   never loses the live table — after recover_dir the table exists and
@@ -53,6 +54,8 @@ from go_dedupe_spark.operators.ann import (
     _vectors,
     cosine_topk_bruteforce,
     cosine_topk_ivf,
+    cosine_topk_lsh,
+    make_srp_bucketer,
     train_ivf_centroids,
 )
 from go_dedupe_spark.operators.dedupe import cosine_from_norms, vec_norm_expr
@@ -240,7 +243,8 @@ _EDGE_PAIRS = [
 def test_cosine_kernel_bit_identical_to_hof(spark, data, etype):
     """The numpy block kernel's raw cosine equals cosine_from_norms bit
     for bit (NULL and NaN included), on array<double> and array<float>
-    input; a pair whose norm product underflows raises in both."""
+    input, both as the matrix of every pair and over gathered pairs; a
+    pair whose norm product underflows raises in all three."""
     pairs = (_EDGE_PAIRS if data is None else
              data.draw(_vec_pairs(64 if etype == "double" else 32)))
     df = spark.createDataFrame(
@@ -248,11 +252,12 @@ def test_cosine_kernel_bit_identical_to_hof(spark, data, etype):
         f"i long, a array<{etype}>, b array<{etype}>")
     t = df.toArrow()
     n = len(pairs)
+    va, vb = _vectors(t["i"], t["a"]), _vectors(t["i"], t["b"])
     try:
-        cos, null = _cosines(_vectors(t["i"], t["a"]),
-                             _vectors(t["i"], t["b"]),
-                             skip=~np.eye(n, dtype=bool))
+        cos, null = _cosines(va.column(), vb, skip=~np.eye(n, dtype=bool))
     except ArithmeticError:
+        with pytest.raises(ArithmeticError):
+            _cosines(va, vb)
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
             df.select(_hof_cosine("a", "b")).collect()
         return
@@ -261,6 +266,8 @@ def test_cosine_kernel_bit_identical_to_hof(spark, data, etype):
             .orderBy("i").collect()]
     got = [None if null[i, i] else _bits(float(cos[i, i])) for i in range(n)]
     assert got == want
+    cos, null = _cosines(va, vb)
+    assert [None if null[i] else _bits(float(cos[i])) for i in range(n)] == want
 
 
 def _hof_bruteforce(items, queries, k):
@@ -270,6 +277,29 @@ def _hof_bruteforce(items, queries, k):
     it = items.select(F.col("vec_id").alias("item_id"),
                       F.col("embedding").alias("ivec"))
     scored = it.crossJoin(q).where(F.col("query_id") != F.col("item_id")) \
+        .select("query_id", "item_id",
+                F.round(_hof_cosine("qvec", "ivec"), 6).alias("cosine"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "item_id")
+    return scored.withColumn("rank", F.row_number().over(w)) \
+        .where(F.col("rank") <= k)
+
+
+def _hof_lsh(items, queries, dim, k, n_bits):
+    """The bucket equi-join the kernel scan replaced: pandas-UDF SRP
+    buckets, each query's n_bits + 1 probe buckets exploded and joined
+    to the items' bucket, the HOF cosine per joined pair."""
+    bucket = make_srp_bucketer(dim, n_bits)
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      F.col("embedding").alias("ivec"),
+                      bucket("embedding").alias("bucket"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec"),
+                       bucket("embedding").alias("b"))
+    probes = F.array(F.col("b"), *[
+        F.col("b").bitwiseXOR(F.lit(1 << b).cast("long"))
+        for b in range(n_bits)])
+    q = q.select("query_id", "qvec", F.explode(probes).alias("bucket"))
+    scored = it.join(q, "bucket").where(F.col("query_id") != F.col("item_id")) \
         .select("query_id", "item_id",
                 F.round(_hof_cosine("qvec", "ivec"), 6).alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "item_id")
@@ -349,16 +379,23 @@ def edge_vectors(spark):
 
 @pytest.mark.parametrize("k", [3, 100])
 def test_topk_operators_match_hof_on_edge_vectors(spark, edge_vectors, k):
-    """cosine_topk_bruteforce and cosine_topk_ivf return the same rows
-    as the native per-pair composition they replaced, on a table of
-    every cosine edge case, with k below and above |items|, and on
-    empty items, queries and centroids."""
+    """cosine_topk_bruteforce, cosine_topk_ivf and cosine_topk_lsh
+    return the same rows as the native per-pair composition they
+    replaced, on a table of every cosine edge case, with k below and
+    above |items|, and on empty items, queries and centroids. LSH runs
+    without the NULL vector and the length-2 row, which it rejects."""
     items = edge_vectors
     queries = items.where("vec_id < 12 OR vec_id % 7 = 0")
     empty = items.limit(0)
     for it, q in [(items, queries), (empty, queries), (items, empty)]:
         assert _rows(cosine_topk_bruteforce(it, q, k=k)) == \
             _rows(_hof_bruteforce(it, q, k))
+    lsh_items = items.where("vec_id NOT IN (6, 8)")
+    lsh_queries = lsh_items.where("vec_id < 12 OR vec_id % 7 = 0")
+    for it, q in [(lsh_items, lsh_queries), (empty, lsh_queries),
+                  (lsh_items, empty)]:
+        assert _rows(cosine_topk_lsh(it, q, dim=3, k=k, n_bits=4)) == \
+            _rows(_hof_lsh(it, q, 3, k, 4))
     # the NaN centroid ties every query's probes (Spark ranks them all);
     # the numeric set leaves most queries' probes decided by the kernel
     cents = items.where("vec_id IN (0, 4, 6, 9, 15, 22, 31)")

@@ -101,12 +101,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import os
-
     import __spark_entry__ as entry_mod
-    from go_dedupe_spark.session import get_spark
+    from go_dedupe_spark.session import default_cores, get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cores = default_cores()
     spark = get_spark("check-correctness", cores=cores,
                       shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
