@@ -32,6 +32,7 @@ from go_dedupe_spark.functions.similarity import (
     word_tokens,
 )
 from go_dedupe_spark.operators.blocking import SHA_PREFIX_LEN, make_blocks
+from go_dedupe_spark.session import spread
 
 # ---------------------------------------------------------------- registry
 
@@ -51,27 +52,9 @@ def query(name: str, sql: str | None = None):
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in ("documents", "embeddings"):
-        # these arrive as ONE small parquet file -> one input split -> a
-        # single task would run every expression-heavy stage (tokenize,
-        # shingle, minhash) on one core. Explicit repartition (a ~5 MB
-        # shuffle) restores full parallelism; the explicit number keeps
-        # AQE from coalescing it back. On a real corpus the scan has
-        # thousands of splits and this is a no-op decision.
-        # r7: HASH-partition on the id column instead of round-robin —
-        # (a) round-robin pays a local sort of every row before the
-        # exchange (spark.sql.execution.sortBeforeRepartition, guide
-        # §2.5); hash does not; (b) HashPartitioning(doc_id) satisfies
-        # the ClusteredDistribution of the simhash vote groupBy(id,
-        # n_toks) of both simhash queries, removing that one exchange
-        # (explain() of dedup_simhash: 2 exchanges, 3 with
-        # round-robin). The IVF
-        # assignment window keeps its exchange on item_id: the item
-        # scan runs through a mapInArrow kernel first, whose output
-        # carries no partitioning. Other queries gain only (a). Ids
-        # are unique, so the spread is binomial-uniform — no skew
-        # possible.
-        key = "doc_id" if name == "documents" else "vec_id"
-        df = df.repartition(spark.sparkContext.defaultParallelism, key)
+        # spread on the id: ids are unique, so the hash spread cannot
+        # skew, and it clusters the simhash vote's groupBy(id, n_toks)
+        return spread(df, "doc_id" if name == "documents" else "vec_id")
     return df
 
 

@@ -13,6 +13,16 @@ into deterministic sub-blocks (operators/pairs.salted_rekey), so the
 pair count from one bucket of n docs is bounded by ~n*salt_cap/2, never
 n(n-1)/2. AQE skew-join splits residual partition skew, but AQE alone
 cannot bound a quadratic pair count — the salt cap does.
+
+Input parallelism: the per-record tokenize/hash chains (MinHash band
+keys, the simhash vote, the n-gram table) run one task per input
+partition. One small parquet file is one split, so ``session.spread``
+hash-repartitions a narrower input on its id column to
+``defaultParallelism`` first, once, decided from the plan without a
+job. A scan with at least that many splits, or an input already spread
+(``entry_queries._t``), is left as it is: the rule adds no exchange.
+Hashing on the id also clusters the simhash vote's ``groupBy(id,
+n_toks)``, so that aggregation needs no exchange of its own.
 """
 
 from __future__ import annotations
@@ -27,6 +37,7 @@ from go_dedupe_spark.functions.similarity import (
     word_tokens,
 )
 from go_dedupe_spark.operators.pairs import block_pairs, salted_rekey
+from go_dedupe_spark.session import spread
 
 
 # ------------------------------------------------------------------ exact
@@ -60,8 +71,9 @@ def lsh_band_keys(
     """df -> (id, block_key): one row per MinHash band of each doc's
     word tokens. ``scope_col`` (e.g. lang) prefixes every key so buckets
     never cross scopes. Every key embeds its band number, so one id
-    never emits the same key twice. Lazy: callers materialize it."""
-    toked = df.select(
+    never emits the same key twice. A narrower input is hash-spread on
+    id once (``session.spread``). Lazy: callers materialize it."""
+    toked = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         word_tokens(F.col(text_col)).alias("_toks"),
         *([F.col(scope_col).cast("string").alias("_scope")] if scope_col else []),
@@ -133,21 +145,24 @@ def simhash_column(df: DataFrame, id_col: str, text_col: str,
     per-bit vote columns (cheap bit ops on the single hash) -> groupBy
     id with map-side partial sums. A pure column-expression formulation
     would re-evaluate the token-hash array once per bit aggregate
-    (16x the tokenizer + md5 work per row).
+    (16x the tokenizer + md5 work per row). A narrower input is
+    hash-spread on id once (``session.spread``), which also clusters
+    the vote: it needs no exchange.
 
     Zero-token docs are EXCLUDED — the explode emits no row for an
-    empty token array, which IS the guard (an explicit ``where`` on
-    size(toks) would defeat common-subexpression reuse and run the
-    tokenizer twice per row — measured 2x on the whole query). SQL
+    empty token array, which IS the guard. It explodes the token-hash
+    array, not the token column: exploding a bare column lets the
+    optimizer infer a ``size(toks) > 0`` filter and push it below the
+    spread, where it tokenizes every row a second time on the unspread
+    input (an explicit ``where`` measured 2x on the whole query). SQL
     twins must carry an explicit ``len(toks) > 0`` guard (unnest
     semantics differ) or they diverge on degenerate input."""
-    toked = df.select(
+    toked = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         word_tokens(F.col(text_col)).alias("toks"),
     )
-    ex = toked.select(
-        "id", F.size("toks").alias("n_toks"), F.explode("toks").alias("tok")
-    ).withColumn("h", token_hash64(F.col("tok")))
+    ex = toked.select("id", F.size("toks").alias("n_toks"),
+                      F.explode(F.transform("toks", token_hash64)).alias("h"))
     votes = ex.groupBy("id", "n_toks").agg(
         *[F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"v{b}")
           for b in range(bits)]
@@ -210,14 +225,15 @@ def simhash_hamming_pairs(
         )
         for i in range(bands)
     ])
-    keyed = sim.select("id", "simhash", F.explode(band_keys).alias("block_key"))
-    # materialize once (r7): both self-join sides otherwise recompute
-    # the simhash vote aggregation + banding + rekey — the single most
-    # expensive subtree of this operator.
-    keyed = salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap) \
+    # materialize the band keys once, as minhash_lsh_pairs does: the
+    # salting reads them twice (block sizes, then the rekey join), and
+    # with no exchange left after the vote each read would re-run the
+    # tokenize + hash + vote.
+    keyed = sim.select("id", "simhash", F.explode(band_keys).alias("block_key")) \
         .localCheckpoint(eager=True)
+    salted = salted_rekey(keyed, max_block=max_block, salt_cap=salt_cap)
     return (
-        block_pairs(keyed, carry=("simhash",))
+        block_pairs(salted, carry=("simhash",))
         .select(
             "id_a", "id_b",
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
@@ -242,7 +258,8 @@ def ngram_jaccard_pairs(
     """Exact char-n-gram Jaccard on candidate pairs (distinct grams).
     candidate_pairs: (id_a, id_b). Returns (id_a, id_b, jaccard) with
     jaccard >= ``threshold``. Building the DataFrame runs one eager
-    job: the per-doc gram table is localCheckpointed.
+    job: the per-doc gram table is localCheckpointed. A narrower input
+    is hash-spread on id once (``session.spread``) before the grams.
 
     Every gram is md5-prefix-hashed to a 60-bit long BEFORE the pair
     join, so the per-pair shuffle carries 8-byte ints instead of full
@@ -261,7 +278,8 @@ def ngram_jaccard_pairs(
     # policy as scoring.build_features. The per-doc distinct gram count
     # is stored next to the grams for set_jaccard.
     grams = (
-        df.select(F.col(id_col).alias("id"), gram_expr.alias("grams"))
+        spread(df, id_col)
+        .select(F.col(id_col).alias("id"), gram_expr.alias("grams"))
         .withColumn("n_grams", F.size("grams"))
         .localCheckpoint(eager=True))
     # NO manual broadcast of the gram table: the full per-doc gram

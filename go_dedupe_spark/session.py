@@ -15,13 +15,36 @@ import shutil
 import tempfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cores() -> int:
     """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run on."""
     return int(os.environ.get("SPARK_GRAFT_CPUS",
                               len(os.sched_getaffinity(0))))
+
+
+def spread(df: DataFrame, key: str) -> DataFrame:
+    """The one input-parallelism rule of the per-record operators:
+    ``df`` hash-repartitioned on ``key`` to ``defaultParallelism``
+    partitions when its plan yields fewer, else ``df`` itself.
+
+    The count is read from the plan and runs no Spark job. With AQE on
+    (``get_spark``), a plan with an exchange is adaptive; before it
+    runs, its ``executedPlan`` is the planned one, exchanges included,
+    and names its output partitioning (``UnknownPartitioning(0)`` for a
+    union or a broadcast join's probe side, which therefore counts as
+    narrow). A plan without one is a chain of narrow operators over a
+    scan, whose splits are listed without a job. A scan of one small
+    file is one split and gets spread; a scan of many splits, or a
+    frame already spread, is returned unchanged."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        n = plan.executedPlan().outputPartitioning().numPartitions()
+    else:
+        n = plan.execute().getNumPartitions()
+    return df if n >= par else df.repartition(par, key)
 
 
 def get_spark(

@@ -4,6 +4,8 @@ structure (mirrors vector/tests.go's expected-count strategy)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,12 +13,15 @@ from go_dedupe_spark.operators.dedupe import (
     cosine_from_norms,
     embedding_cosine_pairs,
     exact_duplicates,
+    lsh_band_keys,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    simhash_column,
     simhash_duplicates,
     simhash_hamming_pairs,
     vec_norm_expr,
 )
+from go_dedupe_spark.session import spread
 
 
 @pytest.fixture(scope="module")
@@ -286,3 +291,146 @@ def test_ann_kernel_runs_one_python_stage_at_a_time(spark, monkeypatch):
     # items checkpoint, init, one collect per iteration
     assert [p.count("MapInArrow") for p in side_plans] == [0, 0, 1, 1], \
         side_plans
+
+
+# ------------------------------------------------ input parallelism rule
+
+
+@pytest.fixture(scope="module")
+def one_split(spark, tmp_path_factory):
+    """A scan of one small parquet file: one input split."""
+    path = str(tmp_path_factory.mktemp("spread") / "docs")
+    spark.createDataFrame(
+        [(i, f"document {i} says hello to word{i % 7}", "en")
+         for i in range(60)],
+        "doc_id long, text string, lang string",
+    ).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    return scan
+
+
+def _planned(df) -> str:
+    """The physical plan as planned, exchanges included, before it runs."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _gram_table_plan(spark, docs, monkeypatch) -> str:
+    """The planned gram table of ``ngram_jaccard_pairs(docs, ...)``: the
+    first frame it localCheckpoints."""
+    plans = []
+    real = type(docs).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_planned(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording)
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    ngram_jaccard_pairs(docs, pairs, "doc_id", "text")
+    monkeypatch.undo()
+    return plans[0]
+
+
+def test_spread_puts_one_hash_exchange_ahead_of_tokenize(
+        spark, one_split, monkeypatch):
+    """A one-split scan gets exactly one hashpartitioning(doc_id,
+    defaultParallelism) exchange, directly on the scan, so every
+    tokenize/hash expression runs spread. simhash's vote adds no
+    exchange of its own: the spread already clusters it on id."""
+    par = spark.sparkContext.defaultParallelism
+    spread_on_id = re.compile(
+        rf"Exchange hashpartitioning\(doc_id#\d+L?, {par}\)")
+    plans = {
+        "lsh_band_keys": _planned(lsh_band_keys(one_split, scope_col="lang")),
+        "simhash_column": _planned(simhash_column(one_split, "doc_id", "text")),
+        "gram table": _gram_table_plan(spark, one_split, monkeypatch),
+    }
+    for name, plan in plans.items():
+        lines = plan.splitlines()
+        at = [i for i, line in enumerate(lines) if "Exchange" in line]
+        assert len(at) == 1 and spread_on_id.search(lines[at[0]]), \
+            (name, plan)
+        assert all("FileScan" in line for line in lines[at[0] + 1:]), \
+            (name, plan)
+
+
+def test_spread_adds_no_exchange_to_a_wide_input(spark, one_split):
+    """An input with >= defaultParallelism partitions is returned as it
+    is: a 16-partition frame, and a frame the rule already spread. The
+    operators' plans keep the input's one repartition; only the
+    simhash vote over the round-robin frame shuffles on its own key."""
+    wide = one_split.repartition(16)
+    spread_once = spread(one_split, "doc_id")
+    assert spread_once is not one_split
+    for df in (wide, spread_once):
+        assert spread(df, "doc_id") is df
+        for built in (lsh_band_keys(df),
+                      simhash_column(df, "doc_id", "text")):
+            plan = _planned(built)
+            assert plan.count("REPARTITION_BY_NUM") == 1, plan
+
+
+def test_spread_decides_without_a_job(spark, one_split):
+    """The rule reads the plan; it never runs a job, also when the
+    input's plan already holds an exchange."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs_of(name, fn):
+        group = f"spread-decision-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_of("control", one_split.count)   # the probe sees jobs
+    inputs = {
+        "scan": one_split,
+        "wide": one_split.repartition(16),
+        "spread": one_split.repartition(sc.defaultParallelism, "doc_id"),
+        "aggregated": one_split.dropDuplicates(["doc_id"]),
+    }
+    for name, df in inputs.items():
+        assert jobs_of(name, lambda: spread(df, "doc_id")) == [], name
+    # the aggregation's planned exchange already spreads it
+    assert spread(inputs["aggregated"], "doc_id") is inputs["aggregated"]
+
+
+def test_near_dup_operators_are_partition_invariant(spark):
+    """MinHash LSH, banded simhash and n-gram Jaccard return the same
+    rows at 1, 4 and 16 input partitions, over degenerate rows (NULL,
+    empty and shorter-than-n text, non-ASCII text) and a 90%-one-
+    template block big enough that the salt cap binds."""
+    template = ("licensed under the apache license version two point zero "
+                "you may not use this file except in compliance")
+    rows = [(i, template if i % 4 else f"{template} rev {i}", "en")
+            for i in range(180)]
+    rows += [
+        (180, None, "en"), (181, "", "en"), (182, "", "en"),
+        (183, "abc", "en"), (184, "abc", "en"), (185, "ab", "py"),
+        (186, "naïve café über straße déjà vu 東京 データ", "py"),
+        (187, "naïve café über straße déjà vu 東京 データ!", "py"),
+        (188, "ÀÉÎÕÜ ñ ç ø å ß", "en"),
+    ]
+    rows += [(i, f"unrelated body {i} with words w{i} x{i * 3} y{i % 5}", "en")
+             for i in range(189, 200)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+    def results(df):
+        cand = minhash_lsh_pairs(df, scope_col="lang")
+        return (
+            sorted(map(tuple, cand.collect())),
+            sorted(map(tuple, simhash_hamming_pairs(df).collect())),
+            sorted(map(tuple, ngram_jaccard_pairs(df, cand).collect())),
+        )
+
+    want = results(docs.repartition(1))
+    assert all(want)
+    uncapped = minhash_lsh_pairs(docs, scope_col="lang", max_block=10_000)
+    assert len(want[0]) < uncapped.count()           # the salt cap binds
+    for n in (4, 16):
+        assert results(docs.repartition(n)) == want, n
