@@ -11,9 +11,13 @@ Cross-engine determinism rules used throughout:
   HUGEINT; Spark uses long).
 - window ranks order by (rounded value, id) so ties are deterministic.
 
-The ER queries run the real pipeline operators over the ``documents``
-table via a files-shaped adapter (doc_id -> id, source/doc_id -> path,
-text -> content).
+The ER rows (``er_*``, ``resolution_supersession``) are the library
+pipeline's own stages with the default ``PipelineConfig`` — normalize,
+make_blocks, candidate_pairs, build_features, score_pairs,
+connected_components, resolve_clusters — over one documents -> files
+adapter (repo = source, path = source/doc_<doc_id>.txt, commit = an
+8-hex sha256 of the doc_id, content = text). Their oracles are one
+DuckDB CTE chain twinning those stages, hashed n-gram cosine included.
 """
 
 from __future__ import annotations
@@ -25,13 +29,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from go_dedupe_spark.functions.similarity import (
-    jaro_winkler_udf,
-    set_jaccard,
-    token_shingles,
-    word_tokens,
+from go_dedupe_spark.functions.similarity import HASH_DIM, NGRAM_N, _gram_coef
+from go_dedupe_spark.operators.blocking import (
+    SHA_PREFIX_LEN,
+    block_histogram,
+    make_blocks,
 )
-from go_dedupe_spark.operators.blocking import SHA_PREFIX_LEN, make_blocks
+from go_dedupe_spark.operators.components import (
+    connected_components,
+    with_singletons,
+)
+from go_dedupe_spark.operators.normalize import normalize, quarantine
+from go_dedupe_spark.operators.pairs import candidate_pairs
+from go_dedupe_spark.operators.scoring import (
+    JAC_FLOOR,
+    SHINGLE_N,
+    W_COSINE,
+    W_JACCARD,
+    W_JW,
+    build_features,
+    score_pairs,
+    top_k_matches,
+)
+from go_dedupe_spark.plans.pipeline import PipelineConfig
 from go_dedupe_spark.session import spread
 
 # ---------------------------------------------------------------- registry
@@ -58,36 +78,31 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# ------------------------------------------------- ER pipeline constants
+# ------------------------------------------------------------ ER pipeline
 
-ER_NH, ER_R = 8, 4          # unigram-token MinHash: 2 bands x 4 rows
-CMH_NH, CMH_R = 9, 3        # 3-token-shingle MinHash: 3 bands x 3 rows
-ER_W_JW, ER_W_JAC = 0.3, 0.7
-ER_THRESHOLD = 0.31
-# Broadcast the per-record scoring sides of the pair joins only while
-# the record table is measurably small (~1 KB/record -> <=200 MB
-# broadcast). The decision reads the COUNT of the already-materialized
-# checkpoint (one cheap job), not a planner estimate: localCheckpointed
-# tables carry no size statistics, and at sf1 the planner fell back to
-# sort-merge joins that shuffled the pair table WITH its attached
-# shingle payload (~1 GB) — 48s vs 29s for er_scores. Above the bound
-# the joins stay shuffle joins, the only plan possible at corpus scale.
-ER_BROADCAST_MAX_RECORDS = 200_000
-# Mega-block salting (the documents corpus has a genuine dense block:
-# a ~30-word shared vocabulary puts ~20% of each language in one
-# unigram-MinHash bucket — the analog of a dense downtown geohash).
-# Blocks larger than ER_MAX_BLOCK are split into deterministic md5-salt
-# sub-blocks of ~ER_SALT_CAP members, bounding pair counts; the oracle
-# SQL reproduces the salt exactly.
+# The er_* rows run the library pipeline (plans.pipeline) with its
+# default bands, caps and threshold over a documents -> files adapter;
+# their oracles are the DuckDB twin of the same stages, built from the
+# same constants.
+ER = PipelineConfig()
+
+# Mega-block salting for the dedup rows (the documents corpus has a
+# genuine dense block: a ~30-word shared vocabulary puts ~20% of each
+# language in one unigram-MinHash bucket — the analog of a dense
+# downtown geohash). Blocks larger than ER_MAX_BLOCK are split into
+# deterministic md5-salt sub-blocks of ~ER_SALT_CAP members, bounding
+# pair counts; the oracle SQL reproduces the salt exactly.
 ER_MAX_BLOCK = 100
 ER_SALT_CAP = 40
 
-# --- shared DuckDB CTE text (records/shingles/signatures/blocks/pairs) ---
 
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), "
-    "t -> t <> '')"
-)
+def _sql_words(col: str) -> str:
+    """DuckDB twin of ``similarity.word_tokens``."""
+    return (f"list_filter(regexp_split_to_array(lower({col}), "
+            f"'[^a-z0-9_]+'), t -> t <> '')")
+
+
+_SQL_TOKS = _sql_words("text")
 
 
 def _sql_sig(n: int, src: str, prefix: str) -> str:
@@ -105,288 +120,354 @@ def _sql_band(prefix: str, band: int, rows: int, sig_prefix: str) -> str:
     return f"lang || ':{prefix}:{band}:' || md5({parts})"
 
 
-def _records_cte() -> str:
-    return f"""
-t AS (
-  SELECT doc_id, lang, source, text,
-         sha256('doc:' || CAST(doc_id AS VARCHAR)) AS id,
+def _sql_double(x: float) -> str:
+    return f"{x!r}::DOUBLE"
+
+
+def _sql_salted(src: str, key: str, id_col: str,
+                max_block: int = ER_MAX_BLOCK, salt_cap: int = ER_SALT_CAP) -> str:
+    """``src`` with ``key`` rewritten as ``pairs.salted_rekey`` does: a
+    block over max_block members splits into md5-salted sub-blocks of
+    ~salt_cap."""
+    return f"""SELECT * EXCLUDE (n) REPLACE (CASE WHEN n <= {max_block} THEN {key}
+    ELSE {key} || '#' || CAST(
+      (('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 8))::BIGINT
+       % CAST(ceil(n / {salt_cap}.0) AS BIGINT)) AS VARCHAR) END AS {key})
+  FROM (SELECT *, count(*) OVER (PARTITION BY {key}) AS n FROM {src})"""
+
+
+# --- the documents -> files adapter: one Spark frame, one SQL CTE ---
+
+
+def _files(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents -> files(doc_id, repo, path, commit, lang, content)."""
+    doc = F.col("doc_id").cast("string")
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.col("source").alias("repo"),
+        F.concat(F.col("source"), F.lit("/doc_"), doc, F.lit(".txt")).alias("path"),
+        F.substring(F.sha2(F.concat(F.lit("c:"), doc), 256), 1, 8).alias("commit"),
+        "lang",
+        F.col("text").alias("content"),
+    )
+
+
+_SQL_FILES = """
+files AS (
+  SELECT doc_id, source AS repo,
          source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt' AS path,
-         sha256(text) AS content_sha256,
-         {_SQL_TOKS} AS toks
+         substr(sha256('c:' || CAST(doc_id AS VARCHAR)), 1, 8) AS commit,
+         lang, text AS content
   FROM documents
-),
-sh AS (
-  SELECT *, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-       ELSE list_transform(range(1, len(toks) - 1),
-                           i -> array_to_string(toks[i:i+2], ' ')) END AS shingles
-  FROM t
 )"""
 
+# --- DuckDB twins of the library stages, one CTE chain ---
 
-def _blocks_cte() -> str:
-    mh_bands = ER_NH // ER_R
-    cmh_bands = CMH_NH // CMH_R
-    selects = [
-        f"SELECT id, 'sha:' || lang || ':' || substr(content_sha256, 1, {SHA_PREFIX_LEN}) "
-        f"AS block_key, 'sha' AS block_kind FROM sig"
+# normalize: record_id_expr, content_sha256, path_tokens (camelCase
+# split, lowered, split on separators), the validity predicate; plus
+# the content words both the cmh band and the shingles read
+_SQL_RECORDS = f"""
+rec AS (
+  SELECT sha256(concat_ws(chr(31), repo, path, commit)) AS id,
+         path, commit, lang, content, sha256(content) AS content_sha256,
+         list_filter(regexp_split_to_array(lower(regexp_replace(
+             path, '([a-z0-9])([A-Z])', '\\1 \\2', 'g')), '[/_\\-.\\s]+'),
+           t -> t <> '') AS path_tokens,
+         {_sql_words('content')} AS words
+  FROM files
+  WHERE repo <> '' AND path <> '' AND commit <> '' AND lang <> ''
+    AND content IS NOT NULL
+)"""
+
+# PipelineConfig.bands() with each token Column as its ``rec`` column
+# (bands() itself builds Columns, which needs a live SparkContext)
+_SQL_BANDS = [
+    ("mh", "path_tokens", ER.num_hashes, ER.band_rows),
+    ("cmh", "words", ER.content_num_hashes, ER.content_band_rows),
+]
+
+
+def _sql_blocks() -> str:
+    """make_blocks(records, ER.bands()): the sha key, then every band's
+    lang-scoped MinHash band keys (none for an empty token array)."""
+    sigs, selects = [], [
+        f"SELECT id, 'sha:' || lang || ':' || substr(content_sha256, 1, "
+        f"{SHA_PREFIX_LEN}) AS block_key, 'sha' AS block_kind FROM sig"
     ]
-    # mh bands guard on n_toks > 0 (mirrors minhash_band_keys' empty-
-    # array rule: empty token arrays emit no band keys). cmh shingles
-    # are never empty (the CASE collapses short docs to one shingle).
-    for b in range(mh_bands):
-        selects.append(
-            f"SELECT id, {_sql_band('mh', b, ER_R, 's')} AS block_key, "
-            f"'mh' AS block_kind FROM sig WHERE n_toks > 0"
-        )
-    for b in range(cmh_bands):
-        selects.append(
-            f"SELECT id, {_sql_band('cmh', b, CMH_R, 'c')} AS block_key, "
-            f"'cmh' AS block_kind FROM sig"
-        )
-    union = " UNION ALL ".join(selects)
+    for prefix, toks, num_hashes, band_rows in _SQL_BANDS:
+        sigs.append(f"len({toks}) AS n_{prefix}, "
+                    + _sql_sig(num_hashes, toks, f"{prefix}_"))
+        selects += [
+            f"SELECT id, {_sql_band(prefix, b, band_rows, f'{prefix}_')} "
+            f"AS block_key, '{prefix}' AS block_kind FROM sig "
+            f"WHERE n_{prefix} > 0"
+            for b in range(num_hashes // band_rows)
+        ]
     return f"""
-sig AS (
-  SELECT id, lang, content_sha256, len(toks) AS n_toks,
-         {_sql_sig(ER_NH, 'toks', 's')},
-         {_sql_sig(CMH_NH, 'shingles', 'c')}
-  FROM sh
-),
-bl AS (SELECT DISTINCT id, block_key, block_kind FROM ({union}))"""
+sig AS (SELECT id, lang, content_sha256, {', '.join(sigs)} FROM rec),
+bl AS ({' UNION ALL '.join(selects)})"""
 
 
-def _pairs_cte() -> str:
-    return f"""
-bsz AS (SELECT block_key, count(*) AS n FROM bl GROUP BY block_key),
-bs AS (SELECT bl.id, bl.block_key, bsz.n FROM bl JOIN bsz USING (block_key)),
-keyed AS (
-  SELECT id, block_key FROM bs WHERE n <= {ER_MAX_BLOCK}
-  UNION ALL
-  SELECT id, block_key || '#' || CAST(
-      (('0x' || substr(md5(id), 1, 8))::BIGINT
-       % CAST(ceil(n / {ER_SALT_CAP}.0) AS BIGINT)) AS VARCHAR) AS block_key
-  FROM bs WHERE n > {ER_MAX_BLOCK}
-),
+# candidate_pairs: salted_rekey, then the id_a < id_b self-join
+_SQL_PAIRS = f"""
+keyed AS ({_sql_salted('bl', 'block_key', 'id', ER.max_block, ER.salt_cap)}),
 pr AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM keyed a JOIN keyed b ON a.block_key = b.block_key AND a.id < b.id
 )"""
 
 
-def _scores_cte() -> str:
+# the avalanche multiplier of similarity._hash_vector
+_MIX = 0xFF51AFD7ED558CCD
+
+
+def _sql_gram_vectors(src: str) -> str:
+    """CTEs ``gc(id, b, c)`` and ``gv(id, vec)`` over ``src(id,
+    content)``: the DuckDB twin of ``similarity._hash_vector`` (bucket
+    ``b``'s nonzero count ``c``) and of ``hashed_ngram_vector_udf``
+    (counts L2-normalized in double, then FLOAT; ``vec`` is the dense
+    vector as DOUBLE[]). Each window of the UTF-8 bytes (zero-padded to
+    NGRAM_N; empty text has none) hashes to ``Σ byte·coef`` (below
+    2^43, so no uint64 wrap), then the avalanche ``h ^= h>>33;
+    h *= MIX mod 2^64; h ^= h>>33``, and the bucket is ``h % dim``."""
+    n = NGRAM_N
+    # the n byte lists by[k+1 : k+m] unnest side by side (no lambda
+    # capture, which would copy ``by`` per element): row w is window w
+    cols = ", ".join(f"unnest(by[{k + 1}:m + {k}]) AS b{k}" for k in range(n))
+    win = " + ".join(f"b{k} * {int(c)}" for k, c in enumerate(_gram_coef(n)))
     return f"""
-sc AS (
-  SELECT pr.id_a, pr.id_b,
-    round(jaro_winkler_similarity(x.path, y.path), 6) AS jw_path,
-    round(len(list_intersect(list_distinct(x.shingles), list_distinct(y.shingles)))
-      * 1.0 / len(list_distinct(list_concat(x.shingles, y.shingles))), 6)
-      AS jaccard_content,
-    round({ER_W_JW} * jaro_winkler_similarity(x.path, y.path)
-      + {ER_W_JAC} * (len(list_intersect(list_distinct(x.shingles), list_distinct(y.shingles)))
-      * 1.0 / len(list_distinct(list_concat(x.shingles, y.shingles)))), 6) AS score
-  FROM pr JOIN sh x ON x.id = pr.id_a JOIN sh y ON y.id = pr.id_b
+gx AS (
+  SELECT id, octet_length(encode(content)) AS nb,
+         rpad(hex(encode(content)),
+              CAST(2 * greatest(octet_length(encode(content)), {n}) AS INTEGER),
+              '0') AS hx
+  FROM {src}
+),
+gb AS (
+  SELECT id, list_transform(regexp_extract_all(hx, '..'),
+                            x -> ('0x' || x)::BIGINT) AS by,
+         CASE WHEN nb = 0 THEN 0 ELSE greatest(nb, {n}) - {n - 1} END AS m
+  FROM gx
+),
+gh AS (SELECT id, {win} AS h FROM (SELECT id, {cols} FROM gb)),
+gm AS (
+  SELECT id, CAST(xor(h, h >> 33)::HUGEINT * {_MIX}::HUGEINT
+                  % 18446744073709551616::HUGEINT AS UBIGINT) AS h
+  FROM gh
+),
+gc AS (SELECT id, xor(h, h >> 33) % {HASH_DIM} AS b, count(*) AS c
+       FROM gm GROUP BY ALL),
+gn AS (SELECT id, b, (c / sqrt(sum(c * c) OVER (PARTITION BY id)))::FLOAT AS v
+       FROM gc),
+gv AS (
+  SELECT s.id, list(coalesce(gn.v, 0)::DOUBLE ORDER BY r.k) AS vec
+  FROM {src} s CROSS JOIN range({HASH_DIM}) r(k)
+       LEFT JOIN gn ON gn.id = s.id AND gn.b = r.k
+  GROUP BY s.id
 )"""
 
 
-# ---------------------------------------------- ER pipeline Spark builders
-
-
-def _doc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        F.sha2(F.concat(F.lit("doc:"), F.col("doc_id").cast("string")), 256).alias("id"),
-        F.concat(F.col("source"), F.lit("/doc_"),
-                 F.col("doc_id").cast("string"), F.lit(".txt")).alias("path"),
-        "lang",
-        F.col("text").alias("content"),
-        F.sha2(F.col("text"), 256).alias("content_sha256"),
-        word_tokens(F.col("text")).alias("toks"),
-    ).withColumn("shingles", token_shingles(F.col("toks"), n=3))
-
-
-def _doc_blocks(records: DataFrame) -> DataFrame:
-    bands = [("mh", F.col("toks"), ER_NH, ER_R),
-             ("cmh", F.col("shingles"), CMH_NH, CMH_R)]
-    # the dedup is the oracle's SELECT DISTINCT
-    return make_blocks(records, bands) \
-        .dropDuplicates(["id", "block_key", "block_kind"])
-
-
-def _doc_pairs(blocks: DataFrame) -> DataFrame:
-    """Candidate pairs via the library's skew-capped generator
-    (operators/pairs.py): mega-blocks are md5-salted into sub-blocks of
-    ~ER_SALT_CAP members — the explicit skew handling north_rule
-    requires, exercised (and oracle-verified) on the documents corpus."""
-    from go_dedupe_spark.operators.pairs import candidate_pairs
-
-    return candidate_pairs(
-        blocks, max_block=ER_MAX_BLOCK, salt_cap=ER_SALT_CAP
-    ).select("id_a", "id_b")
-
-
-def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Materialize the tokenized records ONCE (r7, guide §2.4/§5): the
-    # static plan recomputed the scan+tokenize+shingle subtree inside
-    # every BroadcastExchange build (pair self-join sides, mega-key
-    # sizes, x, y — 10 BroadcastHashJoins in the before-plan), and the
-    # minhash-band expression twice more for the self-join. Two
-    # localCheckpoints — records (minus the full content column; only
-    # path/shingles flow into scoring) and the exploded block rows —
-    # cut that to one evaluation each. Same policy and scale story as
-    # operators/scoring.build_features: the checkpoint is distributed
-    # executor storage, not a driver collect.
-    records = _doc_records(spark, sf_dir).drop("content") \
-        .localCheckpoint(eager=True)
-    blocks = _doc_blocks(records).localCheckpoint(eager=True)
-    pairs = _doc_pairs(blocks)
-    # Per-RECORD distinct shingles + size, computed once before the
-    # pair joins (r7), so the per-pair Jaccard is set_jaccard's single
-    # array_intersect — value-identical to the oracle's
-    # len(list_distinct(list_concat(..))) union.
-    slim = records.select(
-        "id", "path", F.array_distinct("shingles").alias("sh_d"),
-    ).withColumn("n_d", F.size("sh_d"))
-    # Data-adaptive broadcast of the record sides (see
-    # ER_BROADCAST_MAX_RECORDS): counting the materialized checkpoint
-    # replaces the planner's statistics, which a LogicalRDD does not
-    # have. Above the bound: plain shuffle joins — the only plan
-    # possible at corpus scale.
-    hint = (F.broadcast if records.count() <= ER_BROADCAST_MAX_RECORDS
-            else (lambda df: df))
-    x = hint(slim.select(
-        F.col("id").alias("id_a"), F.col("path").alias("path_a"),
-        F.col("sh_d").alias("sh_a"), F.col("n_d").alias("n_a")))
-    y = hint(slim.select(
-        F.col("id").alias("id_b"), F.col("path").alias("path_b"),
-        F.col("sh_d").alias("sh_b"), F.col("n_d").alias("n_b")))
-    jw = jaro_winkler_udf(F.col("path_a"), F.col("path_b"))
-    jac = set_jaccard("sh_a", "sh_b", "n_a", "n_b")
-    # r7: no explicit pair repartition — candidate_pairs ends in a
-    # dropDuplicates exchange on (id_a, id_b) and AQE's coalescer
-    # (parallelismFirst, 1 MB min partition) keeps the UDF+array stage
-    # wide: per-partition work is bounded at ~1 MB of pairs at every
-    # scale. The old repartition was a full extra exchange of the pair
-    # set (A/B at sf0.1: 3.0-4.2s -> 2.7-2.9s warm).
-    return (
-        pairs
-        .join(x, "id_a").join(y, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(jw, 6).alias("jw_path"),
-            F.round(jac, 6).alias("jaccard_content"),
-            F.round(F.lit(ER_W_JW) * jw + F.lit(ER_W_JAC) * jac, 6).alias("score"),
-        )
+def _sql_scores() -> str:
+    """build_features + score_pairs: phase 1 is the 28-bit shingle-hash
+    set Jaccard, decided 'jaccard_floor' below JAC_FLOOR; phase 2 is
+    'exact' for equal content hashes, else the weighted JW + Jaccard +
+    cosine sum, in the library's term order."""
+    n = SHINGLE_N
+    # token_shingles: a zero-token doc has the one shingle '' (Spark's
+    # concat_ws of an empty array; DuckDB's array_to_string gives NULL)
+    shingles = (
+        f"CASE WHEN len(words) < {n} "
+        f"THEN [coalesce(array_to_string(words, ' '), '')] "
+        f"ELSE list_transform(range(1, len(words) - {n - 2}), "
+        f"i -> array_to_string(words[i:i + {n - 1}], ' ')) END"
     )
+    return f"""
+ft AS (
+  SELECT id, path, content_sha256, content, list_distinct(list_transform(
+      {shingles}, s -> ('0x' || substr(md5(s), 1, 7))::BIGINT)) AS toks
+  FROM rec
+),
+p1 AS (
+  SELECT id_a, id_b, x.path AS path_a, y.path AS path_b,
+         x.content_sha256 = y.content_sha256 AS same,
+         len(list_intersect(x.toks, y.toks)) AS i,
+         len(x.toks) + len(y.toks) AS n
+  FROM pr JOIN ft x ON x.id = id_a JOIN ft y ON y.id = id_b
+),
+jc AS (SELECT *, CASE WHEN n = i THEN 0.0::DOUBLE
+                      ELSE i::DOUBLE / (n - i) END AS jac FROM p1),
+p2 AS (SELECT * FROM jc WHERE jac >= {_sql_double(JAC_FLOOR)}),
+fv AS (SELECT id, content FROM ft
+       WHERE id IN (SELECT id_a FROM p2) OR id IN (SELECT id_b FROM p2)),
+{_sql_gram_vectors('fv')},
+f2 AS (
+  SELECT id_a, id_b,
+    CASE WHEN same THEN 1.0::DOUBLE
+         ELSE jaro_winkler_similarity(path_a, path_b) END AS jw,
+    CASE WHEN same THEN 1.0::DOUBLE ELSE jac END AS jac,
+    CASE WHEN same THEN 1.0::DOUBLE
+         ELSE list_inner_product(x.vec, y.vec) END AS cos,
+    CASE WHEN same THEN 'exact' ELSE 'full' END AS decided_by
+  FROM p2 JOIN gv x ON x.id = id_a JOIN gv y ON y.id = id_b
+),
+s2 AS (
+  SELECT *, jw * {_sql_double(W_JW)} + jac * {_sql_double(W_JACCARD)}
+            + cos * {_sql_double(W_COSINE)} AS score FROM f2
+),
+sc AS (
+  SELECT id_a, id_b, NULL::DOUBLE AS jw_path, jac AS jaccard_content,
+         NULL::DOUBLE AS cosine_ngram, jac * {_sql_double(W_JACCARD)} AS score,
+         false AS is_match, 'jaccard_floor' AS decided_by
+  FROM jc WHERE jac < {_sql_double(JAC_FLOOR)}
+  UNION ALL
+  SELECT id_a, id_b, jw, jac, cos, score,
+         score >= {_sql_double(ER.threshold)}, decided_by
+  FROM s2
+)"""
+
+
+_SQL_ER = f"{_SQL_FILES}, {_SQL_RECORDS}"
+_SQL_ER_BLOCKS = f"{_SQL_ER}, {_sql_blocks()}"
+_SQL_ER_PAIRS = f"{_SQL_ER_BLOCKS}, {_SQL_PAIRS}"
+_SQL_ER_SCORES = f"{_SQL_ER_PAIRS}, {_sql_scores()}"
+# components: min-id reachability over the match graph, every record
+# seeded as its own root (with_singletons)
+_SQL_ER_COMPONENTS = f"""{_SQL_ER_SCORES},
+m AS (SELECT id_a, id_b FROM sc WHERE is_match),
+edges AS (SELECT id_a AS u, id_b AS v FROM m
+          UNION SELECT id_b, id_a FROM m),
+reach(id, r) AS (
+  SELECT id, id FROM rec
+  UNION
+  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u
+),
+comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)"""
+
+
+# --- the library stages over the adapter: the calls run_pipeline makes ---
+
+
+def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return normalize(_files(spark, sf_dir))
+
+
+def _blocks(records: DataFrame) -> DataFrame:
+    return make_blocks(records, ER.bands())
+
+
+def _pairs(records: DataFrame) -> DataFrame:
+    # materialized as run_pipeline's stages are: candidate_pairs reads
+    # the blocks twice (mega-block sizes, self-join), and each lazy read
+    # recomputes the MinHash bands (sf0.1 er_components: 13-15 s -> 9-11 s)
+    blocks = _blocks(records).localCheckpoint(eager=True)
+    return candidate_pairs(blocks, ER.max_block, ER.salt_cap)
+
+
+def _scores(records: DataFrame) -> DataFrame:
+    # score_pairs joins the features twice per phase: materialize them
+    features = build_features(records).localCheckpoint(eager=True)
+    return score_pairs(_pairs(records), features, threshold=ER.threshold)
+
+
+def _components(spark: SparkSession, sf_dir: str, **cc_kwargs) -> DataFrame:
+    records = _records(spark, sf_dir)
+    matches = _scores(records).where("is_match").select("id_a", "id_b")
+    return with_singletons(connected_components(matches, **cc_kwargs), records)
 
 
 # ----------------------------------------------------------- ER queries
 
 
 @query("er_records", f"""
-WITH {_records_cte()}
-SELECT id, path, lang, content_sha256,
-       CAST(len(toks) AS BIGINT) AS n_tokens
-FROM sh
+WITH {_SQL_ER}
+SELECT id, path, commit, lang, content_sha256,
+       CAST(len(path_tokens) AS BIGINT) AS n_path_tokens
+FROM rec
 """)
 def er_records(spark, sf_dir):
     """Stage-1 normalize over the documents adapter (ancestor:
     index-locations ingest, app/locations/index/index.go:71-94)."""
-    return _doc_records(spark, sf_dir).select(
-        "id", "path", "lang", "content_sha256",
-        F.size("toks").cast("long").alias("n_tokens"),
+    return _records(spark, sf_dir).select(
+        "id", "path", "commit", "lang", "content_sha256",
+        F.size("path_tokens").cast("long").alias("n_path_tokens"),
     )
 
 
 @query("er_blocks", f"""
-WITH {_records_cte()}, {_blocks_cte()}
+WITH {_SQL_ER_BLOCKS}
 SELECT id, block_key, block_kind FROM bl
 """)
 def er_blocks(spark, sf_dir):
     """Stage-2 multi-family blocking keys (ancestor: geohash precision-5,
     location/location.go:67-77)."""
-    return _doc_blocks(_doc_records(spark, sf_dir))
+    return _blocks(_records(spark, sf_dir))
 
 
 @query("er_block_histogram", f"""
-WITH {_records_cte()}, {_blocks_cte()}
+WITH {_SQL_ER_BLOCKS}
 SELECT block_key, CAST(count(*) AS BIGINT) AS n_ids
 FROM bl GROUP BY block_key
 """)
 def er_block_histogram(spark, sf_dir):
     """Ancestor: SELECT geohash, COUNT(id) ... GROUP BY geohash
     (location/sql.go:149-184, operator A1)."""
-    blocks = _doc_blocks(_doc_records(spark, sf_dir))
-    return blocks.groupBy("block_key").agg(F.count("*").alias("n_ids"))
+    return block_histogram(_blocks(_records(spark, sf_dir)))
 
 
 @query("er_candidate_pairs", f"""
-WITH {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}
+WITH {_SQL_ER_PAIRS}
 SELECT id_a, id_b FROM pr
 """)
 def er_candidate_pairs(spark, sf_dir):
     """Stage-3 block self-join with id_a < id_b (ancestors J1 block
     equi-join compare/database.go:183-299 + A2 symmetric dedup)."""
-    return _doc_pairs(_doc_blocks(_doc_records(spark, sf_dir)))
+    return _pairs(_records(spark, sf_dir)).select("id_a", "id_b")
 
 
 @query("er_scores", f"""
-WITH {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}, {_scores_cte()}
-SELECT id_a, id_b, jw_path, jaccard_content, score,
-       score >= {ER_THRESHOLD} AS is_match
+WITH {_SQL_ER_SCORES}
+SELECT id_a, id_b, round(jw_path, 6) AS jw_path,
+       round(jaccard_content, 6) AS jaccard_content,
+       round(cosine_ngram, 6) AS cosine_ngram, round(score, 6) AS score,
+       is_match, decided_by
 FROM sc
 """)
 def er_scores(spark, sf_dir):
     """Stage-4 pairwise scoring (ancestor: embed+L2 kNN probe,
-    vector/sqlite.go:368-437; here JW-on-path + shingle Jaccard)."""
-    return _doc_scores(spark, sf_dir).withColumn(
-        "is_match", F.col("score") >= F.lit(ER_THRESHOLD)
+    vector/sqlite.go:368-437; here JW-on-path + shingle Jaccard +
+    hashed n-gram cosine). ``block_key`` is left out: pairs that share
+    several blocks keep an arbitrary one."""
+    s = _scores(_records(spark, sf_dir))
+    return s.select(
+        "id_a", "id_b",
+        *[F.round(c, 6).alias(c)
+          for c in ("jw_path", "jaccard_content", "cosine_ngram", "score")],
+        "is_match", "decided_by",
     )
 
 
 @query("er_matches_topk", f"""
-WITH {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}, {_scores_cte()}
-SELECT id_a, id_b, score,
-       CAST(row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b)
+WITH {_SQL_ER_SCORES}
+SELECT id_a, id_b, round(score, 6) AS score,
+       CAST(row_number() OVER (PARTITION BY id_a
+                               ORDER BY round(score, 6) DESC, id_b)
             AS BIGINT) AS rank
 FROM sc
-WHERE score >= {ER_THRESHOLD}
+WHERE is_match
 QUALIFY rank <= 10
 """)
 def er_matches_topk(spark, sf_dir):
     """Top-k accepted matches per record (ancestors J2/J3/O1: ORDER BY
-    distance LIMIT k + top-1 early break, vector/sqlite.go:391)."""
-    from go_dedupe_spark.operators.scoring import top_k_matches
-
+    distance LIMIT k + top-1 early break, vector/sqlite.go:391), ranked
+    on the rounded score so ties break on id_b in both engines."""
     return top_k_matches(er_scores(spark, sf_dir), k=10).select(
         "id_a", "id_b", "score", F.col("rank").cast("long").alias("rank"))
 
 
 _COMPONENTS_SQL = f"""
-WITH RECURSIVE {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}, {_scores_cte()},
-m AS (SELECT id_a, id_b FROM sc WHERE score >= {ER_THRESHOLD}),
-edges AS (SELECT id_a AS u, id_b AS v FROM m
-          UNION SELECT id_b, id_a FROM m),
-reach(id, r) AS (
-  SELECT id, id FROM t
-  UNION
-  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u
-)
-SELECT id, min(r) AS cluster_id FROM reach GROUP BY id
+WITH RECURSIVE {_SQL_ER_COMPONENTS}
+SELECT id, cluster_id FROM comp
 """
-
-
-def _components_entry(spark, sf_dir, **cc_kwargs):
-    """Shared body of er_components / er_components_dist — one place
-    for the records/scores/matches/singletons construction so the two
-    paths can never silently diverge (review r6)."""
-    from go_dedupe_spark.operators.components import (
-        connected_components,
-        with_singletons,
-    )
-
-    records = _doc_records(spark, sf_dir)
-    scores = _doc_scores(spark, sf_dir)
-    matches = scores.where(F.col("score") >= ER_THRESHOLD).select("id_a", "id_b")
-    return with_singletons(connected_components(matches, **cc_kwargs), records)
 
 
 @query("er_components", _COMPONENTS_SQL)
@@ -394,32 +475,20 @@ def er_components(spark, sf_dir):
     """Stage-5 transitive clustering (fills the reference's gap C5,
     SURVEY.md §2.9) — large-star/small-star CC; oracle is a recursive
     min-reachability CTE."""
-    return _components_entry(spark, sf_dir)
+    return _components(spark, sf_dir)
 
 
 @query("er_components_dist", _COMPONENTS_SQL)
 def er_components_dist(spark, sf_dir):
     """er_components with the driver union-find fast path DISABLED
     (driver_max_edges=0): the alternating large-star/small-star loop —
-    the plan the 100x-scale story depends on (VERDICT r5 missing #3) —
-    run on the same match graph and held to the same oracle. The
-    driver path stays the right default at bench scale (~150k edges);
-    this entry pins the distributed path's correctness at sf0.01 and
-    its wall time in every BENCH round."""
-    return _components_entry(spark, sf_dir, driver_max_edges=0)
+    the plan the 100x-scale story depends on — run on the same match
+    graph and held to the same oracle."""
+    return _components(spark, sf_dir, driver_max_edges=0)
 
 
 @query("er_resolution", f"""
-WITH RECURSIVE {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}, {_scores_cte()},
-m AS (SELECT id_a, id_b FROM sc WHERE score >= {ER_THRESHOLD}),
-edges AS (SELECT id_a AS u, id_b AS v FROM m
-          UNION SELECT id_b, id_a FROM m),
-reach(id, r) AS (
-  SELECT id, id FROM t
-  UNION
-  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u
-),
-comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
+WITH RECURSIVE {_SQL_ER_COMPONENTS}
 SELECT id, cluster_id,
        max(id) OVER (PARTITION BY cluster_id) AS survivor_id,
        id = max(id) OVER (PARTITION BY cluster_id) AS is_survivor
@@ -438,30 +507,34 @@ def er_resolution(spark, sf_dir):
 
 
 # The sf documents table is all-valid, so the quarantine contract row
-# corrupts it DETERMINISTICALLY (modular doc_id predicates, mirrored
-# exactly in the DuckDB twin) — nonzero rejects across every reason.
-# That normalize()'s accept side and this reject side PARTITION the
-# input (disjoint, union = all rows) is pinned by
+# corrupts the adapter frame DETERMINISTICALLY: (column, modulus,
+# residue, replacement) — the column is replaced on the doc_ids where
+# doc_id % modulus == residue, in Spark and in the DuckDB twin alike,
+# giving nonzero rejects across every reason. That normalize()'s accept
+# side and this reject side PARTITION the input (disjoint, union = all
+# rows) is pinned by
 # tests/test_pipeline.py::test_normalize_quarantine_partition_contract
-# on this same corrupted frame.
-_QUAR_CORRUPT_SQL = """
-fl AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 41 = 0 THEN '' ELSE source END AS repo,
-    CASE WHEN doc_id % 43 = 1 THEN NULL
-         ELSE source || '/doc_' || CAST(doc_id AS VARCHAR) || '.txt'
-    END AS path,
-    CASE WHEN doc_id % 47 = 2 THEN ''
-         ELSE substr(sha256('c:' || CAST(doc_id AS VARCHAR)), 1, 8)
-    END AS commit,
-    CASE WHEN doc_id % 53 = 3 THEN NULL ELSE lang END AS lang,
-    CASE WHEN doc_id % 59 = 4 THEN NULL ELSE text END AS content
-  FROM documents
-)"""
+# on the same corruption.
+_QUAR_CORRUPTION = [
+    ("repo", 41, 0, ""),
+    ("path", 43, 1, None),
+    ("commit", 47, 2, ""),
+    ("lang", 53, 3, None),
+    ("content", 59, 4, None),
+]
+
+
+def _sql_quarantine_frame() -> str:
+    cols = ", ".join(
+        f"CASE WHEN doc_id % {m} = {r} THEN "
+        f"{'NULL' if v is None else repr(v)} ELSE {c} END AS {c}"
+        for c, m, r, v in _QUAR_CORRUPTION
+    )
+    return f"fl AS (SELECT doc_id, {cols} FROM files)"
 
 
 @query("er_quarantine", f"""
-WITH {_QUAR_CORRUPT_SQL},
+WITH {_SQL_FILES}, {_sql_quarantine_frame()},
 q AS (
   SELECT doc_id,
     CASE WHEN repo IS NULL OR repo = '' THEN 'missing_repo'
@@ -471,44 +544,27 @@ q AS (
          WHEN content IS NULL THEN 'missing_content'
     END AS reject_reason
   FROM fl
-  WHERE repo IS NULL OR repo = '' OR path IS NULL OR path = ''
-     OR commit IS NULL OR commit = '' OR lang IS NULL OR lang = ''
-     OR content IS NULL
 )
 SELECT CAST(doc_id AS BIGINT) AS doc_id, reject_reason FROM q
+WHERE reject_reason IS NOT NULL
 """)
 def er_quarantine(spark, sf_dir):
-    """F1's reject side as a contract row (VERDICT r4 item #8):
-    normalize() drops invalid records, quarantine() keeps them with a
-    reason — the DataFrame answer to the reference's logged-and-dropped
-    InvalidRecordError (errors.go:8-34; index.go:75-77). The input is
-    the documents table corrupted by deterministic modular predicates
-    so every reject_reason value is exercised; the when-chain
-    precedence (repo > path > commit > lang > content) is pinned by the
-    oracle on doc_ids hit by more than one corruption."""
-    from go_dedupe_spark.operators.normalize import quarantine
-
-    docs = _t(spark, sf_dir, "documents")
-    files = docs.select(
+    """F1's reject side as a contract row: normalize() drops invalid
+    records, quarantine() keeps them with a reason — the DataFrame
+    answer to the reference's logged-and-dropped InvalidRecordError
+    (errors.go:8-34; index.go:75-77). The input is the adapter frame
+    corrupted by ``_QUAR_CORRUPTION`` so every reject_reason value is
+    exercised; the when-chain precedence (repo > path > commit > lang >
+    content) is pinned by the oracle on doc_ids hit by more than one
+    corruption."""
+    files = _files(spark, sf_dir)
+    doc = F.col("doc_id")
+    return quarantine(files.select(
         "doc_id",
-        F.when(F.col("doc_id") % 41 == 0, F.lit("")).otherwise(
-            F.col("source")).alias("repo"),
-        F.when(F.col("doc_id") % 43 == 1, F.lit(None).cast("string"))
-         .otherwise(F.concat(F.col("source"), F.lit("/doc_"),
-                             F.col("doc_id").cast("string"),
-                             F.lit(".txt"))).alias("path"),
-        F.when(F.col("doc_id") % 47 == 2, F.lit("")).otherwise(
-            F.substring(F.sha2(F.concat(F.lit("c:"),
-                                        F.col("doc_id").cast("string")),
-                               256), 1, 8)).alias("commit"),
-        F.when(F.col("doc_id") % 53 == 3, F.lit(None).cast("string"))
-         .otherwise(F.col("lang")).alias("lang"),
-        F.when(F.col("doc_id") % 59 == 4, F.lit(None).cast("string"))
-         .otherwise(F.col("text")).alias("content"),
-    )
-    return quarantine(files).select(
-        F.col("doc_id").cast("long"), "reject_reason"
-    )
+        *[F.when(doc % m == r, F.lit(v).cast("string"))
+           .otherwise(F.col(c)).alias(c)
+          for c, m, r, v in _QUAR_CORRUPTION],
+    )).select(F.col("doc_id").cast("long"), "reject_reason")
 
 
 # ======================================================= dedup suite
@@ -561,15 +617,7 @@ e AS ({bands})"""
 lp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        FROM e a JOIN e b ON a.bk = b.bk AND a.doc_id < b.doc_id)"""
     return base + f""",
-esz AS (SELECT bk, count(*) AS n FROM e GROUP BY bk),
-ek AS (
-  SELECT doc_id, bk FROM e JOIN esz USING (bk) WHERE n <= {ER_MAX_BLOCK}
-  UNION ALL
-  SELECT doc_id, bk || '#' || CAST(
-      (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-       % CAST(ceil(n / {ER_SALT_CAP}.0) AS BIGINT)) AS VARCHAR) AS bk
-  FROM e JOIN esz USING (bk) WHERE n > {ER_MAX_BLOCK}
-),
+ek AS ({_sql_salted('e', 'bk', 'doc_id')}),
 lp AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        FROM ek a JOIN ek b ON a.bk = b.bk AND a.doc_id < b.doc_id)"""
 
@@ -650,16 +698,7 @@ e AS (SELECT doc_id, simhash,
         CAST(r.i AS VARCHAR) || ':' ||
         CAST((simhash >> (r.i * {SH_WIDTH})) & {SH_MASK} AS VARCHAR) AS bk
       FROM s CROSS JOIN range(0, {SH_BANDS}) r(i)),
-esz AS (SELECT bk, count(*) AS n FROM e GROUP BY bk),
-ek AS (
-  SELECT doc_id, simhash, bk FROM e JOIN esz USING (bk)
-  WHERE n <= {ER_MAX_BLOCK}
-  UNION ALL
-  SELECT doc_id, simhash, bk || '#' || CAST(
-      (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-       % CAST(ceil(n / {ER_SALT_CAP}.0) AS BIGINT)) AS VARCHAR) AS bk
-  FROM e JOIN esz USING (bk) WHERE n > {ER_MAX_BLOCK}
-),
+ek AS ({_sql_salted('e', 'bk', 'doc_id')}),
 p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
         a.simhash AS sa, b.simhash AS sb
       FROM ek a JOIN ek b ON a.bk = b.bk AND a.doc_id < b.doc_id)
@@ -719,15 +758,7 @@ EMB_COS_T = 0.25
 @query("dedup_embedding_cosine", f"""
 WITH e AS ({_SQL_EMB}),
 k AS (SELECT vec_id, v, CAST(label AS VARCHAR) AS bk FROM e),
-ksz AS (SELECT bk, count(*) AS n FROM k GROUP BY bk),
-kk AS (
-  SELECT vec_id, v, bk FROM k JOIN ksz USING (bk) WHERE n <= {ER_MAX_BLOCK}
-  UNION ALL
-  SELECT vec_id, v, bk || '#' || CAST(
-      (('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
-       % CAST(ceil(n / {ER_SALT_CAP}.0) AS BIGINT)) AS VARCHAR) AS bk
-  FROM k JOIN ksz USING (bk) WHERE n > {ER_MAX_BLOCK}
-),
+kk AS ({_sql_salted('k', 'bk', 'vec_id')}),
 p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.v AS va, b.v AS vb
       FROM kk a JOIN kk b ON a.bk = b.bk AND a.vec_id < b.vec_id),
 c AS (SELECT id_a, id_b, round({_sql_cosine('va', 'vb')}, 6) AS cosine FROM p)
@@ -1696,18 +1727,9 @@ def source_match_csv(spark, sf_dir):
 
 
 @query("resolution_supersession", f"""
-WITH RECURSIVE {_records_cte()}, {_blocks_cte()}, {_pairs_cte()}, {_scores_cte()},
-m AS (SELECT id_a, id_b FROM sc WHERE score >= {ER_THRESHOLD}),
-edges AS (SELECT id_a AS u, id_b AS v FROM m
-          UNION SELECT id_b, id_a FROM m),
-reach(id, r) AS (
-  SELECT id, id FROM t
-  UNION
-  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u
-),
-comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-mem AS (SELECT comp.id, comp.cluster_id, sh.content_sha256 AS commit
-        FROM comp JOIN sh ON sh.id = comp.id),
+WITH RECURSIVE {_SQL_ER_COMPONENTS},
+mem AS (SELECT comp.id, comp.cluster_id, rec.commit
+        FROM comp JOIN rec USING (id)),
 surv AS (SELECT cluster_id,
            max_by(id, commit || id) AS survivor_id,
            list_sort(list(id)) AS member_ids
@@ -1728,13 +1750,12 @@ def resolution_supersession(spark, sf_dir):
     per-cluster survivor by ordered (commit, id) key — max_by over a
     struct — plus the supersedes / superseded_by edge arrays
     (process.go:341-377), emitted as comma-joined strings (array
-    columns are unhashable in the compare harness). The documents
-    adapter uses content_sha256 as the commit surrogate (fixed-width,
-    so struct ordering == concat ordering in the oracle)."""
+    columns are unhashable in the compare harness). The adapter's
+    commit is fixed-width, so struct ordering == concat ordering in the
+    oracle."""
     from go_dedupe_spark.operators.resolve import resolve_clusters
 
-    records = _doc_records(spark, sf_dir).withColumn(
-        "commit", F.col("content_sha256"))
+    records = _records(spark, sf_dir)
     comp = er_components(spark, sf_dir)
     out = resolve_clusters(comp, records)
     return out.select(

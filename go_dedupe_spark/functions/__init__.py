@@ -27,7 +27,6 @@ from go_dedupe_spark.functions.metadata import (  # noqa: F401
 from go_dedupe_spark.functions.similarity import (  # noqa: F401
     char_ngrams,
     hashed_ngram_vector_udf,
-    jaro_winkler_udf,
     set_jaccard,
     token_shingles,
     word_tokens,

@@ -182,19 +182,6 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
     return np.where(exact, 1.0, out)
 
 
-@pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched, numpy-vectorized Jaro-Winkler over two string
-    columns (bit-exact vs DuckDB's jaro_winkler_similarity)."""
-    return pd.Series(_jaro_winkler_batch(a, b))
-
-
-# r7 audit note: the score>=t filters above this UDF do NOT trigger the
-# guide-§4.4 duplication (verified — one ArrowEvalPython node, filter
-# evaluated above it), so no asNondeterministic() mark is needed here;
-# srp_bucket in operators/ann.py is the one that needed it.
-
-
 @pandas_udf(StructType([
     StructField("jw", DoubleType()),
     StructField("cos", DoubleType()),
@@ -261,8 +248,9 @@ NGRAM_N = 5
 # bytes in wrapping uint64 arithmetic: deterministic everywhere, and
 # fully numpy-vectorizable, unlike a per-gram hashlib.md5 loop
 # (measured ~60x faster per batch; the ngram vectors feed only the
-# cosine FEATURE, not any SQL oracle, so cryptographic strength buys
-# nothing here).
+# cosine feature, so cryptographic strength buys nothing here). The
+# er_scores oracle recomputes this hash in DuckDB SQL
+# (entry_queries._sql_gram_vectors).
 _GRAM_COEF = np.array(
     [0x9E3779B1, 0x85EBCA77, 0xC2B2AE3D, 0x27D4EB2F, 0x165667B1],
     dtype=np.uint64,

@@ -41,10 +41,6 @@ hard-negative <= 0.40.
 
 The weights sum to exactly 1.0 in double, so the composite is the
 plain weighted sum (no normalizing division).
-
-The bench/oracle entry queries (entry_queries._doc_scores) keep their
-own two-feature composite on purpose: it is the Spark twin of a DuckDB
-SQL oracle, and the hashed n-gram cosine here has no SQL twin.
 """
 
 from __future__ import annotations
@@ -184,7 +180,7 @@ def top_k_matches(scores: DataFrame, k: int = 10) -> DataFrame:
     score then id_b — the analog of the reference's ``ORDER BY distance
     LIMIT k`` + top-1 early break (vector/sqlite.go:391,
     compare/geohash.go:184-186). Window-ranked, JVM-side; the
-    ``er_matches_topk`` entry query is this over its own scores."""
+    ``er_matches_topk`` entry query is this over ``er_scores``."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("id_a").orderBy(F.desc("score"), "id_b")

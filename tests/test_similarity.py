@@ -114,3 +114,37 @@ def test_hash_vector_wide_ngram():
     assert not (v8 == _hash_vector(text, n=9)).all()      # n matters
     c = _gram_coef(12)
     assert len(np.unique(c)) == 12 and (c % 2 == 1).all() # distinct, odd
+
+
+def _gram_vector_texts() -> list[str]:
+    rng = random.Random(7)
+    long_text = " ".join(
+        "".join(rng.choice(string.ascii_lowercase) for _ in range(rng.randint(1, 9)))
+        for _ in range(90))[:500]
+    return ["", "a", "ab", "abc", "abcd", "abcde", "é", "日本",
+            "Grüße aus Köln — 日本語のテキスト ✓", long_text]
+
+
+def test_sql_gram_vectors_match_hash_vector():
+    """The er_scores oracle's DuckDB gram-vector CTEs (built by the same
+    function the oracle uses) equal ``_hash_vector``'s bucket counts and
+    the float32-normalized vector ``hashed_ngram_vector_udf`` emits, on
+    empty, 1-4-char, exactly-5-char, multi-byte and ~500-char text."""
+    from go_dedupe_spark.entry_queries import _sql_gram_vectors
+    from go_dedupe_spark.functions.similarity import HASH_DIM, _hash_vector
+
+    texts = _gram_vector_texts()
+    cte = f"WITH {_sql_gram_vectors('src')}"
+    counts = np.zeros((len(texts), HASH_DIM))
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE src (id INTEGER, content VARCHAR)")
+        con.executemany("INSERT INTO src VALUES (?, ?)", list(enumerate(texts)))
+        for i, b, c in con.execute(f"{cte} SELECT id, b, c FROM gc").fetchall():
+            counts[i, b] = c
+        vecs = dict(con.execute(f"{cte} SELECT id, vec FROM gv").fetchall())
+    for i, text in enumerate(texts):
+        want = _hash_vector(text)
+        assert (counts[i] == want).all(), text
+        norm = np.linalg.norm(want)
+        unit = (want / norm if norm > 0 else want).astype("float32")
+        assert np.array_equal(np.array(vecs[i]), unit.astype("float64")), text
