@@ -10,7 +10,9 @@ vectorized scorers:
 - cosine over hashed n-gram vectors (pandas UDF, numpy batched —
                                     HashingTF-style, no model service)
 
-No per-row Python anywhere: the UDFs are ``pandas_udf`` (Arrow batches).
+The UDFs are ``pandas_udf`` (Arrow batches). ``path_vec_scores_udf``
+is numpy over the whole batch; ``hashed_ngram_vector_udf`` loops over
+the batch's records, one numpy pass per record.
 """
 
 from __future__ import annotations

@@ -114,19 +114,20 @@ def score_pairs(pairs: DataFrame, features: DataFrame,
     table): each phase joins it twice, and a lazy frame re-runs the
     vector UDF per join side.
 
-    The feature sides join by shuffle, not broadcast: a broadcast was
-    measured slower even where it fits, and cannot fit at corpus scale
-    (there, bucket records+pairs on id to co-locate instead)."""
-    par = pairs.sparkSession.sparkContext.defaultParallelism
-
+    Both phases run at the partitioning ``pairs`` arrives in, and
+    Spark's size rule (``autoBroadcastJoinThreshold``) picks broadcast
+    or shuffle for each feature join. Phase 2 is a Python stage, so it
+    adds no exchange of its own: every extra concurrent task forks
+    another pandas/pyarrow worker. Where the feature sides are too big
+    to broadcast, the shuffle joins on ``id_a``/``id_b`` partition the
+    pairs anyway."""
     # ---------------- phase 1: compact Jaccard + floor decision
     a1 = features.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"),
                          F.col("n_toks").alias("n_a"))
     b1 = features.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"),
                          F.col("n_toks").alias("n_b"))
     p1 = (
-        pairs.repartition(par * 2, "id_a", "id_b")
-        .join(a1, "id_a").join(b1, "id_b")
+        pairs.join(a1, "id_a").join(b1, "id_b")
         .select("id_a", "id_b", "block_key",
                 set_jaccard("toks_a", "toks_b", "n_a", "n_b")
                 .alias("jaccard_content"))

@@ -4,8 +4,15 @@ Local sessions are sized for the sandbox (local[N] single JVM) but every
 config here is the one you would set on a real multi-executor cluster:
 AQE on (skew-join mitigation for mega-blocks — the analog of the
 reference's biggest-blocks-first work stealing, location/sql.go:153),
-Arrow enabled (all row-level compute is vectorized pandas UDFs),
-shuffle partitions sized to cores.
+Arrow enabled, shuffle partitions sized to cores.
+
+Most compute is native Columns. What runs in Python, over Arrow
+batches: the ``build_features`` n-gram vector, ``score_pairs`` phase 2
+(Jaro-Winkler + cosine), the ANN cosine kernels (top-k, k-means) and
+the multimodal decode. Input parallelism follows one rule: a native
+per-record stage spreads a narrow input with ``spread``; a Python stage
+runs at its input's partitioning, because each concurrent Python task
+forks its own pandas/pyarrow worker.
 """
 
 from __future__ import annotations

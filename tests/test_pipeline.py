@@ -406,3 +406,74 @@ def test_scorer_rejects_shared_boilerplate(spark, header_words):
     false_pos = sum(m and not labels[k] for k, m in got.items())
     false_neg = sum(labels[k] and not m for k, m in got.items())
     assert (false_pos, false_neg) == (0, 0)
+
+
+def _scoring_inputs(spark):
+    """Pairs covering every ``score_pairs`` branch, and their features
+    (materialized, as run_pipeline passes them): an exact duplicate, a
+    floored pair, a ``full`` pair on each side of the threshold, and two
+    zero-token contents (their one empty shingle passes the floor)."""
+    body = ("def load_config(path):\n    with open(path) as fh:\n"
+            "        return parse_yaml(fh.read(), strict=True)\n"
+            "def save_config(path, data):\n    write_yaml(path, data)\n")
+    half = ("def load_config(path):\n    with open(path) as fh:\n"
+            "        return toml.loads(fh.read())\n"
+            "class Registry:\n    items = {}\n    lock = None\n"
+            "    def add(self, key, value):\n        self.items[key] = value\n")
+    files = [
+        ("org/a", "src/config.py", "c1", "python", body),
+        ("org/b", "lib/config.py", "c1", "python", body),
+        ("org/c", "src/config_io.py", "c1", "python",
+         body.replace("strict=True", "strict=False")),
+        ("org/d", "docs/registry_notes.md", "c1", "python", half),
+        ("org/e", "README.md", "c1", "text",
+         "a totally unrelated paragraph about gardening and soil"),
+        ("org/f", "empty.txt", "c1", "text", ""),
+        ("org/g", "punct.txt", "c1", "text", "!!! --- ???"),
+    ]
+    records = normalize(spark.createDataFrame(
+        files, ["repo", "path", "commit", "lang", "content"]))
+    ids = {r["repo"]: r["id"] for r in records.select("repo", "id").collect()}
+    pairs = [("org/a", "org/b"), ("org/a", "org/c"), ("org/a", "org/d"),
+             ("org/a", "org/e"), ("org/f", "org/g"), ("org/c", "org/e")]
+    pair_df = spark.createDataFrame(
+        [(ids[a], ids[b], f"k{i}") for i, (a, b) in enumerate(pairs)],
+        ["id_a", "id_b", "block_key"])
+    return pair_df, build_features(records).localCheckpoint(eager=True)
+
+
+def test_score_pairs_is_partition_invariant(spark):
+    """``score_pairs`` scores at the partitioning its pairs arrive in;
+    the rows (all nine columns, 6 dp) are the same at 1, 4 and 16
+    input partitions, over every decision branch."""
+    pairs, features = _scoring_inputs(spark)
+    threshold = PipelineConfig().threshold
+
+    def rows(n):
+        scored = score_pairs(pairs.repartition(n), features, threshold)
+        return sorted(
+            tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+            for r in scored.collect())
+
+    want = rows(1)
+    by_branch = {(r[8], r[7]) for r in want}
+    assert {("exact", True), ("jaccard_floor", False), ("full", True),
+            ("full", False)} <= by_branch, want
+    zero_token = [r for r in want if r[4] == 1.0 and r[8] == "full"]
+    assert zero_token, want
+    for n in (4, 16):
+        assert rows(n) == want, n
+
+
+def test_score_pairs_adds_no_exchange_before_its_python_stage(spark):
+    """No fixed-count repartition in ``score_pairs``' plan, and one
+    Arrow UDF node (phase 2). Each task of the UDF's stage runs its own
+    pandas/pyarrow worker, so a spread before it multiplies Python
+    memory by the spread's width (perfbench er_pipeline on 4 cores: 4
+    workers, py_peak_rss_mb ~471 MB, vs ~268 MB with one)."""
+    pairs, features = _scoring_inputs(spark)
+    scored = score_pairs(pairs.localCheckpoint(eager=True), features,
+                         PipelineConfig().threshold)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
