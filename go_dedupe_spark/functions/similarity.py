@@ -146,7 +146,6 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
             & ~matched2
             & (cols >= lo[:, None])
             & (cols < hi[:, None])
-            & (c != 0)[:, None]
             & active[:, None]
             & (i < len1)[:, None]
         )
@@ -156,7 +155,9 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
         matched1[:, i] = has
     m = matched1.sum(axis=1).astype(np.float64)
 
-    # compress matched chars in order for the transposition count
+    # compress matched chars in order for the transposition count; both
+    # rows hold m matched bytes, so the zero fill past m compares equal
+    # and NUL bytes in the input count like any other byte
     order1 = np.where(matched1, np.cumsum(matched1, axis=1) - 1, L)
     order2 = np.where(matched2, np.cumsum(matched2, axis=1) - 1, L)
     c1 = np.zeros((n, L + 1), dtype=np.uint8)
@@ -164,7 +165,7 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
     rows = np.arange(n)[:, None]
     c1[rows, order1] = np.where(matched1, m1, 0)
     c2[rows, order2] = np.where(matched2, m2, 0)
-    t = ((c1 != c2) & (c1 != 0) & (c2 != 0)).sum(axis=1) // 2
+    t = (c1 != c2).sum(axis=1) // 2
 
     with np.errstate(divide="ignore", invalid="ignore"):
         jaro = np.where(
@@ -173,7 +174,8 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
             0.0,
         )
     # winkler prefix boost (<=4 common leading chars, only when jaro > 0.7)
-    pref_eq = (m1[:, :4] == m2[:, :4]) & (m1[:, :4] != 0) & (m2[:, :4] != 0)
+    pref_eq = (m1[:, :4] == m2[:, :4]) & (
+        cols[:4] < np.minimum(len1, len2)[:, None])
     prefix = np.where(
         pref_eq.all(axis=1), pref_eq.shape[1], (~pref_eq).argmax(axis=1)
     ).astype(np.float64)
