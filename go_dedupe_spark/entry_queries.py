@@ -273,11 +273,10 @@ def _sql_scores() -> str:
     'exact' for equal content hashes, else the weighted JW + Jaccard +
     cosine sum, in the library's term order."""
     n = SHINGLE_N
-    # token_shingles: a zero-token doc has the one shingle '' (Spark's
-    # concat_ws of an empty array; DuckDB's array_to_string gives NULL)
+    # token_shingles: a zero-token doc has no shingle
     shingles = (
-        f"CASE WHEN len(words) < {n} "
-        f"THEN [coalesce(array_to_string(words, ' '), '')] "
+        f"CASE WHEN len(words) = 0 THEN []::VARCHAR[] "
+        f"WHEN len(words) < {n} THEN [array_to_string(words, ' ')] "
         f"ELSE list_transform(range(1, len(words) - {n - 2}), "
         f"i -> array_to_string(words[i:i + {n - 1}], ' ')) END"
     )

@@ -18,6 +18,10 @@ under heavy path divergence); the entry queries band content words and
 Output: blocks(id string, block_key string, block_kind string).
 Everything is built-in Columns (md5/sha2/transform/array) — no UDFs,
 full whole-stage codegen; the explode is Catalyst's generator node.
+It is a native per-record stage, so a narrow ``records`` input is
+hash-spread on ``id`` first (``session.spread``): the pipeline's
+one-file records checkpoint otherwise runs every MinHash band in a
+single task.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.functions.hashing import minhash_band_keys
+from go_dedupe_spark.session import spread
 
 SHA_PREFIX_LEN = 12
 
@@ -47,10 +52,11 @@ def _lang_scoped(kind: str):
 
 def make_blocks(records: DataFrame, bands: Sequence[Band]) -> DataFrame:
     """records(id, lang, content_sha256, ...) -> blocks(id, block_key,
-    block_kind), exploded: the sha key plus every band's keys."""
+    block_kind), exploded: the sha key plus every band's keys. A
+    narrower input is hash-spread on id once (``session.spread``)."""
     # materialize each band's tokens as a column first: an inline token
     # expression would re-evaluate once per signature permutation
-    toks = records.select(
+    toks = spread(records, "id").select(
         "id", "lang", "content_sha256",
         *[t.alias(f"_toks{i}") for i, (_, t, _, _) in enumerate(bands)],
     )

@@ -34,11 +34,20 @@ import threading
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from go_dedupe_spark.session import observed
 
 
 class ParquetBackend:
-    """Parquet dirs + sibling JSON manifests + a metrics JSONL."""
+    """Parquet dirs + sibling JSON manifests + a metrics JSONL.
+
+    A table is read back with the schema it was written with (for a
+    resume, the one its manifest records), so a read lists the files but
+    runs no schema-inference job; a manifest without a schema (written
+    before the store recorded one) still reads, by inference."""
 
     def __init__(self, root: str | Path):
         self.root = Path(root)
@@ -50,10 +59,14 @@ class ParquetBackend:
     def write_table(self, df: DataFrame, key: str) -> DataFrame:
         path = self.root / key
         df.write.mode("overwrite").parquet(str(path))
-        return df.sparkSession.read.parquet(str(path))
+        return df.sparkSession.read.schema(df.schema).parquet(str(path))
 
     def read_table(self, spark: SparkSession, key: str) -> DataFrame:
-        return spark.read.parquet(str(self.root / key))
+        reader = spark.read
+        schema = (self.get_manifest(key) or {}).get("schema")
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(str(self.root / key))
 
     def get_manifest(self, key: str) -> dict | None:
         mf = (self.root / key).with_suffix(".manifest.json")
@@ -275,17 +288,19 @@ class CheckpointStore:
         input_snapshot: str,
         sort_by: list[str] | None = None,
     ) -> DataFrame:
-        """Materialize a stage. Deterministic on-disk layout: when
-        ``sort_by`` is given the data is repartitioned by the key then
-        sorted within partitions, so reruns are byte-stable (resume
-        idempotency invariant, FIXTURES.md §5.5)."""
+        """Materialize a stage in one query. Deterministic on-disk
+        layout: when ``sort_by`` is given the data is repartitioned by
+        the key then sorted within partitions, so reruns are byte-stable
+        (resume idempotency invariant, FIXTURES.md §5.5). ``rows_out`` is
+        observed on the write itself, not counted by a read-back job."""
         t0 = time.monotonic()
-        out = df
+        rows = Observation()
+        out = df.observe(rows, F.count(F.lit(1)).alias("rows_out"))
         if sort_by:
-            out = df.repartition(*sort_by).sortWithinPartitions(*sort_by)
+            out = out.repartition(*sort_by).sortWithinPartitions(*sort_by)
         key = self._key(stage, input_snapshot)
         persisted = self.backend.write_table(out, key)
-        rows_out = persisted.count()
+        rows_out = observed(rows, rows_out=0)["rows_out"]
         # wall_ms is computed BEFORE the test-only delay hook below so
         # the hook never inflates stage timings (ADVICE r6).
         wall_ms = int((time.monotonic() - t0) * 1000)
@@ -301,6 +316,7 @@ class CheckpointStore:
             "input_snapshot": input_snapshot,
             "rows_out": rows_out,
             "wall_ms": wall_ms,
+            "schema": df.schema.jsonValue(),
             "complete": True,
         })
         self.backend.append_metric({

@@ -4,6 +4,8 @@ upsert-idempotency check (vector/tests.go:30-35)."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.plans.checkpoint import CheckpointStore
@@ -38,6 +40,59 @@ def test_stage_reuse_and_recompute(spark, tmp_path):
     # changed input snapshot -> recompute
     store.get_or_compute(spark, "s1", "snapB", compute, sort_by=["id"])
     assert len(calls) == 2
+
+
+def _jobs_run(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_job_budget(spark, tmp_path):
+    """A write runs its write query and nothing after it: ``rows_out`` is
+    observed on the write, and the table comes back with the schema it
+    was written with, so no count or schema-inference job follows. A
+    resume read runs no job. A manifest without a schema, as stores
+    wrote it before the store recorded one, still reads."""
+    store = CheckpointStore(tmp_path / "budget")
+    df = spark.range(300).select((F.col("id") % 13).alias("k"), F.col("id"))
+    _, query_jobs = _jobs_run(
+        spark, "budget-query",
+        lambda: df.repartition("k").sortWithinPartitions("k")
+        .write.parquet(str(tmp_path / "query")))
+    written, write_jobs = _jobs_run(
+        spark, "budget-write",
+        lambda: store.write(df, "s1", "snapA", sort_by=["k"]))
+    assert write_jobs == query_jobs > 0
+    assert written.count() == 300
+    key = store._key("s1", "snapA")
+    assert store.backend.get_manifest(key)["rows_out"] == 300
+    assert [m["rows_out"] for m in store.metrics()] == [300]
+
+    def recompute():
+        raise AssertionError("a complete checkpoint must be resumed")
+
+    resumed, read_jobs = _jobs_run(
+        spark, "budget-read",
+        lambda: store.get_or_compute(spark, "s1", "snapA", recompute,
+                                     sort_by=["k"]))
+    assert read_jobs == 0
+    assert resumed.schema == written.schema
+    assert _collect_sorted(resumed) == _collect_sorted(df)
+
+    manifest = (tmp_path / "budget" / key).with_suffix(".manifest.json")
+    legacy = json.loads(manifest.read_text())
+    del legacy["schema"]
+    manifest.write_text(json.dumps(legacy))
+    assert store.has("s1", "snapA")
+    assert _collect_sorted(store.read(spark, "s1", "snapA")) \
+        == _collect_sorted(df)
 
 
 def test_pipeline_resume_byte_identical(spark, files_df, tmp_path):

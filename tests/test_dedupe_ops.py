@@ -9,6 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from go_dedupe_spark.operators.blocking import make_blocks
 from go_dedupe_spark.operators.dedupe import (
     cosine_from_norms,
     embedding_cosine_pairs,
@@ -21,6 +22,8 @@ from go_dedupe_spark.operators.dedupe import (
     simhash_hamming_pairs,
     vec_norm_expr,
 )
+from go_dedupe_spark.operators.normalize import normalize
+from go_dedupe_spark.plans.pipeline import PipelineConfig
 from go_dedupe_spark.session import spread
 
 
@@ -310,6 +313,27 @@ def one_split(spark, tmp_path_factory):
     return scan
 
 
+def _as_records(docs):
+    """``docs`` as the pipeline's records: one file per doc, normalized."""
+    return normalize(docs.select(
+        F.lit("org").alias("repo"),
+        F.concat(F.lit("doc_"), F.col("doc_id").cast("string"),
+                 F.lit(".txt")).alias("path"),
+        F.lit("c1").alias("commit"), "lang", F.col("text").alias("content"),
+    ))
+
+
+@pytest.fixture(scope="module")
+def one_split_records(spark, one_split, tmp_path_factory):
+    """``one_split`` as records, scanned from one file as a records
+    checkpoint is."""
+    path = str(tmp_path_factory.mktemp("spread") / "records")
+    _as_records(one_split).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    return scan
+
+
 def _planned(df) -> str:
     """The physical plan as planned, exchanges included, before it runs."""
     return df._jdf.queryExecution().executedPlan().toString()
@@ -333,18 +357,21 @@ def _gram_table_plan(spark, docs, monkeypatch) -> str:
 
 
 def test_spread_puts_one_hash_exchange_ahead_of_tokenize(
-        spark, one_split, monkeypatch):
+        spark, one_split, one_split_records, monkeypatch):
     """A one-split scan gets exactly one hashpartitioning(doc_id,
     defaultParallelism) exchange, directly on the scan, so every
-    tokenize/hash expression runs spread. simhash's vote adds no
+    tokenize/hash expression runs spread; ``make_blocks`` does the same
+    on id over a one-split records scan. simhash's vote adds no
     exchange of its own: the spread already clusters it on id."""
     par = spark.sparkContext.defaultParallelism
     spread_on_id = re.compile(
-        rf"Exchange hashpartitioning\(doc_id#\d+L?, {par}\)")
+        rf"Exchange hashpartitioning\((doc_)?id#\d+L?, {par}\)")
     plans = {
         "lsh_band_keys": _planned(lsh_band_keys(one_split, scope_col="lang")),
         "simhash_column": _planned(simhash_column(one_split, "doc_id", "text")),
         "gram table": _gram_table_plan(spark, one_split, monkeypatch),
+        "make_blocks": _planned(make_blocks(one_split_records,
+                                            PipelineConfig().bands())),
     }
     for name, plan in plans.items():
         lines = plan.splitlines()
@@ -355,11 +382,13 @@ def test_spread_puts_one_hash_exchange_ahead_of_tokenize(
             (name, plan)
 
 
-def test_spread_adds_no_exchange_to_a_wide_input(spark, one_split):
+def test_spread_adds_no_exchange_to_a_wide_input(
+        spark, one_split, one_split_records):
     """An input with >= defaultParallelism partitions is returned as it
     is: a 16-partition frame, and a frame the rule already spread. The
     operators' plans keep the input's one repartition; only the
-    simhash vote over the round-robin frame shuffles on its own key."""
+    simhash vote over the round-robin frame shuffles on its own key.
+    ``make_blocks`` adds no exchange to such a records frame."""
     wide = one_split.repartition(16)
     spread_once = spread(one_split, "doc_id")
     assert spread_once is not one_split
@@ -369,6 +398,13 @@ def test_spread_adds_no_exchange_to_a_wide_input(spark, one_split):
                       simhash_column(df, "doc_id", "text")):
             plan = _planned(built)
             assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    records_spread = spread(one_split_records, "id")
+    assert records_spread is not one_split_records
+    for df in (one_split_records.repartition(16), records_spread):
+        assert spread(df, "id") is df
+        plan = _planned(make_blocks(df, PipelineConfig().bands()))
+        assert plan.count("Exchange") == 1, plan
+        assert plan.count("REPARTITION_BY_NUM") == 1, plan
 
 
 def test_spread_decides_without_a_job(spark, one_split):
@@ -401,7 +437,8 @@ def test_spread_decides_without_a_job(spark, one_split):
 
 
 def test_near_dup_operators_are_partition_invariant(spark):
-    """MinHash LSH, banded simhash and n-gram Jaccard return the same
+    """MinHash LSH, banded simhash, n-gram Jaccard and the pipeline's
+    ``make_blocks`` (over the same rows as records) return the same
     rows at 1, 4 and 16 input partitions, over degenerate rows (NULL,
     empty and shorter-than-n text, non-ASCII text) and a 90%-one-
     template block big enough that the salt cap binds."""
@@ -426,6 +463,8 @@ def test_near_dup_operators_are_partition_invariant(spark):
             sorted(map(tuple, cand.collect())),
             sorted(map(tuple, simhash_hamming_pairs(df).collect())),
             sorted(map(tuple, ngram_jaccard_pairs(df, cand).collect())),
+            sorted(map(tuple, make_blocks(_as_records(df),
+                                          PipelineConfig().bands()).collect())),
         )
 
     want = results(docs.repartition(1))

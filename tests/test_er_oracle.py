@@ -6,6 +6,7 @@ also cover the cast to array<double>."""
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
 import sys
 from pathlib import Path
@@ -67,8 +68,9 @@ _NEAR = ("the merge join reads both sorted inputs once and emits every "
 _DEGENERATE_DOCS = [
     (_NEAR, "byte-identical to the next row: decided_by='exact'"),
     (_NEAR, "byte-identical to the previous row"),
-    ("", "empty text: one '' shingle, a zero n-gram vector"),
-    ("!!! ... --- ???", "punctuation only: zero word tokens"),
+    ("", "empty text: no shingle, a zero n-gram vector"),
+    ("!!! ... --- ???", "punctuation only: zero word tokens, floors "
+     "against the empty text"),
     ("ab", "shorter than the n-gram and the shingle width"),
     ("x", "one char"),
     ("Grüße aus Köln — 日本語のテキスト ✓", "non-ASCII multi-byte text"),
@@ -80,11 +82,19 @@ _DEGENERATE_DOCS = [
 ]
 
 
+def _doc_id(doc_id: int) -> str:
+    """The record id the documents -> files adapter gives ``doc_id``."""
+    commit = hashlib.sha256(f"c:{doc_id}".encode()).hexdigest()[:8]
+    key = "\x1f".join(("src", f"src/doc_{doc_id}.txt", commit))
+    return hashlib.sha256(key.encode()).hexdigest()
+
+
 def test_er_degenerate_input_matches_oracle(spark, tmp_path):
     """er_scores and er_components against their oracles on a small
     documents table holding the rows the sf corpora lack: byte-identical
     texts, empty, punctuation-only, very short, non-ASCII and NULL text,
-    plus a matching and a flooring pair."""
+    plus a matching and a flooring pair. Two zero-token texts share no
+    shingle, so their pair floors instead of matching on paths alone."""
     import duckdb
 
     with duckdb.connect() as con:
@@ -102,6 +112,13 @@ def test_er_degenerate_input_matches_oracle(spark, tmp_path):
         # the input reaches every scoring branch, accepted and floored
         assert set(decided) == {"exact", "full", "jaccard_floor"}
         assert decided["full"] > 0 and decided["exact"] == 1
+        zero_token = [_doc_id(i) for i, (text, _) in enumerate(_DEGENERATE_DOCS)
+                      if text in ("", "!!! ... --- ???")]
+        assert oracle.execute(
+            "SELECT decided_by, is_match FROM ("
+            + entry_mod.oracle_sql()["er_scores"] + ") WHERE id_a = ? AND "
+            "id_b = ?", sorted(zero_token)).fetchall() == [
+                ("jaccard_floor", False)]
         for name in ("er_scores", "er_components"):
             _assert_matches(spark, oracle, name, sf=str(tmp_path))
     finally:

@@ -412,7 +412,7 @@ def _scoring_inputs(spark):
     """Pairs covering every ``score_pairs`` branch, and their features
     (materialized, as run_pipeline passes them): an exact duplicate, a
     floored pair, a ``full`` pair on each side of the threshold, and two
-    zero-token contents (their one empty shingle passes the floor)."""
+    zero-token contents (no shingle: they floor)."""
     body = ("def load_config(path):\n    with open(path) as fh:\n"
             "        return parse_yaml(fh.read(), strict=True)\n"
             "def save_config(path, data):\n    write_yaml(path, data)\n")
@@ -459,8 +459,9 @@ def test_score_pairs_is_partition_invariant(spark):
     by_branch = {(r[8], r[7]) for r in want}
     assert {("exact", True), ("jaccard_floor", False), ("full", True),
             ("full", False)} <= by_branch, want
-    zero_token = [r for r in want if r[4] == 1.0 and r[8] == "full"]
-    assert zero_token, want
+    # block_key k4: the empty and the punctuation-only content
+    zero_token = [(r[8], r[7]) for r in want if r[2] == "k4"]
+    assert zero_token == [("jaccard_floor", False)], want
     for n in (4, 16):
         assert rows(n) == want, n
 
