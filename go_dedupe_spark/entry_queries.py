@@ -273,9 +273,9 @@ def _sql_scores() -> str:
     'exact' for equal content hashes, else the weighted JW + Jaccard +
     cosine sum, in the library's term order."""
     n = SHINGLE_N
-    # token_shingles: a zero-token doc has no shingle
+    # build_features: a zero-token doc's one shingle is its content hash
     shingles = (
-        f"CASE WHEN len(words) = 0 THEN []::VARCHAR[] "
+        f"CASE WHEN len(words) = 0 THEN [content_sha256] "
         f"WHEN len(words) < {n} THEN [array_to_string(words, ' ')] "
         f"ELSE list_transform(range(1, len(words) - {n - 2}), "
         f"i -> array_to_string(words[i:i + {n - 1}], ' ')) END"

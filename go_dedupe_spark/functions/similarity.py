@@ -218,17 +218,14 @@ def token_shingles(tokens: Column, n: int = 3, sep: str = " ") -> Column:
     Unigram Jaccard over code is too forgiving (identifier vocabularies
     are tiny, so unrelated files share most tokens); order-sensitive
     shingles restore discrimination. Arrays shorter than n collapse to a
-    single whole-array shingle; an empty array has no shingle, so two
-    zero-token texts share nothing.
+    single whole-array shingle.
     """
     joined_all = F.array(F.concat_ws(sep, tokens))
     shingled = F.transform(
         F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
         lambda i: F.concat_ws(sep, F.slice(tokens, i, n)),
     )
-    return (F.when(F.size(tokens) == 0, F.array().cast("array<string>"))
-            .when(F.size(tokens) < n, joined_all)
-            .otherwise(shingled))
+    return F.when(F.size(tokens) < n, joined_all).otherwise(shingled)
 
 
 def set_jaccard(a: str, b: str, n_a: str, n_b: str) -> Column:

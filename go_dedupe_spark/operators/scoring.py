@@ -81,13 +81,20 @@ def build_features(records: DataFrame) -> DataFrame:
     the single most expensive map in the pipeline, and without
     materialization Catalyst re-evaluates it inside BOTH join sides
     (measured: 2x ~125 CPU-s inside BroadcastExchange builds at 100k
-    records)."""
+    records).
+
+    A content with no word token has one shingle, its content hash:
+    identical such contents share it and reach the ``exact`` check,
+    different ones (empty vs punctuation-only) share nothing and floor
+    instead of matching on path similarity alone."""
     base = records.select(
         "id", "path", "content_sha256", "content",
         word_tokens(F.col("content")).alias("_toks"),
     ).select(
         "id", "path", "content_sha256", "content",
-        token_shingles(F.col("_toks"), n=SHINGLE_N).alias("_shingles"),
+        F.when(F.size("_toks") == 0, F.array("content_sha256"))
+        .otherwise(token_shingles(F.col("_toks"), n=SHINGLE_N))
+        .alias("_shingles"),
     ).select(
         "id", "path", "content_sha256", "content",
         F.array_distinct(_shingle_hash32(F.col("_shingles"))).alias("toks"),

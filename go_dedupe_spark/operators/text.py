@@ -114,8 +114,7 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id",
       evaluates the shared hashed array ONCE per row, and the shuffle
       of one md5 row per (doc, shingle) disappears outright (guide
       §2.4). Every non-NULL doc emits >= 1 shingle (short docs collapse
-      to one whole-array shingle, a zero-token doc to the empty
-      string, so identical empty docs share a fingerprint);
+      to one whole-array shingle);
     - NULL text emits no row, as the explode path did. Its tokens are
       NULL exactly when the text is, so the toks IS NOT NULL guard is
       written on the text column: a filter on the token expression
@@ -125,8 +124,7 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id",
         F.col(id_col).alias("id"),
         word_tokens(F.col(text_col)).alias("toks"),
     )
-    sh = F.when(F.size("toks") == 0, F.array(F.lit(""))).otherwise(
-        token_shingles(F.col("toks"), n=shingle_n))
+    sh = token_shingles(F.col("toks"), n=shingle_n)
     hashed = F.transform(F.array_distinct(sh), lambda s: F.md5(s))
     return toked.select(
         "id",

@@ -292,15 +292,21 @@ class CheckpointStore:
         layout: when ``sort_by`` is given the data is repartitioned by
         the key then sorted within partitions, so reruns are byte-stable
         (resume idempotency invariant, FIXTURES.md §5.5). ``rows_out`` is
-        observed on the write itself, not counted by a read-back job."""
+        observed in the write's result stage (above the shuffle, so a
+        resubmitted map stage cannot count rows twice), not counted by a
+        read-back job; a write that reports no observed metrics falls
+        back to that count."""
         t0 = time.monotonic()
-        rows = Observation()
-        out = df.observe(rows, F.count(F.lit(1)).alias("rows_out"))
+        out = df
         if sort_by:
-            out = out.repartition(*sort_by).sortWithinPartitions(*sort_by)
+            out = df.repartition(*sort_by).sortWithinPartitions(*sort_by)
+        rows = Observation()
+        out = out.observe(rows, F.count(F.lit(1)).alias("rows_out"))
         key = self._key(stage, input_snapshot)
         persisted = self.backend.write_table(out, key)
-        rows_out = observed(rows, rows_out=0)["rows_out"]
+        rows_out = observed(rows).get("rows_out")
+        if rows_out is None:
+            rows_out = persisted.count()
         # wall_ms is computed BEFORE the test-only delay hook below so
         # the hook never inflates stage timings (ADVICE r6).
         wall_ms = int((time.monotonic() - t0) * 1000)

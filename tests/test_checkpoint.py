@@ -8,7 +8,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from go_dedupe_spark.plans.checkpoint import CheckpointStore
+from go_dedupe_spark.plans.checkpoint import CheckpointStore, ParquetBackend
 from go_dedupe_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 
@@ -93,6 +93,26 @@ def test_store_job_budget(spark, tmp_path):
     assert store.has("s1", "snapA")
     assert _collect_sorted(store.read(spark, "s1", "snapA")) \
         == _collect_sorted(df)
+
+
+class _MetricsLostBackend(ParquetBackend):
+    """Completes the write's observation with no metrics before writing,
+    as a write command that does not report observed metrics would."""
+
+    def write_table(self, df, key):
+        df.limit(0).collect()
+        return super().write_table(df, key)
+
+
+def test_store_counts_rows_when_the_write_reports_no_metrics(spark, tmp_path):
+    """A write whose observation comes back empty records the table's
+    row count (one read-back job), not 0."""
+    store = CheckpointStore(tmp_path / "lost",
+                            backend=_MetricsLostBackend(tmp_path / "lost"))
+    store.write(spark.range(300).toDF("k"), "s1", "snapA", sort_by=["k"])
+    key = store._key("s1", "snapA")
+    assert store.backend.get_manifest(key)["rows_out"] == 300
+    assert [m["rows_out"] for m in store.metrics()] == [300]
 
 
 def test_pipeline_resume_byte_identical(spark, files_df, tmp_path):

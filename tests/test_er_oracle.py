@@ -68,9 +68,11 @@ _NEAR = ("the merge join reads both sorted inputs once and emits every "
 _DEGENERATE_DOCS = [
     (_NEAR, "byte-identical to the next row: decided_by='exact'"),
     (_NEAR, "byte-identical to the previous row"),
-    ("", "empty text: no shingle, a zero n-gram vector"),
+    ("", "empty text: its content hash is its one shingle, a zero "
+     "n-gram vector"),
+    ("", "byte-identical to the previous empty row: decided_by='exact'"),
     ("!!! ... --- ???", "punctuation only: zero word tokens, floors "
-     "against the empty text"),
+     "against the empty texts"),
     ("ab", "shorter than the n-gram and the shingle width"),
     ("x", "one char"),
     ("Grüße aus Köln — 日本語のテキスト ✓", "non-ASCII multi-byte text"),
@@ -93,8 +95,10 @@ def test_er_degenerate_input_matches_oracle(spark, tmp_path):
     """er_scores and er_components against their oracles on a small
     documents table holding the rows the sf corpora lack: byte-identical
     texts, empty, punctuation-only, very short, non-ASCII and NULL text,
-    plus a matching and a flooring pair. Two zero-token texts share no
-    shingle, so their pair floors instead of matching on paths alone."""
+    plus a matching and a flooring pair. A zero-token text's one
+    shingle is its content hash: two empty texts match as 'exact', and
+    empty vs punctuation-only floors instead of matching on paths
+    alone."""
     import duckdb
 
     with duckdb.connect() as con:
@@ -111,14 +115,19 @@ def test_er_degenerate_input_matches_oracle(spark, tmp_path):
             + entry_mod.oracle_sql()["er_scores"] + ") GROUP BY 1").fetchall())
         # the input reaches every scoring branch, accepted and floored
         assert set(decided) == {"exact", "full", "jaccard_floor"}
-        assert decided["full"] > 0 and decided["exact"] == 1
-        zero_token = [_doc_id(i) for i, (text, _) in enumerate(_DEGENERATE_DOCS)
-                      if text in ("", "!!! ... --- ???")]
-        assert oracle.execute(
-            "SELECT decided_by, is_match FROM ("
-            + entry_mod.oracle_sql()["er_scores"] + ") WHERE id_a = ? AND "
-            "id_b = ?", sorted(zero_token)).fetchall() == [
-                ("jaccard_floor", False)]
+        assert decided["full"] > 0 and decided["exact"] == 2
+        # zero-token pairs the blocks form: the two empty texts match,
+        # empty vs punctuation-only floors
+        text_of = {_doc_id(i): text for i, (text, _)
+                   in enumerate(_DEGENERATE_DOCS)}
+        zero_token = [r for r in oracle.execute(
+            "SELECT id_a, id_b, decided_by, is_match FROM ("
+            + entry_mod.oracle_sql()["er_scores"] + ")").fetchall()
+            if {text_of[r[0]], text_of[r[1]]} <= {"", "!!! ... --- ???"}]
+        assert {(text_of[a] == text_of[b], decided, match)
+                for a, b, decided, match in zero_token} == {
+            (True, "exact", True), (False, "jaccard_floor", False)}, \
+            zero_token
         for name in ("er_scores", "er_components"):
             _assert_matches(spark, oracle, name, sf=str(tmp_path))
     finally:

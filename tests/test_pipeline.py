@@ -411,8 +411,9 @@ def test_scorer_rejects_shared_boilerplate(spark, header_words):
 def _scoring_inputs(spark):
     """Pairs covering every ``score_pairs`` branch, and their features
     (materialized, as run_pipeline passes them): an exact duplicate, a
-    floored pair, a ``full`` pair on each side of the threshold, and two
-    zero-token contents (no shingle: they floor)."""
+    floored pair, a ``full`` pair on each side of the threshold, two
+    different zero-token contents (they floor) and two identical ones
+    (they match as ``exact``)."""
     body = ("def load_config(path):\n    with open(path) as fh:\n"
             "        return parse_yaml(fh.read(), strict=True)\n"
             "def save_config(path, data):\n    write_yaml(path, data)\n")
@@ -430,12 +431,14 @@ def _scoring_inputs(spark):
          "a totally unrelated paragraph about gardening and soil"),
         ("org/f", "empty.txt", "c1", "text", ""),
         ("org/g", "punct.txt", "c1", "text", "!!! --- ???"),
+        ("org/h", "pkg/__init__.py", "c1", "python", ""),
     ]
     records = normalize(spark.createDataFrame(
         files, ["repo", "path", "commit", "lang", "content"]))
     ids = {r["repo"]: r["id"] for r in records.select("repo", "id").collect()}
     pairs = [("org/a", "org/b"), ("org/a", "org/c"), ("org/a", "org/d"),
-             ("org/a", "org/e"), ("org/f", "org/g"), ("org/c", "org/e")]
+             ("org/a", "org/e"), ("org/f", "org/g"), ("org/c", "org/e"),
+             ("org/f", "org/h")]
     pair_df = spark.createDataFrame(
         [(ids[a], ids[b], f"k{i}") for i, (a, b) in enumerate(pairs)],
         ["id_a", "id_b", "block_key"])
@@ -459,9 +462,10 @@ def test_score_pairs_is_partition_invariant(spark):
     by_branch = {(r[8], r[7]) for r in want}
     assert {("exact", True), ("jaccard_floor", False), ("full", True),
             ("full", False)} <= by_branch, want
-    # block_key k4: the empty and the punctuation-only content
-    zero_token = [(r[8], r[7]) for r in want if r[2] == "k4"]
-    assert zero_token == [("jaccard_floor", False)], want
+    # k4: the empty and the punctuation-only content; k6: two empty ones
+    zero_token = {r[2]: (r[8], r[7]) for r in want if r[2] in ("k4", "k6")}
+    assert zero_token == {"k4": ("jaccard_floor", False),
+                          "k6": ("exact", True)}, want
     for n in (4, 16):
         assert rows(n) == want, n
 
