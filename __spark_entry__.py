@@ -21,7 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
-    """Make the package importable on executors (pandas UDFs)."""
+    """Make the package importable on executors (Python UDFs)."""
     from go_dedupe_spark.session import _ship_package
 
     try:

@@ -17,7 +17,7 @@ Package layout
 - ``operators``  the pipeline stages (normalize, blocking, pairs,
                  scoring, components, resolve) plus the training-data
                  operators (dedupe, ann, text, multimodal)
-- ``functions``  column-expression builders + vectorized pandas UDFs
+- ``functions``  column-expression builders + vectorized Arrow UDFs
 - ``sources``    readers for the reference's source formats
 - ``plans``      checkpointing / lineage / resume + the end-to-end plan
 - ``streaming``  Structured Streaming ingest (foreachBatch into normalize)

@@ -1069,7 +1069,7 @@ def text_langid(spark, sf_dir):
 WITH t AS (SELECT doc_id,
   list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '') AS toks
   FROM documents WHERE text IS NOT NULL),
-s AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')]
+s AS (SELECT doc_id, CASE WHEN len(toks) < 4 THEN [coalesce(array_to_string(toks, ' '), '')]
     ELSE list_transform(range(1, len(toks) - 2),
                         i -> array_to_string(toks[i:i+3], ' ')) END AS sh
   FROM t),
@@ -1082,7 +1082,9 @@ FROM h
 """)
 def text_fingerprint(spark, sf_dir):
     """Document fingerprint: min/max md5 over 4-token shingles
-    (rolling-hash winnowing-lite)."""
+    (rolling-hash winnowing-lite). A document with no word token has
+    the one shingle '' (DuckDB's ``array_to_string`` of an empty list is
+    NULL, hence the oracle's ``coalesce``)."""
     from go_dedupe_spark.operators.text import fingerprint
 
     docs = _t(spark, sf_dir, "documents")

@@ -2,9 +2,9 @@
 
 Design rule (north_rule / input_hint): NO per-row Python. Everything is
 either a native Column expression (JVM-side, whole-stage codegen) or an
-Arrow-batched pandas UDF. Native expressions are strongly preferred —
-they are also what makes query results reproducible in the DuckDB
-correctness oracle (md5/sha256 are bit-identical across engines).
+Arrow UDF over ``pa.Array`` batches. Native expressions are strongly
+preferred — they are also what makes query results reproducible in the
+DuckDB correctness oracle (md5/sha256 are bit-identical across engines).
 """
 
 from go_dedupe_spark.functions.edtf import (  # noqa: F401

@@ -5,23 +5,30 @@ plus L2 kNN (embeddings/ollama.go:86-113 + vector/sqlite.go:368-437).
 Per north_star this engine replaces that with three local, deterministic,
 vectorized scorers:
 
-- Jaro-Winkler on paths           (pandas UDF, Arrow-batched numpy/python)
+- Jaro-Winkler on paths           (Arrow UDF, batched numpy/python)
 - token-shingle Jaccard on content (native Columns)
-- cosine over hashed n-gram vectors (pandas UDF, numpy batched —
+- cosine over hashed n-gram vectors (Arrow UDF, numpy batched —
                                     HashingTF-style, no model service)
 
-The UDFs are ``pandas_udf`` (Arrow batches). ``path_vec_scores_udf``
-is numpy over the whole batch; ``hashed_ngram_vector_udf`` loops over
-the batch's records, one numpy pass per record.
+The UDFs are ``arrow_udf``s: they take and return ``pa.Array`` batches,
+with no pandas in between. ``path_vec_scores_udf`` is numpy over the
+whole batch; ``hashed_ngram_vector_udf`` loops over the batch's
+records, one numpy pass per record. Strings are read with
+``to_pylist``, numbers through numpy views of Arrow buffers
+(``_view``), and results are built from buffers (``_arrow``): the
+pyarrow conveniences that would do this (listed in ``session``) import
+pandas into the worker, ~27 MB of a scoring worker's memory.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -29,6 +36,40 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# ------------------------------------------------------ Arrow <-> numpy
+
+
+def _view(arr: pa.Array, dtype) -> np.ndarray:
+    """Read-only numpy view of a fixed-width Arrow array's values
+    (its validity bitmap is ignored)."""
+    dtype = np.dtype(dtype)
+    return np.frombuffer(arr.buffers()[1] or b"", dtype, len(arr),
+                         arr.offset * dtype.itemsize)
+
+
+def _arrow(values: np.ndarray) -> pa.Array:
+    """A non-NULL Arrow array over a 1-d numeric ndarray's buffer."""
+    values = np.ascontiguousarray(values)
+    return pa.Array.from_buffers(pa.from_numpy_dtype(values.dtype),
+                                 len(values), [None, pa.py_buffer(values)])
+
+
+def _vector_matrix(vecs: pa.Array, dim: int) -> np.ndarray:
+    """(rows, dim) float64 matrix of a list<number> Arrow array; a NULL
+    element reads NaN. A NULL vector or one whose length is not ``dim``
+    raises ValueError."""
+    lengths = np.diff(_view(vecs.offsets.cast(pa.int64()), np.int64))
+    if vecs.null_count or (lengths != dim).any():
+        raise ValueError(f"expected {len(vecs)} non-NULL vectors of "
+                         f"length {dim}")
+    flat = vecs.flatten()
+    vals = _view(flat.cast(pa.float64()), np.float64)
+    if flat.null_count:
+        null = _view(flat.is_null().cast(pa.uint8()), np.uint8)
+        vals = np.where(null, np.nan, vals)
+    return vals.reshape(len(vecs), dim)
+
 
 # ---------------------------------------------------------------- tokenizers
 
@@ -105,7 +146,8 @@ def _jaro_winkler_bytes(s1: bytes, s2: bytes) -> float:
     return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
-def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
+def _jaro_winkler_batch(a: Sequence[str | None],
+                        b: Sequence[str | None]) -> np.ndarray:
     """Numpy-vectorized Jaro-Winkler over a batch of string pairs.
 
     Strings are UTF-8-encoded into fixed-width uint8 matrices; the
@@ -113,15 +155,13 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
     iterations), with every step vectorized across the batch — ~20x
     faster than per-row Python. Produces bit-identical results to
     :func:`_jaro_winkler` (both operate on UTF-8 bytes, matching
-    DuckDB; differential-tested in tests/test_similarity.py)."""
-    s1 = a.fillna("").astype(str).to_numpy()
-    s2 = b.fillna("").astype(str).to_numpy()
-    n = len(s1)
-    out = np.zeros(n, dtype="float64")
+    DuckDB; differential-tested in tests/test_similarity.py). A None
+    string scores as the empty string."""
+    b1 = [(x or "").encode("utf-8") for x in a]
+    b2 = [(x or "").encode("utf-8") for x in b]
+    n = len(b1)
     if n == 0:
-        return out
-    b1 = [x.encode("utf-8") for x in s1]
-    b2 = [x.encode("utf-8") for x in s2]
+        return np.zeros(0, dtype="float64")
     len1 = np.array([len(x) for x in b1], dtype=np.int64)
     len2 = np.array([len(x) for x in b2], dtype=np.int64)
     L = max(1, int(max(len1.max(), len2.max())))
@@ -186,12 +226,12 @@ def _jaro_winkler_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
     return np.where(exact, 1.0, out)
 
 
-@pandas_udf(StructType([
+@arrow_udf(StructType([
     StructField("jw", DoubleType()),
     StructField("cos", DoubleType()),
 ]))
-def path_vec_scores_udf(pa: pd.Series, pb: pd.Series,
-                        va: pd.Series, vb: pd.Series) -> pd.DataFrame:
+def path_vec_scores_udf(path_a: pa.Array, path_b: pa.Array,
+                        va: pa.Array, vb: pa.Array) -> pa.Array:
     """One Arrow pass computing BOTH pairwise features: Jaro-Winkler on
     the path strings and cosine (= dot, vectors pre-normalized by
     hashed_ngram_vector_udf) via a single numpy einsum per batch.
@@ -199,14 +239,11 @@ def path_vec_scores_udf(pa: pd.Series, pb: pd.Series,
     Why one UDF: a Catalyst higher-order-function dot product
     (zip_with + aggregate) is interpreted, not codegen'd — measured
     ~10x the per-pair cost of this batched numpy path at dim 256."""
-    jw = _jaro_winkler_batch(pa, pb)
-    ma = np.array(va.tolist(), dtype="float64")
-    mb = np.array(vb.tolist(), dtype="float64")
-    if ma.size == 0:
-        cos = np.zeros(len(pa))
-    else:
-        cos = np.einsum("ij,ij->i", ma, mb)
-    return pd.DataFrame({"jw": jw, "cos": cos})
+    jw = _jaro_winkler_batch(path_a.to_pylist(), path_b.to_pylist())
+    cos = np.einsum("ij,ij->i", _vector_matrix(va, HASH_DIM),
+                    _vector_matrix(vb, HASH_DIM))
+    return pa.StructArray.from_arrays([_arrow(jw), _arrow(cos)],
+                                      names=["jw", "cos"])
 
 
 # ------------------------------------------------------------ token Jaccard
@@ -302,17 +339,20 @@ def _hash_vector(text: str, n: int = NGRAM_N, dim: int = HASH_DIM) -> np.ndarray
                        minlength=dim).astype("float64")
 
 
-@pandas_udf(ArrayType(FloatType()))
-def hashed_ngram_vector_udf(texts: pd.Series) -> pd.Series:
+@arrow_udf(ArrayType(FloatType()))
+def hashed_ngram_vector_udf(texts: pa.Array) -> pa.Array:
     """Per-RECORD normalized hashed n-gram vector (Arrow-batched).
 
     Computing the vector once per record and taking native dot products
     per pair replaces a per-pair variant that re-hashed every n-gram of
     both sides for every candidate pair — O(pairs x grams) python
-    hashing vs O(records x grams) numpy hashing."""
-    out = []
-    for t in texts:
-        v = _hash_vector(t if t is not None else "")
+    hashing vs O(records x grams) numpy hashing. A NULL text hashes as
+    the empty one (the zero vector)."""
+    rows = texts.to_pylist()
+    out = np.zeros((len(rows), HASH_DIM), dtype="float32")
+    for i, t in enumerate(rows):
+        v = _hash_vector(t)
         n = np.linalg.norm(v)
-        out.append((v / n if n > 0 else v).astype("float32").tolist())
-    return pd.Series(out)
+        out[i] = v / n if n > 0 else v
+    offsets = np.arange(len(rows) + 1, dtype=np.int32) * HASH_DIM
+    return pa.ListArray.from_arrays(_arrow(offsets), _arrow(out.ravel()))

@@ -42,12 +42,11 @@ import hashlib
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -57,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
 )
 from pyspark.sql.window import Window
+
+from go_dedupe_spark.functions.similarity import _arrow, _vector_matrix
 
 # ------------------------------------------------ cosine block kernel
 
@@ -610,15 +611,16 @@ def _srp_buckets(vecs: np.ndarray, signs: np.ndarray) -> np.ndarray:
 
 
 def make_srp_bucketer(dim: int, n_bits: int = 12):
-    """Returns a pandas UDF mapping an embedding column to its
+    """Returns an Arrow UDF mapping an embedding column to its
     sign-random-projection bucket id (long; bit b set iff the b-th
-    projection is positive) — the bucket ``cosine_topk_lsh`` uses."""
+    projection is positive) — the bucket ``cosine_topk_lsh`` uses. A
+    vector with a NULL element lands in bucket 0; a NULL vector or one
+    whose length is not ``dim`` raises ValueError."""
     signs = srp_signs(dim, n_bits)
 
-    @pandas_udf(LongType())
-    def srp_bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype="float64").reshape(len(vecs), dim)
-        return pd.Series(_srp_buckets(mat, signs))
+    @arrow_udf(LongType())
+    def srp_bucket(vecs: pa.Array) -> pa.Array:
+        return _arrow(_srp_buckets(_vector_matrix(vecs, dim), signs))
 
     return srp_bucket
 

@@ -6,9 +6,9 @@ compare/geohash.go:154-187). The reference embeds each record over HTTP
 (one Ollama call per row) and L2-compares; here scoring is three local
 deterministic features (north_star):
 
-- jw_path          Jaro-Winkler on full paths        (Arrow pandas UDF)
+- jw_path          Jaro-Winkler on full paths        (Arrow UDF)
 - jaccard_content  token-shingle Jaccard on content  (native Columns)
-- cosine_ngram     cosine over hashed char-n-grams   (Arrow pandas UDF)
+- cosine_ngram     cosine over hashed char-n-grams   (Arrow UDF)
 
 composite:  score = 0.15*jw + 0.55*jaccard + 0.30*cosine
 match iff  jaccard >= JAC_FLOOR  AND  score >= threshold.
@@ -125,7 +125,7 @@ def score_pairs(pairs: DataFrame, features: DataFrame,
     Spark's size rule (``autoBroadcastJoinThreshold``) picks broadcast
     or shuffle for each feature join. Phase 2 is a Python stage, so it
     adds no exchange of its own: every extra concurrent task forks
-    another pandas/pyarrow worker. Where the feature sides are too big
+    another Python worker. Where the feature sides are too big
     to broadcast, the shuffle joins on ``id_a``/``id_b`` partition the
     pairs anyway."""
     # ---------------- phase 1: compact Jaccard + floor decision

@@ -12,7 +12,22 @@ batches: the ``build_features`` n-gram vector, ``score_pairs`` phase 2
 the multimodal decode. Input parallelism follows one rule: a native
 per-record stage spreads a narrow input with ``spread``; a Python stage
 runs at its input's partitioning, because each concurrent Python task
-forks its own pandas/pyarrow worker.
+forks its own Python worker.
+
+The ER pipeline's Python processes load neither pandas nor IPython.
+The scoring kernels are Arrow UDFs that read and build ``pa.Array``
+batches directly; the pyarrow calls that would import pandas into a
+worker through pyarrow's pandas shim (``pa.array``, ``to_numpy``,
+``to_pandas_dtype``, ``fill_null`` or a compute function given a
+Python scalar, ``take`` of an ndarray) stay out of them
+(``functions.similarity``), which keeps ~27 MB out of a scoring
+worker. On the driver, PySpark's DataFrame-debugging call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``, on by default) runs
+on every ``F.*`` call and Column operator: it imports IPython (~25 MB),
+searches ``sys.path`` for ``ipykernel`` each time and adds py4j round
+trips (a storeless ``run_pipeline`` over 1,000 files made 6,440 py4j
+calls with it, 3,717 without). ``get_spark`` turns it off;
+``extra_conf`` can turn it back on for a debugging session.
 
 Generated code is compiled once per session: ``CODEGEN_CACHE_ENTRIES``
 sizes Spark's codegen class cache (``spark.sql.codegen.cache.maxEntries``,
@@ -109,6 +124,7 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -122,7 +138,7 @@ def package_zip() -> str:
 
     The cluster deployment story (north_rule: ``spark-submit
     --py-files``): workers must import go_dedupe_spark to deserialize
-    the pandas UDFs.
+    the Arrow UDFs.
     """
     pkg_dir = Path(__file__).resolve().parent
     out = Path(tempfile.gettempdir()) / "go_dedupe_spark_pyfiles"

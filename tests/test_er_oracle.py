@@ -91,14 +91,10 @@ def _doc_id(doc_id: int) -> str:
     return hashlib.sha256(key.encode()).hexdigest()
 
 
-def test_er_degenerate_input_matches_oracle(spark, tmp_path):
-    """er_scores and er_components against their oracles on a small
-    documents table holding the rows the sf corpora lack: byte-identical
-    texts, empty, punctuation-only, very short, non-ASCII and NULL text,
-    plus a matching and a flooring pair. A zero-token text's one
-    shingle is its content hash: two empty texts match as 'exact', and
-    empty vs punctuation-only floors instead of matching on paths
-    alone."""
+@pytest.fixture
+def degenerate_sf(tmp_path) -> str:
+    """A driver-data directory holding only ``_DEGENERATE_DOCS`` as its
+    documents table."""
     import duckdb
 
     with duckdb.connect() as con:
@@ -108,7 +104,18 @@ def test_er_degenerate_input_matches_oracle(spark, tmp_path):
             (i, text, None if text is None else len(text))
             for i, (text, _) in enumerate(_DEGENERATE_DOCS)])
         con.execute(f"COPY d TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)")
-    oracle = check_correctness.oracle_connection(str(tmp_path))
+    return str(tmp_path)
+
+
+def test_er_degenerate_input_matches_oracle(spark, degenerate_sf):
+    """er_scores and er_components against their oracles on a small
+    documents table holding the rows the sf corpora lack: byte-identical
+    texts, empty, punctuation-only, very short, non-ASCII and NULL text,
+    plus a matching and a flooring pair. A zero-token text's one
+    shingle is its content hash: two empty texts match as 'exact', and
+    empty vs punctuation-only floors instead of matching on paths
+    alone."""
+    oracle = check_correctness.oracle_connection(degenerate_sf)
     try:
         decided = dict(oracle.execute(
             "SELECT decided_by, count(*) FILTER (WHERE is_match) FROM ("
@@ -129,6 +136,26 @@ def test_er_degenerate_input_matches_oracle(spark, tmp_path):
             (True, "exact", True), (False, "jaccard_floor", False)}, \
             zero_token
         for name in ("er_scores", "er_components"):
-            _assert_matches(spark, oracle, name, sf=str(tmp_path))
+            _assert_matches(spark, oracle, name, sf=degenerate_sf)
+    finally:
+        oracle.close()
+
+
+def test_fingerprint_degenerate_input_matches_oracle(spark, degenerate_sf):
+    """text_fingerprint against its oracle on the degenerate documents:
+    a text with no word token (empty, punctuation-only) has the one
+    shingle '' in both engines (fp_min = fp_max = md5(''), n_shingles
+    1), and the NULL text has no row."""
+    oracle = check_correctness.oracle_connection(degenerate_sf)
+    try:
+        fp = {r[0]: r[1:] for r in oracle.execute(
+            "SELECT id, fp_min, fp_max, n_shingles FROM ("
+            + entry_mod.oracle_sql()["text_fingerprint"] + ")").fetchall()}
+        assert len(fp) == len(_DEGENERATE_DOCS) - 1
+        empty = hashlib.md5(b"").hexdigest()
+        zero_token = [fp[i] for i, (text, _) in enumerate(_DEGENERATE_DOCS)
+                      if text in ("", "!!! ... --- ???")]
+        assert zero_token == [(empty, empty, 1)] * 3, zero_token
+        _assert_matches(spark, oracle, "text_fingerprint", sf=degenerate_sf)
     finally:
         oracle.close()

@@ -90,9 +90,7 @@ def test_jw_batch_scalar_duckdb_identical(pairs):
     (the batch path's padding/masking is exactly what per-row tests
     can't exercise)."""
     ddb = _DDB
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    got = _jaro_winkler_batch(a, b)
+    got = _jaro_winkler_batch([p[0] for p in pairs], [p[1] for p in pairs])
     want_scalar = np.array([_jaro_winkler(x, y) for x, y in pairs])
     # EXACT equality — both are float64 over the same expression order;
     # allclose's default rtol would mask real kernel drift
@@ -287,7 +285,7 @@ def _hof_bruteforce(items, queries, k):
 
 
 def _hof_lsh(items, queries, dim, k, n_bits):
-    """The bucket equi-join the kernel scan replaced: pandas-UDF SRP
+    """The bucket equi-join the kernel scan replaced: Arrow-UDF SRP
     buckets, each query's n_bits + 1 probe buckets exploded and joined
     to the items' bucket, the HOF cosine per joined pair."""
     bucket = make_srp_bucketer(dim, n_bits)

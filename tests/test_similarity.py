@@ -16,6 +16,7 @@ import string
 import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from go_dedupe_spark.functions.similarity import (
@@ -54,9 +55,7 @@ def pairs() -> list[tuple[str, str]]:
 
 
 def test_batch_matches_scalar(pairs):
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    got = _jaro_winkler_batch(a, b)
+    got = _jaro_winkler_batch([p[0] for p in pairs], [p[1] for p in pairs])
     want = np.array([_jaro_winkler(x, y) for x, y in pairs])
     # exact: both float64, same expression order — bit-identity is the
     # documented contract (np.isclose's default rtol would mask drift)
@@ -70,8 +69,7 @@ def test_batch_matches_duckdb(pairs):
     con.register("p", pd.DataFrame(pairs, columns=["a", "b"]))
     want = np.array([r[0] for r in con.execute(
         "SELECT jaro_winkler_similarity(a, b) FROM p").fetchall()])
-    got = _jaro_winkler_batch(
-        pd.Series([p[0] for p in pairs]), pd.Series([p[1] for p in pairs]))
+    got = _jaro_winkler_batch([p[0] for p in pairs], [p[1] for p in pairs])
     # DuckDB returns EXACT doubles from the same algorithm; allow only
     # last-ulp noise
     bad = [(pairs[i], got[i], want[i])
@@ -95,7 +93,7 @@ def test_non_ascii_byte_semantics():
     want = duckdb.connect().execute(
         "SELECT jaro_winkler_similarity(?, ?)", [a, b]).fetchone()[0]
     assert _jaro_winkler(a, b) == pytest.approx(want, abs=1e-12)
-    got = _jaro_winkler_batch(pd.Series([a]), pd.Series([b]))[0]
+    got = _jaro_winkler_batch([a], [b])[0]
     assert got == pytest.approx(want, abs=1e-12)
 
 
@@ -148,3 +146,76 @@ def test_sql_gram_vectors_match_hash_vector():
         norm = np.linalg.norm(want)
         unit = (want / norm if norm > 0 else want).astype("float32")
         assert np.array_equal(np.array(vecs[i]), unit.astype("float64")), text
+
+
+# Arrow kernel inputs: None, empty, non-ASCII and NUL-byte text, plus
+# ordinary paths; the tests slice them so batches start at offset != 0.
+_KERNEL_TEXTS = [None, "", "a", "Grüße aus Köln — 日本語 ✓", "ab\x00cd\x00",
+                 "\x00", "src/config.py", "src/config_io.py", "lib/κόσμε.py",
+                 "def f(x):\n    return x + 1\n" * 8]
+
+
+def _unit_vector(text: str | None) -> np.ndarray:
+    """The per-row reference of ``hashed_ngram_vector_udf``."""
+    from go_dedupe_spark.functions.similarity import _hash_vector
+
+    v = _hash_vector(text or "")
+    norm = np.linalg.norm(v)
+    return (v / norm if norm > 0 else v).astype("float32")
+
+
+@pytest.mark.parametrize("start, stop", [(0, 0), (3, 3), (0, 10), (2, 9)],
+                         ids=["empty", "empty_slice", "full", "slice"])
+def test_arrow_kernels_match_row_references(start, stop):
+    """The Arrow UDF kernels, called on Arrow batches as the worker
+    calls them, equal the per-row references bit for bit: the
+    normalized float32 ``_hash_vector``, ``_jaro_winkler`` (a NULL path
+    scores as the empty one) and the float64 einsum cosine of the two
+    vectors; also on empty batches and on slices (offset != 0)."""
+    from go_dedupe_spark.functions.similarity import (
+        hashed_ngram_vector_udf,
+        path_vec_scores_udf,
+    )
+
+    texts = pa.array(_KERNEL_TEXTS, pa.string()).slice(start, stop - start)
+    other = pa.array(_KERNEL_TEXTS[::-1], pa.string()).slice(start, stop - start)
+    va = hashed_ngram_vector_udf.func(texts)
+    vb = hashed_ngram_vector_udf.func(other)
+    assert va.type == pa.list_(pa.float32()) and len(va) == len(texts)
+    for got, text in zip(va.to_pylist(), texts.to_pylist()):
+        assert np.array_equal(np.array(got, "float32"), _unit_vector(text)), text
+
+    # the vector batches start at offset != 0 too
+    va, vb = (pa.concat_arrays([v.slice(0, 1), v]).slice(1)
+              if len(v) else v for v in (va, vb))
+    out = path_vec_scores_udf.func(texts, other, va, vb)
+    assert out.type == pa.struct([("jw", pa.float64()), ("cos", pa.float64())])
+    assert len(out) == len(texts)
+    for row, a, b in zip(out.to_pylist(), texts.to_pylist(), other.to_pylist()):
+        ua = _unit_vector(a).astype("float64")
+        ub = _unit_vector(b).astype("float64")
+        assert row["jw"] == _jaro_winkler(a or "", b or ""), (a, b)
+        assert row["cos"] == np.einsum("ij,ij->i", ua[None], ub[None])[0], (a, b)
+
+
+def test_srp_bucketer_kernel_on_sliced_batch():
+    """``make_srp_bucketer``'s Arrow kernel on a slice (offset != 0)
+    equals ``_srp_buckets`` of the rows; a NULL element lands in bucket
+    0, and a NULL vector or a wrong length raises."""
+    from go_dedupe_spark.operators.ann import (
+        _srp_buckets,
+        make_srp_bucketer,
+        srp_signs,
+    )
+
+    rng = np.random.default_rng(5)
+    rows = rng.normal(size=(6, 4)).astype("float32")
+    vecs = pa.array([[9.0] * 4, *rows.tolist(), [1.0, None, 2.0, 3.0]],
+                    pa.list_(pa.float32())).slice(1)
+    got = make_srp_bucketer(4, 3).func(vecs)
+    want = _srp_buckets(rows.astype("float64"), srp_signs(4, 3))
+    assert got.type == pa.int64()
+    assert got.to_pylist() == [*want.tolist(), 0]
+    for bad in ([[1.0] * 4, None], [[1.0] * 4, [1.0] * 3]):
+        with pytest.raises(ValueError):
+            make_srp_bucketer(4, 3).func(pa.array(bad, pa.list_(pa.float64())))
