@@ -48,11 +48,30 @@ def _view(arr: pa.Array, dtype) -> np.ndarray:
                          arr.offset * dtype.itemsize)
 
 
-def _arrow(values: np.ndarray) -> pa.Array:
-    """A non-NULL Arrow array over a 1-d numeric ndarray's buffer."""
+def _valid(arr: pa.Array) -> np.ndarray:
+    """(len(arr),) bool: True where ``arr`` is non-NULL, unpacked from
+    its validity bitmap at ``arr.offset``."""
+    n = len(arr)
+    if arr.null_count in (0, n):    # also a bitmap-less NullArray
+        return np.full(n, arr.null_count == 0)
+    first = arr.offset // 8
+    bits = np.unpackbits(
+        np.frombuffer(arr.buffers()[0], np.uint8,
+                      (arr.offset + n + 7) // 8 - first, first),
+        bitorder="little")
+    return bits[arr.offset % 8:arr.offset % 8 + n].view(bool)
+
+
+def _arrow(values: np.ndarray, null: np.ndarray | None = None) -> pa.Array:
+    """An Arrow array over a 1-d numeric ndarray's buffer; ``null``
+    (bool, same length) marks its NULL slots."""
     values = np.ascontiguousarray(values)
+    validity = None
+    if null is not None and null.any():
+        validity = pa.py_buffer(np.packbits(~null, bitorder="little"))
     return pa.Array.from_buffers(pa.from_numpy_dtype(values.dtype),
-                                 len(values), [None, pa.py_buffer(values)])
+                                 len(values),
+                                 [validity, pa.py_buffer(values)])
 
 
 def _vector_matrix(vecs: pa.Array, dim: int) -> np.ndarray:
@@ -66,8 +85,7 @@ def _vector_matrix(vecs: pa.Array, dim: int) -> np.ndarray:
     flat = vecs.flatten()
     vals = _view(flat.cast(pa.float64()), np.float64)
     if flat.null_count:
-        null = _view(flat.is_null().cast(pa.uint8()), np.uint8)
-        vals = np.where(null, np.nan, vals)
+        vals = np.where(_valid(flat), vals, np.nan)
     return vals.reshape(len(vecs), dim)
 
 

@@ -34,6 +34,14 @@ the id-tie-broken ``row_number``, so results stay byte-identical to
 the DuckDB oracle; the kernel only drops rows that provably cannot
 reach a top-k. One Python stage runs at a time: the small side is
 collected and scored on the driver before the item pass starts.
+
+The kernel exchanges data with Arrow through buffers only, with the
+helpers of ``functions.similarity``: numbers are numpy views of value
+buffers (``_view``), NULLs are read from validity bitmaps (``_valid``),
+takes use Arrow index arrays and output columns are built over numpy
+buffers with a packed validity bitmap (``_arrow``). The pyarrow
+conveniences that would do this (listed in ``session``) import pandas
+into the worker, ~23 MB of an ANN worker's memory.
 """
 
 from __future__ import annotations
@@ -57,7 +65,12 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from go_dedupe_spark.functions.similarity import _arrow, _vector_matrix
+from go_dedupe_spark.functions.similarity import (
+    _arrow,
+    _valid,
+    _vector_matrix,
+    _view,
+)
 
 # ------------------------------------------------ cosine block kernel
 
@@ -85,7 +98,8 @@ class _Vectors(NamedTuple):
     ok: np.ndarray          # (n,) vector and all its elements non-NULL
 
     def take(self, idx: np.ndarray) -> _Vectors:
-        return _Vectors(self.ids.take(idx), self.vecs.take(idx),
+        at = _arrow(idx)
+        return _Vectors(self.ids.take(at), self.vecs.take(at),
                         self.dense[idx], self.length[idx], self.norm[idx],
                         self.ok[idx])
 
@@ -104,21 +118,23 @@ def _vectors(ids, vecs) -> _Vectors:
         ids = ids.combine_chunks()
     if isinstance(vecs, pa.ChunkedArray):
         vecs = vecs.combine_chunks()
-    flat = pc.list_flatten(vecs)
+    flat = vecs.flatten()
     if not pa.types.is_floating(flat.type):
         raise TypeError(f"cosine kernel needs float or double vectors, "
                         f"got {vecs.type}")
     n = len(vecs)
-    length = pc.list_value_length(vecs).fill_null(0).to_numpy()
+    valid = _valid(vecs)
+    length = np.where(
+        valid, np.diff(_view(vecs.offsets.cast(pa.int64()), np.int64)), 0)
     row = np.repeat(np.arange(n), length)
     col = np.arange(len(flat)) - np.repeat(np.cumsum(length) - length,
                                            length)
-    vals = flat.fill_null(0).to_numpy(zero_copy_only=False)
-    dense = np.zeros((n, int(length.max(initial=0))), dtype=vals.dtype)
-    dense[row, col] = vals
-    null_elem = np.bincount(row[flat.is_null().to_numpy(zero_copy_only=False)],
-                            minlength=n) > 0
-    ok = vecs.is_valid().to_numpy(zero_copy_only=False) & ~null_elem
+    dense = np.zeros((n, int(length.max(initial=0))),
+                     dtype=f"float{flat.type.bit_width}")
+    dense[row, col] = _view(flat, dense.dtype)
+    null = ~_valid(flat)
+    dense[row[null], col[null]] = 0
+    ok = valid & (np.bincount(row[null], minlength=n) == 0)
     sq = dense * dense
     acc = np.zeros(n)
     for j in range(dense.shape[1]):
@@ -180,12 +196,13 @@ def _self_pairs(item_ids: pa.Array, query_ids: pa.Array) -> np.ndarray:
     """(item, query) pairs ``query_id != item_id`` drops: equal ids, and
     every NULL id (the comparison is NULL there)."""
     q = query_ids.cast(item_ids.type)
-    i_code = pc.index_in(item_ids, value_set=q).fill_null(-1).to_numpy()
-    q_code = pc.index_in(q, value_set=q).fill_null(-1).to_numpy()
-    i_null = item_ids.is_null().to_numpy(zero_copy_only=False)
-    q_null = q.is_null().to_numpy(zero_copy_only=False)
-    return (np.equal.outer(i_code, q_code)
-            | np.logical_or.outer(i_null, q_null))
+
+    def code(ids: pa.Array) -> np.ndarray:
+        at = pc.index_in(ids, value_set=q)      # NULL where not in q
+        return np.where(_valid(at), _view(at, np.int32), -1)
+
+    return (np.equal.outer(code(item_ids), code(q))
+            | np.logical_or.outer(~_valid(item_ids), ~_valid(q)))
 
 
 def _blocks(batches, width: int):
@@ -196,10 +213,6 @@ def _blocks(batches, width: int):
         it = _vectors(batch.column(0), batch.column(1))
         for start in range(0, batch.num_rows, step):
             yield it.take(np.arange(start, min(start + step, batch.num_rows)))
-
-
-def _cosine_column(cos: np.ndarray, null: np.ndarray) -> pa.Array:
-    return pa.array(cos, type=pa.float64(), mask=null)
 
 
 def _centroid_candidates(blk: _Vectors, cents: _Vectors):
@@ -272,8 +285,8 @@ def cosine_topk_bruteforce(
             cos, null = _cosines(blk.column(), q, skip)
             i, j = np.nonzero(_keep(cos, null, k, axis=0, skip=skip))
             yield pa.RecordBatch.from_arrays(
-                [q.ids.take(j), blk.ids.take(i),
-                 _cosine_column(cos[i, j], null[i, j])],
+                [q.ids.take(_arrow(j)), blk.ids.take(_arrow(i)),
+                 _arrow(cos[i, j], null[i, j])],
                 names=["query_id", "item_id", "cosine"])
 
     return _query_scan(items, queries, id_col, vec_col, score, k)
@@ -326,9 +339,10 @@ def cosine_topk_ivf(
     if tied.any():
         qi, ci = np.nonzero(keep & tied[:, None])
         local = spark.createDataFrame(
-            pa.table({"query_id": qv.ids.take(qi), "cid": cents.ids.take(ci),
-                      "qcos": _cosine_column(cos[qi, ci], null[qi, ci]),
-                      "_q": qi, "_c": ci}),
+            pa.table({"query_id": qv.ids.take(_arrow(qi)),
+                      "cid": cents.ids.take(_arrow(ci)),
+                      "qcos": _arrow(cos[qi, ci], null[qi, ci]),
+                      "_q": _arrow(qi), "_c": _arrow(ci)}),
             StructType([StructField("query_id", qid_type),
                         StructField("cid", cid_type),
                         StructField("qcos", DoubleType()),
@@ -343,9 +357,9 @@ def cosine_topk_ivf(
             .select("_q", "_c").toArrow()
         )
         probe_q = np.concatenate(
-            [probe_q, np.asarray(ranked.column("_q"), dtype=np.int64)])
+            [probe_q, _view(ranked.column("_q").combine_chunks(), np.int64)])
         probe_c = np.concatenate(
-            [probe_c, np.asarray(ranked.column("_c"), dtype=np.int64)])
+            [probe_c, _view(ranked.column("_c").combine_chunks(), np.int64)])
     # query rows probing each list
     lists = [probe_q[probe_c == c] for c in range(len(cents.length))]
     it = items.select(F.col(id_col).alias("item_id"),
@@ -377,14 +391,14 @@ def cosine_topk_ivf(
             offsets = np.concatenate(
                 [[0], np.cumsum(np.bincount(hr, minlength=len(ii)))])
             hits = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
+                _arrow(offsets.astype(np.int32)),
                 pa.StructArray.from_arrays(
-                    [qv.ids.take(hq[order]),
-                     _cosine_column(hcos[order], hnull[order])],
+                    [qv.ids.take(_arrow(hq[order])),
+                     _arrow(hcos[order], hnull[order])],
                     names=["query_id", "cosine"]))
             yield pa.RecordBatch.from_arrays(
-                [blk.ids.take(ii), cents.ids.take(cc),
-                 _cosine_column(ccos, cnull), hits],
+                [blk.ids.take(_arrow(ii)), cents.ids.take(_arrow(cc)),
+                 _arrow(ccos, cnull), hits],
                 names=["item_id", "cid", "ccos", "hits"])
 
     return _top_k(
@@ -491,9 +505,10 @@ def train_ivf_centroids(
         def assign(batches, cents=cents):
             for blk in _blocks(batches, len(cents.length)):
                 i, j, cos, null = _centroid_candidates(blk, cents)
+                at = _arrow(i)
                 yield pa.RecordBatch.from_arrays(
-                    [blk.ids.take(i), blk.vecs.take(i), cents.ids.take(j),
-                     _cosine_column(cos, null)],
+                    [blk.ids.take(at), blk.vecs.take(at),
+                     cents.ids.take(_arrow(j)), _arrow(cos, null)],
                     names=["item_id", "ivec", "cid", "ccos"])
 
         sums = (
@@ -651,7 +666,7 @@ def cosine_topk_lsh(
     signs = srp_signs(dim, n_bits)
 
     def buckets(v: _Vectors) -> np.ndarray:
-        valid = v.vecs.is_valid().to_numpy(zero_copy_only=False)
+        valid = _valid(v.vecs)
         bad = np.nonzero(~valid | (v.length != dim))[0]
         if len(bad):
             r = int(bad[0])
@@ -669,9 +684,10 @@ def cosine_topk_lsh(
             x = np.bitwise_xor.outer(buckets(blk), q_bucket)
             i, j = np.nonzero(((x & (x - 1)) == 0)
                               & ~_self_pairs(blk.ids, q.ids))
-            cos, null = _cosines(blk.take(i), q.take(j))
+            items, probers = blk.take(i), q.take(j)
+            cos, null = _cosines(items, probers)
             yield pa.RecordBatch.from_arrays(
-                [q.ids.take(j), blk.ids.take(i), _cosine_column(cos, null)],
+                [probers.ids, items.ids, _arrow(cos, null)],
                 names=["query_id", "item_id", "cosine"])
 
     return _query_scan(items, queries, id_col, vec_col, score, k)

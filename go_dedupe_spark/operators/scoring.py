@@ -112,10 +112,11 @@ def score_pairs(pairs: DataFrame, features: DataFrame,
     block_key, jw_path, jaccard_content, cosine_ngram, score, is_match,
     decided_by).
 
-    Rows decided at phase 1 carry NULL jw_path/cosine_ngram, a
-    lower-bound score (W_JACCARD * jaccard) and decided_by =
-    'jaccard_floor'; phase-2 rows carry full features and decided_by
-    'exact' (byte-identical content) or 'full'.
+    Every pair gets exactly one row. Rows decided at phase 1 carry NULL
+    jw_path/cosine_ngram, a lower-bound score (W_JACCARD * jaccard) and
+    decided_by = 'jaccard_floor'; phase-2 rows carry full features and
+    decided_by 'exact' (byte-identical content) or 'full'. A side with
+    NULL content shares no shingle: Jaccard 0.0, floored.
 
     Pass ``features`` materialized (localCheckpoint or a checkpoint
     table): each phase joins it twice, and a lazy frame re-runs the
@@ -133,11 +134,12 @@ def score_pairs(pairs: DataFrame, features: DataFrame,
                          F.col("n_toks").alias("n_a"))
     b1 = features.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"),
                          F.col("n_toks").alias("n_b"))
+    # a NULL content has no shingles (its toks are NULL): 0.0, floored
     p1 = (
         pairs.join(a1, "id_a").join(b1, "id_b")
         .select("id_a", "id_b", "block_key",
-                set_jaccard("toks_a", "toks_b", "n_a", "n_b")
-                .alias("jaccard_content"))
+                F.coalesce(set_jaccard("toks_a", "toks_b", "n_a", "n_b"),
+                           F.lit(0.0)).alias("jaccard_content"))
     )
     floor_neg = p1.where(F.col("jaccard_content") < JAC_FLOOR).select(
         "id_a", "id_b", "block_key",

@@ -14,14 +14,16 @@ per-record stage spreads a narrow input with ``spread``; a Python stage
 runs at its input's partitioning, because each concurrent Python task
 forks its own Python worker.
 
-The ER pipeline's Python processes load neither pandas nor IPython.
-The scoring kernels are Arrow UDFs that read and build ``pa.Array``
-batches directly; the pyarrow calls that would import pandas into a
-worker through pyarrow's pandas shim (``pa.array``, ``to_numpy``,
-``to_pandas_dtype``, ``fill_null`` or a compute function given a
-Python scalar, ``take`` of an ndarray) stay out of them
-(``functions.similarity``), which keeps ~27 MB out of a scoring
-worker. On the driver, PySpark's DataFrame-debugging call-site capture
+The Python processes of the ER pipeline and of the ANN operators load
+neither pandas nor IPython. The scoring kernels (Arrow UDFs) and the
+ANN cosine kernel (a ``mapInArrow`` scan) read and build ``pa.Array``
+batches through their buffers only; the pyarrow calls that would
+import pandas into a worker through pyarrow's pandas shim
+(``pa.array``, ``to_numpy``, ``to_pandas_dtype``, ``fill_null`` or a
+compute function given a Python scalar, ``take`` of an ndarray) stay
+out of them (the helpers are in ``functions.similarity``). That keeps
+~27 MB out of a scoring worker and ~23 MB out of an ANN worker. On the
+driver, PySpark's DataFrame-debugging call-site capture
 (``spark.python.sql.dataFrameDebugging.enabled``, on by default) runs
 on every ``F.*`` call and Column operator: it imports IPython (~25 MB),
 searches ``sys.path`` for ``ipykernel`` each time and adds py4j round

@@ -470,6 +470,33 @@ def test_score_pairs_is_partition_invariant(spark):
         assert rows(n) == want, n
 
 
+def test_score_pairs_floors_null_content_pairs(spark):
+    """A pair with a NULL-content side is a ``jaccard_floor`` non-match
+    (Jaccard 0.0): every candidate pair gets exactly one row, also when
+    ``build_features`` runs on records ``normalize`` has not filtered."""
+    body = "def load(path):\n    with open(path) as fh:\n        return fh.read()\n"
+    docs = [("a", "src/load.py", body), ("b", "lib/load.py", body),
+            ("c", "src/none.py", None), ("d", "src/other.py", None),
+            ("e", "empty.txt", ""), ("f", "notes.md", "some plain notes")]
+    records = spark.createDataFrame(
+        docs, "id string, path string, content string") \
+        .withColumn("content_sha256", F.sha2("content", 256))
+    features = build_features(records).localCheckpoint(eager=True)
+    pairs = spark.createDataFrame(
+        [(a, b, f"{a}{b}") for i, (a, _, _) in enumerate(docs)
+         for (b, _, _) in docs[i + 1:]],
+        "id_a string, id_b string, block_key string")
+    rows = score_pairs(pairs, features, PipelineConfig().threshold).collect()
+    assert sorted(r["block_key"] for r in rows) == sorted(
+        r["block_key"] for r in pairs.collect()), rows
+    by_key = {r["block_key"]: r for r in rows}
+    assert by_key["ab"]["decided_by"] == "exact" and by_key["ab"]["is_match"]
+    for key, r in by_key.items():
+        if "c" in key or "d" in key:
+            assert (r["decided_by"], r["is_match"], r["jaccard_content"],
+                    r["score"]) == ("jaccard_floor", False, 0.0, 0.0), r
+
+
 def test_score_pairs_adds_no_exchange_before_its_python_stage(spark):
     """No fixed-count repartition in ``score_pairs``' plan, and one
     Arrow UDF node (phase 2). Each task of the UDF's stage runs its own

@@ -219,3 +219,70 @@ def test_srp_bucketer_kernel_on_sliced_batch():
     for bad in ([[1.0] * 4, None], [[1.0] * 4, [1.0] * 3]):
         with pytest.raises(ValueError):
             make_srp_bucketer(4, 3).func(pa.array(bad, pa.list_(pa.float64())))
+
+
+def _nullable_lists(elem: pa.DataType) -> pa.Array:
+    """20 two-element vectors: every 4th a NULL list, every 5th with a
+    NULL element."""
+    return pa.array([None if i % 4 == 2 else
+                     [float(i), None if i % 5 == 0 else 1.0]
+                     for i in range(20)], pa.list_(elem))
+
+
+_NUMS = pa.array([None if i % 3 == 1 or i % 7 == 0 else float(i)
+                  for i in range(40)], pa.float64())
+_BITMAP_CASES = {
+    "no_bitmap": pa.array([1.0, 2.0, 3.0]),
+    "all_null": pa.array([None] * 11, pa.float64()),
+    "null_type": pa.nulls(5),
+    "nullable": _NUMS,
+    "sliced_13": _NUMS.slice(13, 19),
+    "sliced_tail": _NUMS.slice(5),
+    "empty_slice": _NUMS.slice(9, 0),
+    "list_float": _nullable_lists(pa.float32()),
+    "list_double_sliced": _nullable_lists(pa.float64()).slice(3, 11),
+    "list_float_flat": _nullable_lists(pa.float32()).slice(3, 11).flatten(),
+}
+
+
+@pytest.mark.parametrize("case", list(_BITMAP_CASES))
+def test_valid_reads_validity_bitmap(case):
+    """``_valid`` unpacks the validity bitmap exactly as
+    ``is_valid()`` reads it: with no bitmap, all NULL, at an offset that
+    is not a multiple of 8, and on list columns with NULL lists."""
+    from go_dedupe_spark.functions.similarity import _valid
+
+    arr = _BITMAP_CASES[case]
+    if case == "no_bitmap":
+        assert arr.buffers()[0] is None
+    got = _valid(arr)
+    assert got.dtype == bool and got.tolist() == arr.is_valid().to_pylist()
+
+
+def test_arrow_packs_null_mask():
+    """``_arrow`` with a NULL mask builds the nullable column
+    ``pa.array(values, mask=null)`` does; with none it has no bitmap."""
+    from go_dedupe_spark.functions.similarity import _arrow
+
+    values = np.arange(11, dtype=np.float64) / 3
+    null = np.arange(11) % 4 == 1
+    got = _arrow(values, null)
+    assert got.equals(pa.array(values, mask=null)) and got.null_count == 3
+    assert _arrow(values, np.zeros(11, bool)).buffers()[0] is None
+    assert _arrow(values[:0], null[:0]).to_pylist() == []
+
+
+def test_ann_vectors_on_sliced_list_column():
+    """The ANN kernel densifies a sliced list column (offset != 0, NULL
+    lists and NULL elements) as it does the same rows unsliced."""
+    from go_dedupe_spark.operators.ann import _vectors
+
+    vecs = _BITMAP_CASES["list_double_sliced"]
+    ids = pa.array(range(len(vecs)), pa.int64())
+    got = _vectors(ids, vecs)
+    want = _vectors(ids, pa.array(vecs.to_pylist(), vecs.type))
+    for g, w in zip(got[2:], want[2:]):
+        assert g.dtype == w.dtype and np.array_equal(g, w, equal_nan=True)
+    rows = vecs.to_pylist()
+    assert got.ok.tolist() == [r is not None and None not in r for r in rows]
+    assert got.length.tolist() == [len(r or []) for r in rows]
