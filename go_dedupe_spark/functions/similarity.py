@@ -102,13 +102,22 @@ def word_tokens(col: Column | str, lowercase: bool = True) -> Column:
 
 
 def char_ngrams(colname: str, n: int = 3) -> Column:
-    """Character n-gram shingles of a string column, as a native Column
-    (sequence+transform+substring — stays in whole-stage codegen)."""
-    return F.expr(
-        f"CASE WHEN length({colname}) < {n} THEN array({colname}) "
-        f"ELSE transform(sequence(1, length({colname}) - {n} + 1), "
-        f"i -> substring({colname}, i, {n})) END"
-    )
+    """Character n-gram shingles of a string column, as a native Column:
+    every window of n code points in position order (the whole string
+    when it is shorter than n; NULL stays NULL).
+
+    One pass over each string: ``regexp_extract_all`` with a lookahead
+    group captures the window at every position. Calling
+    ``substring(text, i, n)`` per position instead costs O(length²) per
+    string, since Spark's ``UTF8String`` walks from the start for each
+    call. Java's matcher steps one UTF-16 unit after each empty match,
+    so it also tries to start a window on the low half of a surrogate
+    pair; the ``[^\\p{Cs}]`` first character rejects those starts, and
+    every window begins on a code-point boundary as ``substring``'s do."""
+    c = F.col(colname)
+    windows = F.regexp_extract_all(
+        c, F.lit(rf"(?s)(?=([^\p{{Cs}}].{{{n - 1}}}))"), F.lit(1))
+    return F.when(F.length(c) < n, F.array(c)).otherwise(windows)
 
 
 # ------------------------------------------------------------- Jaro-Winkler

@@ -421,8 +421,9 @@ def train_ivf_centroids(
     (reference analog: the HNSW index build, vector/duckdb.go:273 —
     the one-time structure that makes per-query probing sublinear).
 
-    - init: the k items ranked first by ``md5(id)`` — a deterministic
-      pseudo-random sample, rerun-stable with no RNG state.
+    - init: the k non-NULL-id items ranked first by ``md5(id)`` — a
+      deterministic pseudo-random sample, rerun-stable with no RNG
+      state.
     - assign: nearest centroid by cosine, the same step as
       ``cosine_topk_ivf``: the cosine kernel scores the checkpointed
       items against the current centroids in one Python stage,
@@ -488,9 +489,11 @@ def train_ivf_centroids(
                 f"{n_sampled} rows < k={k}; max_rows={max_rows} is too "
                 f"close to k — raise max_rows")
     # the sample is a prefix of the md5 ordering, so the sampled init
-    # picks the first-k of that same ordering
+    # picks the first-k of that same ordering; NULL ids (sorted first)
+    # seed no centroid but are still assigned below
     init = (
-        it.withColumn("_r", F.md5(F.col("item_id").cast("string")))
+        it.where(F.col("item_id").isNotNull())
+        .withColumn("_r", F.md5(F.col("item_id").cast("string")))
         .orderBy("_r")
         .limit(k)
         .select(F.col("_r").alias("cid"), F.col("ivec").alias("cvec"))

@@ -261,22 +261,25 @@ def ngram_jaccard_pairs(
     job: the per-doc gram table is localCheckpointed. A narrower input
     is hash-spread on id once (``session.spread``) before the grams.
 
-    Every gram is md5-prefix-hashed to a 60-bit long BEFORE the pair
-    join, so the per-pair shuffle carries 8-byte ints instead of full
-    n-char strings — a doc appearing in p candidate pairs ships its
-    gram set p times, and at n=5 the hashed array is ~5x smaller wire
-    weight (~10x on longer grams). Jaccard on hashed sets equals
-    Jaccard on string sets up to 60-bit collisions (~1e-14 per gram
-    pair; tested against Python string-gram sets). The hash is
-    DuckDB-reproducible: ``('0x' || substr(md5(g), 1, 15))::BIGINT``."""
+    Every gram is hashed to a 64-bit long with Spark's native
+    ``xxhash64`` BEFORE the pair join, so the per-pair shuffle carries
+    8-byte ints instead of full n-char strings — a doc appearing in p
+    candidate pairs ships its gram set p times, and at n=5 the hashed
+    array is ~5x smaller wire weight (~10x on longer grams). The hash
+    values never reach the output: Jaccard on hashed sets equals
+    Jaccard on string sets up to 64-bit collisions (tested against
+    Python string-gram sets). The DuckDB twin (``entry_queries``
+    ``dedup_ngram_jaccard``) hashes the grams with an md5 prefix
+    instead and agrees on every Jaccard value up to collisions of
+    either hash."""
     gram_expr = F.array_distinct(F.transform(char_ngrams(text_col, n),
-                                             token_hash64))
+                                             lambda g: F.xxhash64(g)))
     # Materialize the gram table once (r7, guide §2.4): it feeds BOTH
     # join sides, and each side's exchange/broadcast build would
-    # otherwise re-run the n-gram md5 hashing over the full corpus
-    # (~n_chars md5 calls per doc). Same distributed-materialization
-    # policy as scoring.build_features. The per-doc distinct gram count
-    # is stored next to the grams for set_jaccard.
+    # otherwise re-run the n-gram windows and hashes over the full
+    # corpus. Same distributed-materialization policy as
+    # scoring.build_features. The per-doc distinct gram count is stored
+    # next to the grams for set_jaccard.
     grams = (
         spread(df, id_col)
         .select(F.col(id_col).alias("id"), gram_expr.alias("grams"))

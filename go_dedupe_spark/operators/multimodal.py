@@ -76,10 +76,6 @@ def _fake_decode_f64(payload: bytes) -> np.ndarray:
     return np.frombuffer(d[:FEATURE_DIM], dtype=np.uint8) / 255.0
 
 
-def _fake_decode(payload: bytes) -> np.ndarray:
-    return _fake_decode_f64(payload).astype("float32")
-
-
 def canonical_csv(feats_f64: np.ndarray) -> str:
     """Cross-engine-stable string form: '%.6f' of each float64 feature
     (DuckDB printf('%.6f', x) produces the identical string)."""

@@ -80,7 +80,7 @@ def test_ngram_jaccard(docs, spark):
 
 
 def test_ngram_jaccard_hashed_equals_string_path(docs, spark):
-    """VERDICT r3 wrong #2: grams are md5-prefix-hashed to int64 before
+    """VERDICT r3 wrong #2: grams are xxhash64-hashed to int64 before
     the pair join (8-byte ints on the wire instead of n-char strings).
     The hashed path must produce the pairs and jaccard values of exact
     Jaccard over the distinct STRING grams."""
@@ -341,19 +341,29 @@ def _planned(df) -> str:
 
 def _gram_table_plan(spark, docs, monkeypatch) -> str:
     """The planned gram table of ``ngram_jaccard_pairs(docs, ...)``: the
-    first frame it localCheckpoints."""
+    first frame it localCheckpoints. No job runs: the stand-in records
+    the plan and returns the frame unmaterialized."""
     plans = []
-    real = type(docs).localCheckpoint
 
     def recording(self, *args, **kwargs):
         plans.append(_planned(self))
-        return real(self, *args, **kwargs)
+        return self
 
     monkeypatch.setattr(type(docs), "localCheckpoint", recording)
     pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
     ngram_jaccard_pairs(docs, pairs, "doc_id", "text")
     monkeypatch.undo()
     return plans[0]
+
+
+def test_gram_table_is_one_regex_pass_hashed_by_xxhash64(
+        spark, one_split, monkeypatch):
+    """The gram table windows each text with one ``regexp_extract_all``
+    and hashes its grams with ``xxhash64``: no per-position
+    ``sequence``/``substring`` and no md5 chain."""
+    plan = _gram_table_plan(spark, one_split, monkeypatch)
+    assert "regexp_extract_all" in plan and "xxhash64" in plan, plan
+    assert "sequence(" not in plan and "md5(" not in plan, plan
 
 
 def test_spread_puts_one_hash_exchange_ahead_of_tokenize(

@@ -10,6 +10,9 @@ scores or destroys a table:
 - hashed n-gram vectors: mass conservation (one count per byte
   window), determinism, and coefficient-prefix stability for n <= 5
   (score compatibility across releases).
+- char_ngrams: the one-pass regex windows equal the per-position
+  ``substring`` form and Python code-point slicing on text with
+  supplementary-plane characters, NUL, newline, empty, short and NULL.
 - set_jaccard: the one per-pair set-Jaccard expression (ER scoring,
   the entry queries and n-gram dedup) equals Jaccard over Python sets,
   including the identical, disjoint and empty-set edge cases.
@@ -47,6 +50,7 @@ from go_dedupe_spark.functions.similarity import (
     _hash_vector,
     _jaro_winkler,
     _jaro_winkler_batch,
+    char_ngrams,
     set_jaccard,
 )
 from go_dedupe_spark.operators.ann import (
@@ -177,6 +181,53 @@ def test_set_jaccard_matches_python_sets(spark, pairs):
     # one Spark job per example: the whole batch of pairs in one frame
     assert _spark_jaccard(spark, pairs) == [_py_jaccard(a, b)
                                             for a, b in pairs]
+
+
+# ---------------------------------------------------------- char n-grams
+
+
+def _substring_ngrams(col: str, n: int):
+    """The per-position ``substring`` form ``char_ngrams`` replaced
+    (O(length²) per string), kept as its reference."""
+    return F.expr(
+        f"CASE WHEN length({col}) < {n} THEN array({col}) "
+        f"ELSE transform(sequence(1, length({col}) - {n} + 1), "
+        f"i -> substring({col}, i, {n})) END")
+
+
+def _py_ngrams(t: str | None, n: int) -> list[str] | None:
+    """Code-point slicing: the windows ``char_ngrams`` must produce."""
+    if t is None:
+        return None
+    return [t] if len(t) < n else [t[i:i + n] for i in range(len(t) - n + 1)]
+
+
+# supplementary-plane characters (surrogate pairs in Java's UTF-16),
+# NUL, newline and BMP non-ASCII weighted in; st.characters() never
+# yields a lone surrogate
+_gram_text = st.text(
+    alphabet=st.one_of(st.sampled_from("ab\x00\n é😀𝄞"),
+                       st.characters(min_codepoint=0x10000),
+                       st.characters()),
+    max_size=14)
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(texts=st.lists(st.one_of(st.none(), _gram_text), min_size=1,
+                      max_size=20),
+       n=st.sampled_from([1, 2, 3, 5]))
+@example(texts=["", "abcd", None, "abcde", "a\nb\x00cdé", "😀abcd",
+                "x😀y𝄞zw", "😀😀😀😀😀😀", "ab😀"], n=5)
+def test_char_ngrams_match_substring_and_python(spark, texts, n):
+    # one Spark job per example: the whole batch of texts in one frame
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    rows = df.select("i", char_ngrams("t", n).alias("got"),
+                     _substring_ngrams("t", n).alias("old")) \
+        .orderBy("i").collect()
+    want = [_py_ngrams(t, n) for t in texts]
+    assert [r["got"] for r in rows] == want
+    assert [r["old"] for r in rows] == want
 
 
 # ------------------------------------------------ ANN cosine kernel
