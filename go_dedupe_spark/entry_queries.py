@@ -911,13 +911,14 @@ _EMB_DIM = 64
 
 
 def _sql_kmeans_iter(i: int, prev: str) -> str:
-    """One Lloyd iteration as DuckDB CTEs: assign (rounded cosine,
-    cid tie-break) -> element-wise mean -> L2 normalize -> round 6."""
-    return f"""a{i} AS (SELECT e.vec_id, e.v, c.cid,
+    """One Lloyd iteration as DuckDB CTEs: assign each row (rounded
+    cosine, cid tie-break) -> element-wise mean -> L2 normalize -> round
+    6. Rows are keyed by ``rid``, not ``vec_id``: every row is a member."""
+    return f"""a{i} AS (SELECT e.rid, e.v, c.cid,
         round({_sql_cosine('e.v', 'c.cvec')}, 6) AS cc
       FROM e CROSS JOIN {prev} c),
-b{i} AS (SELECT vec_id, v, cid FROM a{i}
-      QUALIFY row_number() OVER (PARTITION BY vec_id
+b{i} AS (SELECT rid, v, cid FROM a{i}
+      QUALIFY row_number() OVER (PARTITION BY rid
               ORDER BY cc DESC, cid) = 1),
 m{i} AS (SELECT cid, t.i AS pos, avg(v[t.i]) AS m
       FROM b{i}, range(1, {_EMB_DIM} + 1) t(i) GROUP BY 1, 2),
@@ -935,7 +936,7 @@ _SQL_KMEANS = ",\n".join(
 
 
 @query("ivf_kmeans_centroids", f"""
-WITH e AS ({_SQL_EMB}),
+WITH e AS (SELECT *, row_number() OVER () AS rid FROM ({_SQL_EMB})),
 init AS (SELECT md5(CAST(vec_id AS VARCHAR)) AS cid, v AS cvec FROM e
          ORDER BY cid LIMIT {IVF_TRAIN_K}),
 {_SQL_KMEANS}

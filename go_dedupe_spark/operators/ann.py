@@ -11,7 +11,10 @@ kNN inside a block. Spark-native equivalents:
   Q is small or N is blocked.
 - IVF (coarse quantizer): the same kernel assigns items to their
   nearest centroid and picks each query's probe lists; a deterministic
-  spherical k-means trains the centroids with it.
+  spherical k-means trains the centroids with it, one Spark job per
+  Lloyd iteration: the kernel assigns every item row and sums each
+  partition's members per centroid, and the driver merges the k
+  partial means.
 - sign-random-projection LSH buckets (scale path): items and queries
   hash to the same bucket with probability rising in cosine; top-k is
   computed within buckets only. Queries MULTI-PROBE: they probe their
@@ -32,7 +35,9 @@ cosine is bit-identical to it — NULL, NaN, zero-vector and
 length-mismatch cases included. Spark still applies ``round(., 6)`` and
 the id-tie-broken ``row_number``, so results stay byte-identical to
 the DuckDB oracle; the kernel only drops rows that provably cannot
-reach a top-k. One Python stage runs at a time: the small side is
+reach a top-k, and the trainer decides in the kernel only the
+assignments no rounding can change (Spark's round settles the rest,
+on the driver). One Python stage runs at a time: the small side is
 collected and scored on the driver before the item pass starts.
 
 The kernel exchanges data with Arrow through buffers only, with the
@@ -47,12 +52,14 @@ into the worker, ~23 MB of an ANN worker's memory.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
@@ -71,6 +78,7 @@ from go_dedupe_spark.functions.similarity import (
     _vector_matrix,
     _view,
 )
+from go_dedupe_spark.session import observed
 
 # ------------------------------------------------ cosine block kernel
 
@@ -218,10 +226,31 @@ def _blocks(batches, width: int):
 def _centroid_candidates(blk: _Vectors, cents: _Vectors):
     """Each item's candidate lists: (item rows, centroid rows, raw
     cosines, NULL mask) — its nearest centroid and any that may round
-    level with it."""
+    level with it. Item rows come out ascending, each with >= 1
+    candidate when there is a centroid."""
     cos, null = _cosines(blk.column(), cents)
     i, j = np.nonzero(_keep(cos, null, 1, axis=1))
     return i, j, cos[i, j], null[i, j]
+
+
+def _lists(rows: np.ndarray, length: np.ndarray,
+           null: np.ndarray | None = None) -> pa.Array:
+    """The first ``length[r]`` values of each row of a 2-d ndarray as a
+    list column; ``null`` (bool, ``rows``' shape) marks NULL elements."""
+    cut = np.arange(rows.shape[1]) < length[:, None]
+    offsets = np.concatenate([[0], np.cumsum(length)]).astype(np.int32)
+    return pa.ListArray.from_arrays(
+        _arrow(offsets), _arrow(rows[cut], None if null is None else null[cut]))
+
+
+def _padded(lists: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """A list column with no NULL list or element as a zero-padded
+    (rows, longest) ndarray, and each row's length."""
+    length = np.diff(_view(lists.offsets.cast(pa.int64()), np.int64))
+    out = np.zeros((len(lists), int(length.max(initial=0))), dtype)
+    out[np.arange(out.shape[1]) < length[:, None]] = \
+        _view(lists.flatten(), dtype)
+    return out, length
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -258,6 +287,14 @@ def _assigned(scored: DataFrame) -> DataFrame:
         .withColumn("_r", F.row_number().over(w))
         .where(F.col("_r") == 1)
     )
+
+
+def _spark_desc(x: float | None) -> tuple:
+    """Sort key of a double in Spark's DESC NULLS LAST order: NaN first,
+    NULL last, -0.0 level with 0.0."""
+    if x is None:
+        return (2, 0.0)
+    return (0, 0.0) if x != x else (1, -x)
 
 
 def cosine_topk_bruteforce(
@@ -407,6 +444,124 @@ def cosine_topk_ivf(
         .select("h.query_id", "item_id", "h.cosine"), k)
 
 
+# A partition's pass of the trainer: the candidates of each near-tied
+# row (keyed by ``_r``), then one row of partial sums per centroid
+# (``_r`` NULL).
+_MEMBER_SUMS = StructType([StructField("_r", LongType()),
+                           StructField("_c", LongType()),
+                           StructField("ccos", DoubleType()),
+                           StructField("sums", ArrayType(DoubleType())),
+                           StructField("cnt", ArrayType(LongType()))])
+
+
+def _member_sums(batches, cents: _Vectors, group: np.ndarray):
+    """One partition of a Lloyd iteration: each item row joins its
+    nearest centroid, and every decided row is summed into that
+    centroid's partial state (per position: the sum and the count of
+    non-NULL values; the longest length), ``avg``'s semantics after
+    ``posexplode``: NULL elements and NULL vectors add nothing, NaN
+    propagates. A row is decided when it has one candidate, or when its
+    candidates' raw cosines are equal numbers, which ``cid`` (the
+    ``group`` order) settles. The other rows' candidates leave as
+    (``_r`` row key, ``_c``, raw ``ccos``, the row as sums and counts)
+    for the driver to round and rank."""
+    n_groups = int(group.max(initial=-1)) + 1
+    sums = np.zeros((n_groups, 0))
+    cnt = np.zeros((n_groups, 0), np.int64)
+    longest = np.zeros(n_groups, np.int64)
+    key = TaskContext.get().partitionId() << 32
+    for blk in _blocks(batches, len(group)) if n_groups else ():
+        n = len(blk.length)
+        i, j, cos, null = _centroid_candidates(blk, cents)
+        g = group[j]
+        start = np.searchsorted(i, np.arange(n))
+        decided = (np.bincount(i, minlength=n) == 1) | (
+            ~np.logical_or.reduceat(null | np.isnan(cos), start)
+            & (np.minimum.reduceat(cos, start)
+               == np.maximum.reduceat(cos, start)))
+        present = np.arange(blk.dense.shape[1]) < blk.length[:, None]
+        present[present] = _valid(blk.vecs.flatten())
+        if blk.dense.shape[1] > sums.shape[1]:
+            grow = ((0, 0), (0, blk.dense.shape[1] - sums.shape[1]))
+            sums, cnt = np.pad(sums, grow), np.pad(cnt, grow)
+        d = np.nonzero(decided)[0]
+        win = np.minimum.reduceat(g, start)[d]
+        np.add.at(sums[:, :blk.dense.shape[1]], win, blk.dense[d])
+        np.add.at(cnt[:, :blk.dense.shape[1]], win, present[d])
+        np.maximum.at(longest, win, blk.length[d])
+        tie = ~decided[i]
+        r = i[tie]
+        yield pa.RecordBatch.from_arrays(
+            [_arrow(key + r), _arrow(g[tie]), _arrow(cos[tie], null[tie]),
+             _lists(blk.dense[r], blk.length[r]),
+             _lists(present[r].astype(np.int64), blk.length[r])],
+            names=_MEMBER_SUMS.names)
+        key += n
+    live = np.nonzero(longest)[0]
+    none = np.ones(len(live), bool)
+    yield pa.RecordBatch.from_arrays(
+        [_arrow(np.zeros(len(live), np.int64), none), _arrow(live),
+         _arrow(np.zeros(len(live)), none),
+         _lists(sums[live], longest[live]), _lists(cnt[live], longest[live])],
+        names=_MEMBER_SUMS.names)
+
+
+def _spark_round(spark, x: np.ndarray, null: np.ndarray | None = None):
+    """Spark's ``round(x, 6)`` of each value, as Python floats (None for
+    NULL). It runs on a local relation, whose projection the optimizer
+    folds into the relation, so ``collect`` runs no job."""
+    local = spark.createDataFrame(pa.table({"x": _arrow(x, null)}))
+    return [r[0] for r in local.select(F.round("x", 6)).collect()]
+
+
+def _lloyd_update(spark, cids: pa.Array, parts: pa.Table) -> pa.Table:
+    """The next (cid, cvec) centroids from one pass's ``_member_sums``
+    output, with no Spark job. Spark's rounding settles each near-tied
+    row (rounded cosine desc, then ``cid``), the partial sums merge into
+    per-position means, and each mean is L2-normalized as
+    ``when(norm > 0, round(x / norm, 6))`` did: norm and quotient by the
+    kernel's arithmetic (``_vectors``, bit-identical to the HOF), the
+    rounding by Spark."""
+    col = {name: parts.column(name).combine_chunks()
+           for name in parts.column_names}
+    c = _view(col["_c"], np.int64)
+    tied = _valid(col["_r"])
+    rows = np.nonzero(~tied)[0]
+    if tied.any():
+        tie = np.nonzero(tied)[0]
+        ccos = col["ccos"].take(_arrow(tie))
+        best = {}
+        for row, key, x in zip(
+                tie.tolist(), _view(col["_r"], np.int64)[tie].tolist(),
+                _spark_round(spark, _view(ccos, np.float64), ~_valid(ccos))):
+            rank = (_spark_desc(x), c[row])
+            if key not in best or rank < best[key][0]:
+                best[key] = (rank, row)
+        rows = np.append(rows, [row for _, row in best.values()])
+    at = _arrow(rows.astype(np.int64))
+    sums, length = _padded(col["sums"].take(at), np.float64)
+    cnt, _ = _padded(col["cnt"].take(at), np.int64)
+    total = np.zeros((len(cids), sums.shape[1]))
+    n = np.zeros(total.shape, np.int64)
+    longest = np.zeros(len(cids), np.int64)
+    np.add.at(total, c[rows], sums)
+    np.add.at(n, c[rows], cnt)
+    np.maximum.at(longest, c[rows], length)
+    live = np.nonzero(longest)[0]
+    with np.errstate(all="ignore"):
+        mean = total[live] / n[live]
+    hole = n[live] == 0
+    m = _vectors(cids.take(_arrow(live)), _lists(mean, longest[live], hole))
+    unit = m.ok & ((m.norm > 0) | np.isnan(m.norm))
+    cut = np.arange(mean.shape[1]) < m.length[:, None]
+    with np.errstate(all="ignore"):
+        scaled = mean[unit] / m.norm[unit, None]
+    if unit.any():
+        scaled[cut[unit]] = _spark_round(spark, scaled[cut[unit]])
+        mean[unit] = scaled
+    return pa.table({"cid": m.ids, "cvec": _lists(mean, m.length, hole)})
+
+
 def train_ivf_centroids(
     items: DataFrame,
     k: int = 16,
@@ -417,30 +572,34 @@ def train_ivf_centroids(
     total_rows: int | None = None,
 ) -> DataFrame:
     """Deterministic spherical k-means (Lloyd's) trainer for
-    ``cosine_topk_ivf`` — pure DataFrame ops, no mllib dependency
-    (reference analog: the HNSW index build, vector/duckdb.go:273 —
-    the one-time structure that makes per-query probing sublinear).
+    ``cosine_topk_ivf`` — no mllib dependency (reference analog: the
+    HNSW index build, vector/duckdb.go:273 — the one-time structure
+    that makes per-query probing sublinear). Every item row is one
+    member, duplicate and NULL ids included.
 
     - init: the k non-NULL-id items ranked first by ``md5(id)`` — a
       deterministic pseudo-random sample, rerun-stable with no RNG
       state.
-    - assign: nearest centroid by cosine, the same step as
-      ``cosine_topk_ivf``: the cosine kernel scores the checkpointed
-      items against the current centroids in one Python stage,
-      emitting ~N candidate rows (never N x C) for Spark's round +
-      rank. The centroids stay driver data: each iteration's job
-      collects the next ones (k x dim values), nothing is checkpointed.
-    - update: element-wise mean via posexplode -> groupBy(cid, pos)
-      (map-side partial agg; the only collect_list builds ONE dim-sized
-      array per centroid, bounded by dim, never by corpus size), then
-      L2-normalized (spherical k-means: cosine assignment needs unit
-      centroids) and rounded to 6 decimals so reruns don't drift with
-      partition-order float summation.
+    - each iteration is one Spark job: one ``mapInArrow`` pass of the
+      cosine kernel over the checkpointed items assigns every row to
+      its nearest centroid by cosine (the same step as
+      ``cosine_topk_ivf``) and sums the rows it has decided into
+      per-partition partial means (``_member_sums``); rows whose
+      candidates may round level come back raw. The job collects at
+      most partitions x k x dim sums plus those rows, never N rows.
+    - update, on the driver with no job (``_lloyd_update``): Spark's
+      round(ccos, 6) then cid settles the near-tied rows, the partials
+      merge into the element-wise mean (``avg`` per position: NULL
+      elements skipped, NaN propagates), which is L2-normalized
+      (spherical k-means: cosine assignment needs unit centroids) and
+      rounded to 6 decimals so reruns don't drift with partition-order
+      float summation.
 
     Returns a local DataFrame (cid string, <vec_col> array<double>)
     ready to pass as ``centroids`` (with centroid_id_col="cid").
     Centroids that lose every member during an iteration drop out —
-    callers get <= k lists, the standard Lloyd's behavior.
+    callers get <= k lists, the standard Lloyd's behavior — as do those
+    whose members hold only NULL or empty vectors.
 
     ``max_rows`` bounds the materialized training set at corpus scale
     (VERDICT r4 missing #3): a deterministic md5-threshold sample —
@@ -455,7 +614,8 @@ def train_ivf_centroids(
     caller already knows it (table stats, a prior count) to skip the
     one extra count() pass over ``items``'s lineage — the count is
     aggregate-only (nothing materializes), which at corpus scale beats
-    persisting the full projection just to count it once. At 10^12
+    persisting the full projection just to count it once. The sample's
+    size is observed on the checkpoint job. At 10^12
     rows the full (id, vec) projection cannot localCheckpoint; sampled
     training is the standard k-means practice (centroids generalize;
     the reference likewise builds HNSW on the indexed subset,
@@ -463,13 +623,14 @@ def train_ivf_centroids(
     max_rows; a draw below ``k`` (only possible when max_rows sits
     within a few sigma of k — a misconfiguration) raises instead of
     silently training fewer than k centroids."""
+    spark = items.sparkSession
     # materialize the (id, vec) projection ONCE: every Lloyd iteration
     # ends in an eager action, and without this each one would re-run
     # the full upstream lineage of ``items`` (iters+1 redundant
     # executions of e.g. a feature pipeline).
     proj = items.select(F.col(id_col).alias("item_id"),
                         F.col(vec_col).cast("array<double>").alias("ivec"))
-    sampled = False
+    sample = None
     if max_rows is not None:
         n = total_rows if total_rows is not None else proj.count()
         if n > max_rows:
@@ -477,13 +638,14 @@ def train_ivf_centroids(
             # lexicographic compare against the 32-char md5 string is
             # exactly "md5's first 64 bits < cutoff"
             cutoff = format(max(1, (max_rows << 64) // n), "016x")
+            sample = Observation()
             proj = proj.where(
-                F.md5(F.col("item_id").cast("string")) < F.lit(cutoff))
-            sampled = True
+                F.md5(F.col("item_id").cast("string")) < F.lit(cutoff)) \
+                .observe(sample, F.count(F.lit(1)).alias("n"))
     it = proj.localCheckpoint(eager=True)
-    if sampled:
-        n_sampled = it.count()            # count once, on the
-        if n_sampled < k:                 # materialized checkpoint
+    if sample is not None:
+        n_sampled = observed(sample, n=0)["n"]
+        if n_sampled < k:
             raise ValueError(
                 f"train_ivf_centroids: md5-threshold sample has "
                 f"{n_sampled} rows < k={k}; max_rows={max_rows} is too "
@@ -491,49 +653,26 @@ def train_ivf_centroids(
     # the sample is a prefix of the md5 ordering, so the sampled init
     # picks the first-k of that same ordering; NULL ids (sorted first)
     # seed no centroid but are still assigned below
-    init = (
+    c = (
         it.where(F.col("item_id").isNotNull())
         .withColumn("_r", F.md5(F.col("item_id").cast("string")))
         .orderBy("_r")
         .limit(k)
         .select(F.col("_r").alias("cid"), F.col("ivec").alias("cvec"))
-    )
-    c = init.toArrow()
-    schema = StructType([it.schema["item_id"], it.schema["ivec"],
-                         StructField("cid", StringType()),
-                         StructField("ccos", DoubleType())])
+    ).toArrow()
     for _ in range(iters):
-        cents = _vectors(c.column("cid"), c.column("cvec"))
-
-        def assign(batches, cents=cents):
-            for blk in _blocks(batches, len(cents.length)):
-                i, j, cos, null = _centroid_candidates(blk, cents)
-                at = _arrow(i)
-                yield pa.RecordBatch.from_arrays(
-                    [blk.ids.take(at), blk.vecs.take(at),
-                     cents.ids.take(_arrow(j)), _arrow(cos, null)],
-                    names=["item_id", "ivec", "cid", "ccos"])
-
-        sums = (
-            _assigned(it.mapInArrow(assign, schema))
-            .select("cid", F.posexplode("ivec").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("val").alias("m"))
-        )
-        mean = (
-            sums.groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", F.transform("pm", lambda s: s["m"]).alias("mv"))
-        )
-        norm = F.sqrt(F.aggregate(F.transform("mv", lambda x: x * x),
-                                  F.lit(0.0), lambda a, x: a + x))
-        c = mean.select(
-            "cid",
-            F.when(norm > 0,
-                   F.transform("mv", lambda x: F.round(x / norm, 6)))
-             .otherwise(F.col("mv")).alias("cvec"),
-        ).toArrow()
-    return items.sparkSession.createDataFrame(
+        cids = c.column("cid").combine_chunks()
+        # rows of an equal cid (duplicate seed ids) form one centroid;
+        # its group number is its rank in Spark's string order
+        _, first, group = np.unique(
+            np.array(cids.to_pylist(), dtype=object),
+            return_index=True, return_inverse=True)
+        cents = _vectors(cids, c.column("cvec"))
+        parts = it.mapInArrow(
+            partial(_member_sums, cents=cents, group=group),
+            _MEMBER_SUMS).toArrow()
+        c = _lloyd_update(spark, cids.take(_arrow(first)), parts)
+    return spark.createDataFrame(
         c.rename_columns(["cid", vec_col]),
         StructType([StructField("cid", StringType()),
                     StructField(vec_col, ArrayType(DoubleType()))]))

@@ -37,3 +37,21 @@ def labeled_df(spark, corpus):
 
     _, labeled = to_spark(spark, corpus)
     return labeled.cache()
+
+
+@pytest.fixture(scope="session")
+def jobs_run(spark):
+    """``jobs_run(group, fn)`` -> (``fn()``, the number of Spark jobs it
+    ran), counted by job group."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

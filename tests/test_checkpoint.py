@@ -42,19 +42,7 @@ def test_stage_reuse_and_recompute(spark, tmp_path):
     assert len(calls) == 2
 
 
-def _jobs_run(spark, group, fn):
-    """``fn()`` and the number of Spark jobs it ran, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_store_job_budget(spark, tmp_path):
+def test_store_job_budget(spark, tmp_path, jobs_run):
     """A write runs its write query and nothing after it: ``rows_out`` is
     observed on the write, and the table comes back with the schema it
     was written with, so no count or schema-inference job follows. A
@@ -62,12 +50,12 @@ def test_store_job_budget(spark, tmp_path):
     wrote it before the store recorded one, still reads."""
     store = CheckpointStore(tmp_path / "budget")
     df = spark.range(300).select((F.col("id") % 13).alias("k"), F.col("id"))
-    _, query_jobs = _jobs_run(
-        spark, "budget-query",
+    _, query_jobs = jobs_run(
+        "budget-query",
         lambda: df.repartition("k").sortWithinPartitions("k")
         .write.parquet(str(tmp_path / "query")))
-    written, write_jobs = _jobs_run(
-        spark, "budget-write",
+    written, write_jobs = jobs_run(
+        "budget-write",
         lambda: store.write(df, "s1", "snapA", sort_by=["k"]))
     assert write_jobs == query_jobs > 0
     assert written.count() == 300
@@ -78,8 +66,8 @@ def test_store_job_budget(spark, tmp_path):
     def recompute():
         raise AssertionError("a complete checkpoint must be resumed")
 
-    resumed, read_jobs = _jobs_run(
-        spark, "budget-read",
+    resumed, read_jobs = jobs_run(
+        "budget-read",
         lambda: store.get_or_compute(spark, "s1", "snapA", recompute,
                                      sort_by=["k"]))
     assert read_jobs == 0

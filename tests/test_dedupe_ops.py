@@ -296,6 +296,27 @@ def test_ann_kernel_runs_one_python_stage_at_a_time(spark, monkeypatch):
         side_plans
 
 
+@pytest.mark.parametrize("iters", [1, 3])
+def test_train_ivf_centroids_runs_one_job_per_iteration(spark, jobs_run,
+                                                        iters):
+    """The trainer runs the items checkpoint, the init collect and one
+    job per Lloyd iteration, the kernel's pass (it ran 4: the pass and
+    Spark's assignment window and update aggregations). Settling the
+    near-tied rows (the short vector's NULL cosines tie every centroid)
+    and normalizing the means run on the driver with no job."""
+    from go_dedupe_spark.operators.ann import train_ivf_centroids
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)])
+         for i in range(40)]
+        + [(3, [1.0] * 8), (None, [0.5] * 8), (1000, [1.0, 2.0, 3.0])],
+        "vec_id long, embedding array<double>")
+    cents, jobs = jobs_run(f"train-ivf-{iters}",
+                           lambda: train_ivf_centroids(emb, k=4, iters=iters))
+    assert jobs == iters + 2
+    assert 1 <= cents.count() <= 4
+
+
 # ------------------------------------------------ input parallelism rule
 
 
@@ -417,21 +438,13 @@ def test_spread_adds_no_exchange_to_a_wide_input(
         assert plan.count("REPARTITION_BY_NUM") == 1, plan
 
 
-def test_spread_decides_without_a_job(spark, one_split):
+def test_spread_decides_without_a_job(spark, one_split, jobs_run):
     """The rule reads the plan; it never runs a job, also when the
     input's plan already holds an exchange."""
     sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
 
     def jobs_of(name, fn):
-        group = f"spread-decision-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        bus.waitUntilEmpty()
-        return list(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs_run(f"spread-decision-{name}", fn)[1]
 
     assert jobs_of("control", one_split.count)   # the probe sees jobs
     inputs = {
@@ -441,7 +454,7 @@ def test_spread_decides_without_a_job(spark, one_split):
         "aggregated": one_split.dropDuplicates(["doc_id"]),
     }
     for name, df in inputs.items():
-        assert jobs_of(name, lambda: spread(df, "doc_id")) == [], name
+        assert jobs_of(name, lambda: spread(df, "doc_id")) == 0, name
     # the aggregation's planned exchange already spreads it
     assert spread(inputs["aggregated"], "doc_id") is inputs["aggregated"]
 

@@ -31,6 +31,7 @@ scores or destroys a table:
 
 from __future__ import annotations
 
+import hashlib
 import shutil
 import struct
 import tempfile
@@ -385,13 +386,18 @@ def _hof_ivf(items, queries, centroids, k, nprobe):
 
 
 def _hof_train(items, k, iters):
-    it = items.select(F.col("vec_id").alias("item_id"),
-                      F.col("embedding").alias("ivec"))
-    c = (it.withColumn("cid", F.md5(F.col("item_id").cast("string")))
+    """Seeded by the first k non-NULL ids in md5 order; each iteration
+    assigns every row (``row``, not its id) to its nearest centroid."""
+    it = items.select(F.monotonically_increasing_id().alias("row"),
+                      F.col("vec_id").alias("item_id"),
+                      F.col("embedding").alias("ivec")) \
+        .localCheckpoint(eager=True)
+    c = (it.where(F.col("item_id").isNotNull())
+         .withColumn("cid", F.md5(F.col("item_id").cast("string")))
          .orderBy("cid").limit(k).select("cid", F.col("ivec").alias("cvec"))
          .localCheckpoint(eager=True))
     for _ in range(iters):
-        m = (_hof_nearest(it, "item_id", "ivec", c, 1)
+        m = (_hof_nearest(it, "row", "ivec", c, 1)
              .select("cid", F.posexplode("ivec").alias("pos", "val"))
              .groupBy("cid", "pos").agg(F.avg("val").alias("m"))
              .groupBy("cid")
@@ -460,14 +466,36 @@ def test_topk_operators_match_hof_on_edge_vectors(spark, edge_vectors, k):
 
 def test_train_ivf_centroids_matches_hof_on_edge_vectors(spark, edge_vectors):
     """train_ivf_centroids returns the centroids of the native per-pair
-    assignment it replaced: on the edge-case table (its NaN row turns
-    every centroid it joins NaN), without the NULL/NaN/short rows, and
-    on no items."""
+    assignment and ``avg`` update it replaced: on the edge-case table
+    (its NaN row turns every centroid it joins NaN), without the
+    NULL/NaN/short rows, with rows that share an id or have a NULL id
+    (each row is a member; none of these ids seeds a centroid), and on
+    no items."""
     items = edge_vectors
-    for it in (items, items.where("vec_id NOT IN (6, 7, 8, 9)"),
-               items.limit(0)):
+    shared = items.where("vec_id BETWEEN 10 AND 25").withColumn(
+        "vec_id", F.when(F.col("vec_id") < 20, F.col("vec_id") % 3))
+    clean = items.where("vec_id NOT IN (6, 7, 8, 9)")
+    for it in (items, clean, clean.unionByName(shared), items.limit(0)):
         assert _rows(train_ivf_centroids(it, k=4, iters=2)) == \
             _rows(_hof_train(it, 4, 2))
+
+
+def test_train_ivf_centroids_counts_every_row(spark):
+    """Every item row is one k-means member: the three rows of id 3 and
+    the two NULL-id rows all join centroid 2's mean (ranking members by
+    id dropped three of the rows: centroid 2 came out as [0.033879,
+    0.999426])."""
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.2, 1.0]),
+            (3, [0.3, 0.9]), (3, [0.1, 0.95]), (None, [0.0, 1.0]),
+            (None, [0.05, 1.0])]
+    items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r["cid"]: r["embedding"]
+           for r in train_ivf_centroids(items, k=2, iters=1).collect()}
+    c1, c2 = (hashlib.md5(i).hexdigest() for i in (b"1", b"2"))
+    mean = np.mean([v for i, v in rows if i != 1], axis=0)
+    assert got.keys() == {c1, c2}
+    assert got[c1] == [1.0, 0.0]
+    assert got[c2] == pytest.approx(mean / np.linalg.norm(mean), abs=1e-6)
 
 
 # ------------------------------------------- swap_dir crash injection
