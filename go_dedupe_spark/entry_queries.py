@@ -41,6 +41,7 @@ from go_dedupe_spark.operators.components import (
 )
 from go_dedupe_spark.operators.normalize import normalize, quarantine
 from go_dedupe_spark.operators.pairs import candidate_pairs
+from go_dedupe_spark.operators.resolve import resolve_clusters
 from go_dedupe_spark.operators.scoring import (
     JAC_FLOOR,
     SHINGLE_N,
@@ -487,22 +488,20 @@ def er_components_dist(spark, sf_dir):
 
 
 @query("er_resolution", f"""
-WITH RECURSIVE {_SQL_ER_COMPONENTS}
-SELECT id, cluster_id,
-       max(id) OVER (PARTITION BY cluster_id) AS survivor_id,
-       id = max(id) OVER (PARTITION BY cluster_id) AS is_survivor
-FROM comp
+WITH RECURSIVE {_SQL_ER_COMPONENTS},
+mem AS (SELECT id, cluster_id,
+          max_by(id, commit || id) OVER (PARTITION BY cluster_id)
+            AS survivor_id
+        FROM comp JOIN rec USING (id))
+SELECT id, cluster_id, survivor_id, id = survivor_id AS is_survivor FROM mem
 """)
 def er_resolution(spark, sf_dir):
-    """Stage-6 survivor selection per cluster (ancestor: precedence
-    rules process.go:143-333; tie rule (d): higher id wins
-    process.go:295-312)."""
-    comp = er_components(spark, sf_dir)
-    w = Window.partitionBy("cluster_id")
-    return comp.select(
-        "id", "cluster_id",
-        F.max("id").over(w).alias("survivor_id"),
-    ).withColumn("is_survivor", F.col("id") == F.col("survivor_id"))
+    """Stage-6 survivor selection per cluster with the library resolver
+    (ancestor: precedence rules process.go:143-333): the newest commit
+    wins, tie -> higher id (rule (d), process.go:295-312)."""
+    out = resolve_clusters(er_components(spark, sf_dir),
+                           _records(spark, sf_dir))
+    return out.select("id", "cluster_id", "survivor_id", "is_survivor")
 
 
 # The sf documents table is all-valid, so the quarantine contract row
@@ -865,12 +864,12 @@ IVF_NPROBE = 2
 
 
 @query("ann_topk_ivf", f"""
-WITH e AS ({_SQL_EMB}),
+WITH e AS (SELECT *, row_number() OVER () AS rid FROM ({_SQL_EMB})),
 c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {IVF_EVERY} = 0),
 ia AS (SELECT e.vec_id AS item_id, e.v AS iv, c.cid,
          round({_sql_cosine('e.v', 'c.cv')}, 6) AS ccos
        FROM e CROSS JOIN c
-       QUALIFY row_number() OVER (PARTITION BY item_id
+       QUALIFY row_number() OVER (PARTITION BY e.rid
                ORDER BY ccos DESC, cid) = 1),
 qp AS (SELECT e.vec_id AS query_id, e.v AS qv, c.cid,
          round({_sql_cosine('e.v', 'c.cv')}, 6) AS qcos
@@ -1755,11 +1754,8 @@ def resolution_supersession(spark, sf_dir):
     columns are unhashable in the compare harness). The adapter's
     commit is fixed-width, so struct ordering == concat ordering in the
     oracle."""
-    from go_dedupe_spark.operators.resolve import resolve_clusters
-
-    records = _records(spark, sf_dir)
-    comp = er_components(spark, sf_dir)
-    out = resolve_clusters(comp, records)
+    out = resolve_clusters(er_components(spark, sf_dir),
+                           _records(spark, sf_dir))
     return out.select(
         "id", "cluster_id", "survivor_id", "is_survivor",
         F.coalesce(F.get("superseded_by", 0), F.lit(""))

@@ -280,8 +280,9 @@ def _query_scan(items: DataFrame, queries: DataFrame, id_col: str,
 
 
 def _assigned(scored: DataFrame) -> DataFrame:
-    """Keep each item's nearest list: round(ccos, 6) desc, then cid."""
-    w = Window.partitionBy("item_id").orderBy(F.desc("ccos"), F.col("cid"))
+    """Keep each item row's (``_r``) nearest list: round(ccos, 6) desc,
+    then cid. Rows that share an item id are assigned one by one."""
+    w = Window.partitionBy("_r").orderBy(F.desc("ccos"), F.col("cid"))
     return (
         scored.withColumn("ccos", F.round("ccos", 6))
         .withColumn("_r", F.row_number().over(w))
@@ -352,12 +353,13 @@ def cosine_topk_ivf(
     the cosine kernel; a query whose nprobe-th and (nprobe+1)-th lists
     may round level is ranked in one local Spark job (no Python stage).
     So the probes are driver data before any item is read. The
-    plan is then one item scan through the kernel: per item, one row
-    per candidate list (its nearest, plus any that may round level with
-    it), each carrying the item's cosines to the queries probing that
-    list (the pairs the native join used to produce). Spark ranks the
-    candidates (row_number per item keeps ~N rows through the
-    exchange), explodes the winner's hits and ranks them per query.
+    plan is then one item scan through the kernel: per item row, one
+    row per candidate list (its nearest, plus any that may round level
+    with it), each carrying the row's cosines to the queries probing
+    that list (the pairs the native join used to produce). Spark ranks
+    the candidates (row_number per item row, keyed by partition and row
+    offset, so rows sharing an id keep their own list; ~N rows through
+    the exchange), explodes the winner's hits and ranks them per query.
     Cosines are rounded to 6 decimals BEFORE ranking with id
     tie-breaks, so assignment and results are bit-reproducible in the
     DuckDB oracle."""
@@ -403,11 +405,14 @@ def cosine_topk_ivf(
                       F.col(vec_col).alias("ivec"))
     hit = StructType([StructField("query_id", qid_type),
                       StructField("cosine", DoubleType())])
-    schema = StructType([it.schema["item_id"], StructField("cid", cid_type),
+    schema = StructType([StructField("_r", LongType()), it.schema["item_id"],
+                         StructField("cid", cid_type),
                          StructField("ccos", DoubleType()),
                          StructField("hits", ArrayType(hit))])
 
     def score(batches):
+        # each row's key _r: partition << 32 + its offset in the partition
+        key = TaskContext.get().partitionId() << 32
         # a list's hit matrix is at most (block rows x queries)
         for blk in _blocks(batches, max(len(cents.length), len(qv.length))):
             ii, cc, ccos, cnull = _centroid_candidates(blk, cents)
@@ -434,9 +439,10 @@ def cosine_topk_ivf(
                      _arrow(hcos[order], hnull[order])],
                     names=["query_id", "cosine"]))
             yield pa.RecordBatch.from_arrays(
-                [blk.ids.take(_arrow(ii)), cents.ids.take(_arrow(cc)),
-                 _arrow(ccos, cnull), hits],
-                names=["item_id", "cid", "ccos", "hits"])
+                [_arrow(key + ii), blk.ids.take(_arrow(ii)),
+                 cents.ids.take(_arrow(cc)), _arrow(ccos, cnull), hits],
+                names=schema.names)
+            key += len(blk.length)
 
     return _top_k(
         _assigned(it.mapInArrow(score, schema))

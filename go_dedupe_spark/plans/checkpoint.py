@@ -20,8 +20,9 @@ Storage is behind ``StorageBackend`` — a real seam, not design intent:
   catalog conf is absent (this container has no Iceberg jar, so its
   contract test skips here and runs on a provisioned cluster).
 
-Lineage/metrics schema (FIXTURES.md §4): stage, partition_id, rows_in,
-rows_out, wall_ms, input_snapshot.
+Each write records (FIXTURES.md §4) stage, input_snapshot, rows_out and
+wall_ms in the manifest and the metrics log; the manifest adds the
+table's schema.
 """
 
 from __future__ import annotations
@@ -288,18 +289,18 @@ class CheckpointStore:
         input_snapshot: str,
         sort_by: list[str] | None = None,
     ) -> DataFrame:
-        """Materialize a stage in one query. Deterministic on-disk
-        layout: when ``sort_by`` is given the data is repartitioned by
-        the key then sorted within partitions, so reruns are byte-stable
-        (resume idempotency invariant, FIXTURES.md §5.5). ``rows_out`` is
-        observed in the write's result stage (above the shuffle, so a
-        resubmitted map stage cannot count rows twice), not counted by a
-        read-back job; a write that reports no observed metrics falls
-        back to that count."""
+        """Materialize a stage in one Spark job. The table keeps the
+        partitioning the stage computed, one part file per non-empty
+        partition; with ``sort_by`` each partition is sorted by the key,
+        so a rerun writes the same rows, in the same order, to each part
+        file (resume idempotency invariant, FIXTURES.md §5.5). The bytes
+        may differ: parquet-mr lists a column chunk's encodings in a
+        varying order. ``rows_out`` is observed in the write's result
+        stage (above any shuffle of the stage, so a resubmitted map stage
+        cannot count rows twice), not counted by a read-back job; a write
+        that reports no observed metrics falls back to that count."""
         t0 = time.monotonic()
-        out = df
-        if sort_by:
-            out = df.repartition(*sort_by).sortWithinPartitions(*sort_by)
+        out = df.sortWithinPartitions(*sort_by) if sort_by else df
         rows = Observation()
         out = out.observe(rows, F.count(F.lit(1)).alias("rows_out"))
         key = self._key(stage, input_snapshot)
@@ -351,19 +352,3 @@ class CheckpointStore:
 
     def metrics(self) -> list[dict]:
         return self.backend.metrics()
-
-    def partition_lineage(self, df: DataFrame, stage: str) -> DataFrame:
-        """Per-partition row counts for a stage (lineage table,
-        FIXTURES.md §4) — computed distributed, no driver collect of data."""
-        from pyspark.sql import functions as F
-
-        return (
-            df.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .count()
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                F.col("count").alias("rows_out"),
-            )
-        )

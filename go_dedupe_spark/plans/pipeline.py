@@ -16,36 +16,52 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from go_dedupe_spark.functions import hashing, similarity
 from go_dedupe_spark.functions.similarity import word_tokens
+from go_dedupe_spark.operators import blocking, scoring
 from go_dedupe_spark.operators.blocking import Band, make_blocks
 from go_dedupe_spark.operators.components import (
     connected_components,
     with_singletons,
 )
 from go_dedupe_spark.operators.normalize import normalize
-from go_dedupe_spark.operators.pairs import candidate_pairs
+from go_dedupe_spark.operators.pairs import (
+    DEFAULT_MAX_BLOCK,
+    DEFAULT_SALT_CAP,
+    candidate_pairs,
+)
 from go_dedupe_spark.operators.resolve import resolve_clusters
 from go_dedupe_spark.operators.scoring import build_features, score_pairs
 from go_dedupe_spark.plans.checkpoint import CheckpointStore
+
+# the module constants the stages compute with, beside the config fields
+_STAGE_CONSTANTS = {
+    scoring: ("W_JW", "W_JACCARD", "W_COSINE", "JAC_FLOOR", "SHINGLE_N"),
+    similarity: ("HASH_DIM", "NGRAM_N"), blocking: ("SHA_PREFIX_LEN",)}
 
 
 @dataclass
 class PipelineConfig:
     threshold: float = 0.52
-    num_hashes: int = 12
-    band_rows: int = 3
+    num_hashes: int = hashing.DEFAULT_NUM_HASHES
+    band_rows: int = hashing.DEFAULT_BAND_ROWS
     content_num_hashes: int = 9
     content_band_rows: int = 3
-    max_block: int = 64
-    salt_cap: int = 32
+    max_block: int = DEFAULT_MAX_BLOCK
+    salt_cap: int = DEFAULT_SALT_CAP
 
     def fingerprint(self) -> str:
-        """Deterministic hash of every stage-relevant field. Folded into
-        the checkpoint snapshot key: a rerun with a changed threshold /
-        band geometry / max_block must NOT silently reuse stage outputs
-        computed under the old config."""
+        """Deterministic hash of every stage-relevant field and of the
+        stages' module constants (scoring weights and floor, shingle,
+        n-gram and hash sizes, the sha block prefix). Folded into the
+        checkpoint snapshot key: a rerun with a changed threshold / band
+        geometry / max_block, or with code that changed a constant, must
+        NOT silently reuse stage outputs computed under the old values."""
+        state = asdict(self) | {
+            f"{mod.__name__}.{name}": getattr(mod, name)
+            for mod, names in _STAGE_CONSTANTS.items() for name in names}
         return hashlib.sha256(
-            json.dumps(asdict(self), sort_keys=True).encode()
+            json.dumps(state, sort_keys=True).encode()
         ).hexdigest()[:16]
 
     def bands(self) -> list[Band]:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from go_dedupe_spark.plans.checkpoint import CheckpointStore, ParquetBackend
@@ -43,7 +44,8 @@ def test_stage_reuse_and_recompute(spark, tmp_path):
 
 
 def test_store_job_budget(spark, tmp_path, jobs_run):
-    """A write runs its write query and nothing after it: ``rows_out`` is
+    """A write is one Spark job, the sorted write query itself: it keeps
+    the table's partitioning (no layout shuffle), ``rows_out`` is
     observed on the write, and the table comes back with the schema it
     was written with, so no count or schema-inference job follows. A
     resume read runs no job. A manifest without a schema, as stores
@@ -52,12 +54,12 @@ def test_store_job_budget(spark, tmp_path, jobs_run):
     df = spark.range(300).select((F.col("id") % 13).alias("k"), F.col("id"))
     _, query_jobs = jobs_run(
         "budget-query",
-        lambda: df.repartition("k").sortWithinPartitions("k")
+        lambda: df.sortWithinPartitions("k")
         .write.parquet(str(tmp_path / "query")))
     written, write_jobs = jobs_run(
         "budget-write",
         lambda: store.write(df, "s1", "snapA", sort_by=["k"]))
-    assert write_jobs == query_jobs > 0
+    assert write_jobs == query_jobs == 1
     assert written.count() == 300
     key = store._key("s1", "snapA")
     assert store.backend.get_manifest(key)["rows_out"] == 300
@@ -143,13 +145,48 @@ def test_config_change_recomputes_every_stage(spark, files_df, tmp_path):
     assert 0 < n2 < n1
 
 
-def test_partition_lineage(spark, tmp_path):
-    store = CheckpointStore(tmp_path / "lin")
-    df = spark.range(1000).repartition(4)
-    lineage = store.partition_lineage(df, "stage_x").collect()
-    assert sum(r["rows_out"] for r in lineage) == 1000
-    assert all(r["stage"] == "stage_x" for r in lineage)
-    assert len(lineage) == 4
+def test_stage_constant_change_recomputes(spark, files_df, tmp_path,
+                                          monkeypatch):
+    """The config fingerprint covers the stages' module constants too: a
+    changed Jaccard floor gives another checkpoint key, so a rerun on the
+    same store and snapshot recomputes ``scores`` instead of resuming
+    scores floored under the old value."""
+    from go_dedupe_spark.operators import scoring
+
+    store = CheckpointStore(tmp_path / "const")
+    before = PipelineConfig().fingerprint()
+    run_pipeline(spark, files_df, store=store, input_snapshot="v1")
+    monkeypatch.setattr(scoring, "JAC_FLOOR", 0.2)
+    assert PipelineConfig().fingerprint() != before
+    run_pipeline(spark, files_df, store=store, input_snapshot="v1")
+    assert [m["stage"] for m in store.metrics()].count("scores") == 2
+
+
+def _part_rows(root, key):
+    """Each part file's rows, in file order, by part number."""
+    return {p.name.split("-")[1]: pq.read_table(p).to_pylist()
+            for p in sorted((root / key).glob("part-*.parquet"))}
+
+
+def test_rerun_writes_the_same_rows_to_each_part_file(spark, tmp_path):
+    """A write keeps the stage's partitioning and sorts each partition
+    by the key, so two writes of the same table put the same rows in
+    the same order into each part file. Rows are compared, not bytes:
+    parquet-mr may list a column chunk's encodings in another order."""
+    df = (spark.range(2000)
+          .select((F.col("id") * 7919 % 101).alias("k"), F.col("id"))
+          .repartition(4, "k"))
+    parts = []
+    for run in ("a", "b"):
+        store = CheckpointStore(tmp_path / run)
+        store.write(df, "s1", "snapA", sort_by=["k", "id"])
+        parts.append(_part_rows(tmp_path / run, store._key("s1", "snapA")))
+    assert len(parts[0]) == 4
+    assert parts[0] == parts[1]
+    for rows in parts[0].values():
+        keys = [(r["k"], r["id"]) for r in rows]
+        assert keys == sorted(keys)
+    assert sum(len(rows) for rows in parts[0].values()) == 2000
 
 
 def test_memory_backend_seam(spark, files_df, tmp_path):
